@@ -163,12 +163,14 @@ def similarity_search(
 ) -> DataFrame:
     """Embed the query at TRIPLE_DIM (graph_service.py:1671-1681) and score
     every candidate edge exactly; `orderBy().limit()` compiles to
-    TakeOrderedAndProject. Query vector rides as a literal array (it is one
-    row — the degenerate broadcast)."""
-    qv = [float(x) for x in embed_text(query_text, TRIPLE_DIM)]
-    qcol = F.array(*[F.lit(x) for x in qv])
+    TakeOrderedAndProject. Query vector rides as ONE typed array literal
+    (it is one row — the degenerate broadcast): F.lit of a 1-D float64
+    numpy array is one py4j call and one Literal in the plan, not
+    TRIPLE_DIM element literals under a CreateArray that Catalyst walks on
+    every execution."""
+    qv = embed_text(query_text, TRIPLE_DIM).astype("float64")
     scored = edges_with_embedding.withColumn(
-        "score", cosine_col(F.col("embedding"), qcol)
+        "score", cosine_col(F.col("embedding"), F.lit(qv))
     )
     return scored.orderBy(F.desc("score"), F.asc("edge_id")).limit(k)
 
@@ -331,12 +333,11 @@ def similarity_search_indexed(
     evaluated over the full table). Same output contract as
     similarity_search. ``allowed`` restricts candidates BEFORE the cap
     (pass the structured prefilter's edges — see candidate_ids)."""
-    qv = [float(x) for x in embed_text(query_text, TRIPLE_DIM)]
+    qv = embed_text(query_text, TRIPLE_DIM).astype("float64")
     cand = index.candidate_ids(qv, max_candidates, allowed=allowed)
-    qcol = F.array(*[F.lit(x) for x in qv])
     scored = (
         edges_with_embedding.filter(F.col("edge_id").isin(cand))
-        .withColumn("score", cosine_col(F.col("embedding"), qcol))
+        .withColumn("score", cosine_col(F.col("embedding"), F.lit(qv)))
     )
     return scored.orderBy(F.desc("score"), F.asc("edge_id")).limit(k)
 
@@ -383,21 +384,29 @@ def khop_distances(
     the visited/distance table is checkpointed per round to truncate
     lineage. Rounds = min(max_hops, eccentricity), each a constant number
     of shuffles; the frontier is emptiness-probed so a converged expansion
-    stops early."""
-    from pyspark.sql import types as T
+    stops early.
 
-    spark = edges.sparkSession
+    The seed set is query-scale, so it rides as a Catalyst literal frame
+    (functions.literals.literal_df: one JVM task, no Python worker) with
+    ``member`` cast to the ``src`` column's type — integer ids stay
+    integer. An empty seed list returns the empty (member, dist) frame of
+    that type without running a job."""
+    from ..functions.literals import literal_df
+
+    member = F.col("member").cast(edges.schema[src].dataType).alias("member")
+    zero = F.lit(0).cast("long").alias("dist")
+    if not seeds:
+        return edges.select(F.col(src).alias("member")).limit(0).select(
+            member, zero)
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
         .localCheckpoint()
     )
-    member_type = edges.schema[src].dataType
-    seed_rows = [(s,) for s in sorted(set(seeds))]
-    dist = spark.createDataFrame(
-        seed_rows, T.StructType([T.StructField("member", member_type)])
-    ).withColumn("dist", F.lit(0).cast("long"))
+    dist = literal_df(edges.sparkSession,
+                      [(s,) for s in sorted(set(seeds))],
+                      ["member"]).select(member, zero)
     frontier = dist.select("member")
     for i in range(1, max_hops + 1):
         nxt = (
@@ -766,7 +775,12 @@ def query_graph(
     ``log`` (io.catalog.QueryLog): when given, the query document is recorded
     BEFORE execution and the status/response/returned triple+node ids after,
     mirroring Entry C's persistence (graph_service.py:1938-1969, 2046-2054).
-    Recording ids forces the result (human-scale by contract).
+    The hydrated triples then have two consumers, the log and the caller,
+    so ``out["triples"]`` comes back sealed (one localCheckpoint: the
+    answer plan runs once), and both id lists come from one collect of its
+    edge and endpoint node ids (human-scale by contract). A failure while
+    executing is recorded as failed. Without a log, ``out["triples"]``
+    stays lazy.
 
     ``ann_index`` (EdgeAnnIndex): the planner knob for the text path. When
     given AND the indexed table exceeds ``ann_exact_max_rows``, the vector
@@ -783,16 +797,20 @@ def query_graph(
     try:
         out = _query_graph(nodes, edges, params, edges_embedded,
                            ann_index, ann_exact_max_rows)
+        if log is not None:
+            out["triples"] = out["triples"].localCheckpoint()
+            rows = out["triples"].select(
+                "edge_id", "head_node.node_id", "tail_node.node_id").collect()
     except Exception as exc:
         if log is not None:
             log.fail(query_id, f"{type(exc).__name__}: {exc}")
         raise
     if log is not None:
-        triple_ids = sorted(
-            r["edge_id"] for r in out["triples"].select("edge_id").collect())
-        node_ids = sorted(
-            r["node_id"] for r in out["nodes"].select("node_id").collect())
-        log.finish(query_id, out["answer"], triple_ids, node_ids)
+        # a dangling endpoint hydrates to a NULL struct, and unique_nodes_of
+        # drops it too
+        node_ids = {i for r in rows for i in r[1:] if i is not None}
+        log.finish(query_id, out["answer"],
+                   sorted(r["edge_id"] for r in rows), sorted(node_ids))
     out["query_id"] = query_id
     return out
 
@@ -837,6 +855,8 @@ def _query_graph(nodes, edges, params, edges_embedded,
     relevant = relevance_filter(top, params.content)
     answer = None
     if params.return_answer:
+        # two consumers: the answer's facts and the hydrated triples
+        relevant = relevant.localCheckpoint()
         rows = [r["verbalized"] for r in
                 relevant.orderBy(F.desc("score"), F.asc("edge_id"))
                 .select("verbalized").collect()]

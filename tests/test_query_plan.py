@@ -73,6 +73,42 @@ def test_similarity_search_finds_own_verbalization(graph):
     assert top[0]["score"] > 0.999
 
 
+def test_similarity_search_query_vector_is_one_literal(graph):
+    """The query vector enters the plan as ONE array literal (not a
+    TRIPLE_DIM-child array(...) of per-element literals), and the scores
+    equal a float64 numpy cosine."""
+    import numpy as np
+
+    from knowledge_graph_studio_spark.functions.embedding_core import (
+        TRIPLE_DIM, embed_text,
+    )
+    from knowledge_graph_studio_spark.functions.embeddings import embed_edges
+
+    emb = embed_edges(graph["edges"]).persist()
+    q = "who runs Globex?"
+    n = emb.count()
+    top = similarity_search(emb, q, k=n)
+
+    def census(df):
+        plan = df._jdf.queryExecution().analyzed().toJSON()
+        return (plan.count('expressions.CreateArray"'),
+                plan.count('expressions.Literal"'))
+
+    (arrays, lits), (arrays0, lits0) = census(top), census(emb)
+    assert arrays == arrays0  # the scoring adds no array(...)
+    assert lits - lits0 < 16  # the vector, 0.0 fold seeds and the limit
+
+    qv = embed_text(q, TRIPLE_DIM).astype(np.float64)
+    rows = top.select("edge_id", "embedding", "score").collect()
+    assert len(rows) == n
+    for r in rows:
+        v = np.asarray(r["embedding"], dtype=np.float64)
+        want = float(v @ qv / (np.linalg.norm(v) * np.linalg.norm(qv)))
+        assert abs(r["score"] - want) <= 1e-12, (r["edge_id"], r["score"],
+                                                 want)
+    emb.unpersist()
+
+
 def test_relevance_filter_token_overlap(spark):
     df = spark.createDataFrame(
         [("e1", "Ada Lovelace which is a person runs Acme Corp, a company"),
@@ -100,6 +136,57 @@ def test_query_graph_structured_and_text_paths(graph):
              for r in res2["triples"].collect()}
     assert any(t == edge["tail"] for _h, t in names)
     assert res2["answer"].startswith("Q: who runs")
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_query_log_ids_match_the_answer_and_cost_two_jobs(spark, graph,
+                                                          tmp_path):
+    """A logged query records exactly the triples and nodes it returns, for
+    the structured and the text path; logging a structured query costs at
+    most two jobs over the unlogged one (the seal and the id collect)."""
+    from knowledge_graph_studio_spark.io.catalog import QueryLog
+
+    log = QueryLog(str(tmp_path))
+    edge = graph["edges"].filter("rel_type = 'runs'").limit(1).collect()[0]
+    structured = QueryParameters(entities=["person"], relations=["runs"])
+    text = QueryParameters(content=f"who runs {edge['tail']}?",
+                           relations=["runs"], limit=16)
+    for params in (structured, text):
+        res = query_graph(graph["nodes"], graph["edges"], params, log=log)
+        rec = [r for r in log.df(spark).collect()
+               if r["query_id"] == res["query_id"]][0]
+        assert rec["status"] == "success"
+        triple_ids = sorted(
+            r["edge_id"] for r in res["triples"].select("edge_id").collect())
+        node_ids = sorted(
+            r["node_id"] for r in res["nodes"].select("node_id").collect())
+        assert triple_ids, params
+        assert rec["triple_ids"] == triple_ids
+        assert rec["node_ids"] == node_ids
+
+    def run(with_log):
+        res = query_graph(graph["nodes"], graph["edges"], structured,
+                          log=log if with_log else None)
+        res["triples"].collect()
+
+    run(False)  # same warm state for both counts
+    run(True)
+    unlogged = _jobs_of(spark, lambda: run(False))
+    logged = _jobs_of(spark, lambda: run(True))
+    assert logged <= unlogged + 2, (logged, unlogged)
 
 
 def test_query_graph_ann_planner_and_recall(spark, graph):
@@ -475,6 +562,33 @@ def test_khop_early_stop_and_isolated_seed(spark):
     got2 = {r["member"]: r["dist"]
             for r in khop_distances(df, ["zz"], max_hops=2).collect()}
     assert got2 == {"zz": 0}
+
+
+def test_khop_empty_seeds_keep_member_type(spark):
+    from knowledge_graph_studio_spark.plans.query import khop_distances
+
+    for row, ddl in ((("a", "b"), "src string, dst string"),
+                     ((1, 2), "src long, dst long")):
+        df = spark.createDataFrame([row], ddl)
+        got = khop_distances(df, [], max_hops=2)
+        assert got.columns == ["member", "dist"]
+        assert got.schema["member"].dataType == df.schema["src"].dataType
+        assert got.schema["dist"].dataType.simpleString() == "bigint"
+        assert got.collect() == []
+        assert _jobs_of(spark, got.collect) == 0
+
+
+def test_khop_long_ids_stay_integer(spark):
+    from knowledge_graph_studio_spark.plans.query import khop_distances
+
+    big = 2 ** 40  # beyond int32: the seeds' literals widen to long
+    df = spark.createDataFrame([(1, 2), (2, 3), (3, 4), (big, 1)],
+                               "src long, dst long")
+    got = khop_distances(df, [2, big], max_hops=1)
+    assert got.schema["member"].dataType.simpleString() == "bigint"
+    rows = {r["member"]: r["dist"] for r in got.collect()}
+    assert rows == {2: 0, big: 0, 1: 1, 3: 1}
+    assert all(type(m) is int for m in rows)
 
 
 def test_rrf_fuse_matches_integer_reference(spark):
