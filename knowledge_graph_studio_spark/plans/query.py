@@ -163,11 +163,10 @@ def similarity_search(
 ) -> DataFrame:
     """Embed the query at TRIPLE_DIM (graph_service.py:1671-1681) and score
     every candidate edge exactly; `orderBy().limit()` compiles to
-    TakeOrderedAndProject. Query vector rides as ONE typed array literal
-    (it is one row — the degenerate broadcast): F.lit of a 1-D float64
-    numpy array is one py4j call and one Literal in the plan, not
-    TRIPLE_DIM element literals under a CreateArray that Catalyst walks on
-    every execution."""
+    TakeOrderedAndProject. Query vector rides as one typed array literal
+    (it is one row — the degenerate broadcast), so the analyzed plan holds
+    a single Literal rather than a TRIPLE_DIM-child CreateArray for
+    Catalyst to walk on every execution."""
     qv = embed_text(query_text, TRIPLE_DIM).astype("float64")
     scored = edges_with_embedding.withColumn(
         "score", cosine_col(F.col("embedding"), F.lit(qv))
@@ -776,11 +775,12 @@ def query_graph(
     BEFORE execution and the status/response/returned triple+node ids after,
     mirroring Entry C's persistence (graph_service.py:1938-1969, 2046-2054).
     The hydrated triples then have two consumers, the log and the caller,
-    so ``out["triples"]`` comes back sealed (one localCheckpoint: the
-    answer plan runs once), and both id lists come from one collect of its
-    edge and endpoint node ids (human-scale by contract). A failure while
-    executing is recorded as failed. Without a log, ``out["triples"]``
-    stays lazy.
+    so ``out["triples"]`` comes back sealed by a lazy localCheckpoint, and
+    both id lists come from one collect of its edge and endpoint node ids
+    (human-scale by contract). That collect computes the sealed blocks and
+    the caller's read reuses them, so the answer plan runs once. A failure
+    while executing is recorded as failed. Without a log,
+    ``out["triples"]`` stays unsealed.
 
     ``ann_index`` (EdgeAnnIndex): the planner knob for the text path. When
     given AND the indexed table exceeds ``ann_exact_max_rows``, the vector
@@ -798,7 +798,7 @@ def query_graph(
         out = _query_graph(nodes, edges, params, edges_embedded,
                            ann_index, ann_exact_max_rows)
         if log is not None:
-            out["triples"] = out["triples"].localCheckpoint()
+            out["triples"] = out["triples"].localCheckpoint(eager=False)
             rows = out["triples"].select(
                 "edge_id", "head_node.node_id", "tail_node.node_id").collect()
     except Exception as exc:
@@ -855,8 +855,6 @@ def _query_graph(nodes, edges, params, edges_embedded,
     relevant = relevance_filter(top, params.content)
     answer = None
     if params.return_answer:
-        # two consumers: the answer's facts and the hydrated triples
-        relevant = relevant.localCheckpoint()
         rows = [r["verbalized"] for r in
                 relevant.orderBy(F.desc("score"), F.asc("edge_id"))
                 .select("verbalized").collect()]

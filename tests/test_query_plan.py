@@ -152,11 +152,12 @@ def _jobs_of(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def test_query_log_ids_match_the_answer_and_cost_two_jobs(spark, graph,
-                                                          tmp_path):
-    """A logged query records exactly the triples and nodes it returns, for
-    the structured and the text path; logging a structured query costs at
-    most two jobs over the unlogged one (the seal and the id collect)."""
+def test_query_log_ids_match_the_answer_and_cost_one_job(spark, graph,
+                                                         tmp_path):
+    """A logged query records exactly the triples, nodes and answer it
+    returns, for the structured and the text path; logging a structured
+    query costs at most one job over the unlogged one (the id collect,
+    which also fills the seal the caller then reads)."""
     from knowledge_graph_studio_spark.io.catalog import QueryLog
 
     log = QueryLog(str(tmp_path))
@@ -164,11 +165,14 @@ def test_query_log_ids_match_the_answer_and_cost_two_jobs(spark, graph,
     structured = QueryParameters(entities=["person"], relations=["runs"])
     text = QueryParameters(content=f"who runs {edge['tail']}?",
                            relations=["runs"], limit=16)
-    for params in (structured, text):
+    answered = QueryParameters(content=text.content, relations=["runs"],
+                               limit=16, return_answer=True)
+    for params in (structured, text, answered):
         res = query_graph(graph["nodes"], graph["edges"], params, log=log)
         rec = [r for r in log.df(spark).collect()
                if r["query_id"] == res["query_id"]][0]
         assert rec["status"] == "success"
+        assert rec["response"] == res["answer"]
         triple_ids = sorted(
             r["edge_id"] for r in res["triples"].select("edge_id").collect())
         node_ids = sorted(
@@ -186,7 +190,7 @@ def test_query_log_ids_match_the_answer_and_cost_two_jobs(spark, graph,
     run(True)
     unlogged = _jobs_of(spark, lambda: run(False))
     logged = _jobs_of(spark, lambda: run(True))
-    assert logged <= unlogged + 2, (logged, unlogged)
+    assert logged <= unlogged + 1, (logged, unlogged)
 
 
 def test_query_graph_ann_planner_and_recall(spark, graph):
