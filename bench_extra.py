@@ -19,17 +19,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "pricing_summary", "top_revenue", "windowed_events", "group_agg",
-    "semi_join_filter", "topk_cosine", "embedding_neardup",
-    "embedding_neardup_lsh", "dedup_exact", "dedup_ngram_jaccard",
-    "neardup_dedup", "minhash_lsh", "simhash", "kg_cooccurrence",
-    "quality_score", "gopher_repetition", "lm_unigram_score",
-    "decontaminate", "sample_mix", "redact_pii", "fingerprint",
-    "dsir_scores", "bloom_seen", "pack_sequences", "kg_pagerank",
-    "kg_triangles", "bm25_topk", "hybrid_rrf_topk", "sessionize",
-    "topk_keywords",
-]
+from bench import HEADLINE  # noqa: E402  (bench.main() only runs as a script)
 
 
 def main() -> None:

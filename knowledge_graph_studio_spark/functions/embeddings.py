@@ -23,7 +23,6 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .embedding_core import CHUNK_DIM, TRIPLE_DIM
@@ -50,16 +49,6 @@ def with_embedding(
             yield pdf
 
     return df.mapInPandas(run, schema=out_schema)
-
-
-def embed_chunks(chunks: DataFrame, dim: int = CHUNK_DIM) -> DataFrame:
-    """V1: chunk content -> 1536-d embedding. Object chunks embed their JSON
-    string form, like the reference (services/crud/chunks.py:276-287)."""
-    src = chunks.withColumn(
-        "_embed_text",
-        F.coalesce(F.col("content"), F.to_json(F.col("content_obj"))),
-    )
-    return with_embedding(src, "_embed_text", dim).drop("_embed_text")
 
 
 def verbalize_edges(edges: DataFrame, out_col: str = "verbalized") -> DataFrame:

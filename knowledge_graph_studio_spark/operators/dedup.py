@@ -62,36 +62,42 @@ def cap_shingle_df(sh: DataFrame, max_df: int, log: bool = True) -> DataFrame:
     Jaccard for genuine near-dups (a boilerplate shingle inflates
     intersection and union together) and is standard stop-shingle practice.
 
-    Not silent: with log=True the hot set itself is collected in ONE pass
-    over the frequency aggregation (it is driver-sized by construction —
-    at most total_occurrences/max_df entries, the same set a broadcast
-    build ships to every executor anyway), its stats logged, and the
-    filter applied as a broadcast LEFT ANTI against the collected literal.
-    r6: the previous shape ran the groupBy TWICE — once eagerly for the
-    stats collect, once lazily as the anti-join's broadcast build (guide
-    §2.4: remove duplicated passes). With log=False nothing is collected
-    and the single lazy aggregation feeds the broadcast directly (the
-    collapse paths call it this way over un-checkpointed rep shingles,
-    where an eager probe would force a second shingle generation)."""
+    Not silent: with log=True the hot set is probed in ONE pass over the
+    frequency aggregation, bounded at LITERAL_DF_MAX_ROWS + 1 rows, its
+    stats logged, and the filter applied as a broadcast LEFT ANTI against
+    the collected literal. A hot set past the bound never reaches the
+    driver: its count and worst df come from one 2-scalar aggregation and
+    the filter falls back to the lazy broadcast build (more aggregation
+    passes, but a bounded plan and driver). With log=False nothing is
+    collected and the single lazy aggregation feeds the broadcast directly
+    (the collapse paths call it this way over un-checkpointed rep
+    shingles, where an eager probe would force a second shingle
+    generation)."""
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     hot = dfreq.filter(F.col("df") > max_df)
     if log:
-        rows = hot.collect()  # ONE pass: stats + the broadcast set
+        from ..functions.literals import LITERAL_DF_MAX_ROWS
+
+        # ordered, so the bound is one top-k job: a bare limit() collect
+        # runs incremental take jobs over growing partition subsets
+        rows = hot.orderBy(F.desc("df")).limit(LITERAL_DF_MAX_ROWS + 1) \
+            .collect()
+        if len(rows) > LITERAL_DF_MAX_ROWS:
+            n, worst = hot.agg(F.count("*"), F.max("df")).first()
+            _LOG.warning(
+                "cap_shingle_df: dropping %d shingles with df > %d (worst df "
+                "%d) through a broadcast join: over the %d-row literal bound",
+                n, max_df, worst, LITERAL_DF_MAX_ROWS)
+            return sh.join(F.broadcast(hot.select("shingle")),
+                           "shingle", "left_anti")
         if rows:
             _LOG.warning(
                 "cap_shingle_df: dropping %d shingles with df > %d (worst df %d)",
-                len(rows), max_df, max(r["df"] for r in rows))
+                len(rows), max_df, rows[0]["df"])
         else:
             _LOG.info("cap_shingle_df: cap %d did not bind", max_df)
         spark = sh.sparkSession
         dt = sh.schema["shingle"].dataType
-        from ..functions.literals import LITERAL_DF_MAX_ROWS
-        if len(rows) > LITERAL_DF_MAX_ROWS:
-            # plan-size guard: a very hot corpus can exceed what a Catalyst
-            # literal should carry — fall back to the lazy broadcast build
-            # (second aggregation pass, but bounded plan)
-            return sh.join(F.broadcast(hot.select("shingle")),
-                           "shingle", "left_anti")
         if rows:
             # one JVM-literal relation, every element cast to the shingle
             # column's exact type (a 64-bit hash that happens to fit an int

@@ -9,6 +9,15 @@ scaled down for local[N] testing:
     <=2048, utilities/common.py:28-33 — same order of magnitude).
   * shuffle.partitions defaults to 2x cores locally; on a real cluster this is
     overridden via spark-submit --conf (bench.py exercises 8 vs 32 cores).
+  * C2 compiles only truly hot code: DRIVER_JIT_OPTIONS raises HotSpot's
+    tier-4 thresholds 10x, so lukewarm Catalyst/AQE planner code stays at
+    C1 while scan, aggregate and join inner loops still reach C2 within a
+    stage (in local[N] too, where executors share the JVM). As
+    spark.driver.defaultJavaOptions it reaches only the driver on a
+    cluster (executors keep HotSpot's defaults) and precedes a caller's
+    extraJavaOptions (a later flag wins). Under spark-submit pass it as
+    --conf spark.driver.defaultJavaOptions=...: attach_submitted_session
+    cannot change the flags of a JVM that is already running.
 """
 
 from __future__ import annotations
@@ -16,6 +25,48 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# JDK 17's tier-4 defaults (5000 / 600 / 15000 / 40000), each x10
+DRIVER_JIT_OPTIONS = ("-XX:Tier4InvocationThreshold=50000 "
+                      "-XX:Tier4MinInvocationThreshold=6000 "
+                      "-XX:Tier4CompileThreshold=150000 "
+                      "-XX:Tier4BackEdgeThreshold=400000")
+
+# runtime-settable SQL tuning, set by get_spark and tune_sql_conf alike
+SQL_CONF = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    # AQE's coalescer keeps >= defaultParallelism partitions
+    # (parallelismFirst) UNLESS that would drop pieces under
+    # minPartitionSize — default 1 MB, which collapses a small corpus's
+    # shuffles to 1-3 partitions. The stages downstream of those
+    # shuffles here are high-FAN-OUT (9 n-gram explodes per token,
+    # shingle generators), so bytes-in wildly understates work and a
+    # "tiny" shuffle output can feed seconds of near-serial map work
+    # (measured: gopher_repetition over sf0.1 ran 8.0 s 1-wide vs
+    # 1.7 s 8-wide). 64 KB keeps small inputs cluster-wide; at 100 TB
+    # total/parallelism >> 1 MB and the floor never binds.
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize": "64k",
+    # keep AQE active for plans that are persist()ed: without this a
+    # cached plan is compiled with AQE's runtime re-planning disabled
+    # (fixed shuffle partitioning, no broadcast demotion/promotion) —
+    # measured 2.5x slower on the node-materialization stage when the
+    # tiny result frame is cached for reuse.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
+    # collect_set/collect_list aggregations (the salted node/edge merge)
+    # run as ObjectHashAggregate, which silently degrades to SORT-based
+    # aggregation after 128 distinct keys per task (the conservative
+    # default) — i.e. a full sort of the 2x-triples endpoint stream.
+    # The salted merge bounds per-task hash-map entries to (entities
+    # present in the task) x salt with set buffers totalling at most the
+    # task's input size, so a much higher key threshold is safe and keeps
+    # the agg hash-based.
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold": "65536",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+}
 
 
 def get_spark(
@@ -31,43 +82,10 @@ def get_spark(
         .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.default.parallelism", str(cores))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # AQE's coalescer keeps >= defaultParallelism partitions
-        # (parallelismFirst) UNLESS that would drop pieces under
-        # minPartitionSize — default 1 MB, which collapses a small corpus's
-        # shuffles to 1-3 partitions. The stages downstream of those
-        # shuffles here are high-FAN-OUT (9 n-gram explodes per token,
-        # shingle generators), so bytes-in wildly understates work and a
-        # "tiny" shuffle output can feed seconds of near-serial map work
-        # (measured: gopher_repetition over sf0.1 ran 8.0 s 1-wide vs
-        # 1.7 s 8-wide). 64 KB keeps small inputs cluster-wide; at 100 TB
-        # total/parallelism >> 1 MB and the floor never binds.
-        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                "64k")
-        # keep AQE active for plans that are persist()ed: without this a
-        # cached plan is compiled with AQE's runtime re-planning disabled
-        # (fixed shuffle partitioning, no broadcast demotion/promotion) —
-        # measured 2.5x slower on the node-materialization stage when the
-        # tiny result frame is cached for reuse.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-                "true")
-        # collect_set/collect_list aggregations (the salted node/edge merge)
-        # run as ObjectHashAggregate, which silently degrades to SORT-based
-        # aggregation after 128 distinct keys per task (the conservative
-        # default) — i.e. a full sort of the 2x-triples endpoint stream.
-        # The salted merge bounds per-task hash-map entries to (entities
-        # present in the task) x salt with set buffers totalling at most the
-        # task's input size, so a much higher key threshold is safe and keeps
-        # the agg hash-based.
-        .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-                "65536")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config(map=SQL_CONF)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.defaultJavaOptions", DRIVER_JIT_OPTIONS)
         .config("spark.ui.enabled", "false")
         # Shuffle/spill files on tmpfs: this VM's only disk is one shared
         # virtual spindle, so any shuffle-heavy stage is serialized through
@@ -79,9 +97,8 @@ def get_spark(
         .config("spark.local.dir",
                 os.environ.get("SPARK_GRAFT_LOCAL_DIR",
                                "/dev/shm/spark-local"))
+        .config(map=extra or {})
     )
-    for k, v in (extra or {}).items():
-        b = b.config(k, v)
     spark = b.getOrCreate()
     _warm_session(spark)
     return spark
@@ -96,13 +113,10 @@ def _warm_session(spark: SparkSession) -> None:
     scan+agg 2.4 s vs 0.5 s warm — Hadoop FS + codegen init; first
     join+agg 2.4 s — join codegen; first Arrow/pandas stage 4.2 s vs 1.6 s
     — one Python worker FORK per core plus Arrow init). This primes those
-    three paths in ~2-3 s at session build, off every query's clock —
-    the same reasoning bench.py already applies by warming the per-core
-    Python workers before the KG pipeline measurement. No input data is
-    touched and nothing is cached: the warm-up computes throwaway literals
-    only. Skip with SPARK_GRAFT_NO_SESSION_WARM=1 (for callers spinning
-    many short-lived sessions; pytest shares ONE session via conftest, so
-    the suite pays this once)."""
+    three paths in ~2-3 s at session build, off every query's clock. No
+    input data is touched and nothing is cached. Skip with
+    SPARK_GRAFT_NO_SESSION_WARM=1 (for callers spinning many short-lived
+    sessions; pytest shares ONE session via conftest)."""
     if os.environ.get("SPARK_GRAFT_NO_SESSION_WARM"):
         return
     if spark.conf.get("spark.graft.sessionWarmed", None) == "true":
@@ -197,9 +211,7 @@ def attach_submitted_session() -> SparkSession | None:
     Under ``spark-submit`` the gateway JVM already exists (PythonRunner
     exports PYSPARK_GATEWAY_PORT) and carries the DEPLOYMENT's master,
     executor topology, and memory — a builder that sets .master() here
-    would silently override the submitted cluster with local[N] (this
-    repo's round-5 submit smoke measured exactly that: every --master
-    level produced identical walls because the factory pinned local[32]).
+    would silently override the submitted cluster with local[N].
     Returns None when not running under spark-submit; otherwise the
     attached session with the runtime-settable SQL tuning applied."""
     if not os.environ.get("PYSPARK_GATEWAY_PORT"):
@@ -215,21 +227,8 @@ def tune_sql_conf(spark: SparkSession, cores: int | None = None) -> None:
     deployment; these are pure SQL confs."""
     cores = cores or spark.sparkContext.defaultParallelism
     if not spark.sparkContext.getConf().contains("spark.sql.shuffle.partitions"):
-        # not set by spark-submit --conf: size to the actual cluster. (NB
-        # spark.conf.get(key, default) returns `default` for an UNSET key —
-        # it never surfaces the SQL default "200", so the submitted conf is
-        # the only reliable place to test explicitness.)
+        # not set by spark-submit --conf: size to the actual cluster (the
+        # SQL conf never surfaces an unset key's default "200")
         spark.conf.set("spark.sql.shuffle.partitions", str(max(2 * cores, 8)))
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                   "64k")
-    spark.conf.set(
-        "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-    spark.conf.set(
-        "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "65536")
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold",
-                   str(64 * 1024 * 1024))
+    for k, v in SQL_CONF.items():
+        spark.conf.set(k, v)

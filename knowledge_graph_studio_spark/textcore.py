@@ -178,7 +178,6 @@ def split_text_into_chunks(
 # --------------------------------------------------------------------------- #
 
 _CLEAN_KEEP_RE = re.compile(r"[^0-9a-zA-Z,;. ]")
-_PRINTABLE_RE = re.compile(r"[^\x20-\x7e\n]")
 
 
 def clean_text(text: str) -> str:
@@ -188,12 +187,6 @@ def clean_text(text: str) -> str:
     text = text.replace("_", " ")
     text = _CLEAN_KEEP_RE.sub("", text)
     return re.sub(r" +", " ", text).strip()
-
-
-def clean_text_printable(text: str) -> str:
-    """Strip non-printable chars, collapse whitespace (utilities/processors.py:240-277)."""
-    text = _PRINTABLE_RE.sub(" ", text)
-    return re.sub(r"\s+", " ", text).strip()
 
 
 _PUNCT_TABLE = str.maketrans("", "", string.punctuation)
@@ -308,11 +301,6 @@ def convert_triple_to_text(triple: dict[str, Any], include_chunks: bool = False)
                 )
         s += ". This is further explained by the chunks: " + " | ".join(parts)
     return s
-
-
-def convert_pattern_to_text(head: str, relation: str, tail: str) -> str:
-    """Pattern seed-concept sentence (graph_service.py:352-364 semantics)."""
-    return f"{clean_text(head)} {clean_text(relation)} {clean_text(tail)}"
 
 
 # --------------------------------------------------------------------------- #

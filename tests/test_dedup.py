@@ -273,6 +273,31 @@ def test_cap_shingle_df_kills_template_skew(spark):
     sh.unpersist()
 
 
+def test_cap_shingle_df_overflow_matches_literal_path(spark, monkeypatch,
+                                                     caplog):
+    """A hot set past the literal bound takes the broadcast-join path and
+    drops exactly the shingles the literal path drops."""
+    from knowledge_graph_studio_spark.functions import literals
+
+    rows = [(i, f"all rights reserved copyright unique{i} words{i} " * 2)
+            for i in range(30)]
+    sh = token_shingles(spark.createDataFrame(rows, ["doc_id", "text"]))
+    sh = sh.localCheckpoint()
+
+    def capped_rows():
+        return sorted(cap_shingle_df(sh, max_df=5).collect())
+
+    literal = capped_rows()
+    monkeypatch.setattr(literals, "LITERAL_DF_MAX_ROWS", 1)
+    with caplog.at_level("WARNING"):
+        overflow = capped_rows()
+    assert overflow == literal
+    assert len(literal) < sh.count()
+    msgs = [r.getMessage() for r in caplog.records]
+    assert any("over the 1-row literal bound" in m and "worst df 30" in m
+               for m in msgs), msgs
+
+
 def test_simhash_locality(spark):
     base = "the quick brown fox jumps over the lazy dog " * 12
     rows = [
