@@ -82,7 +82,6 @@ def curate_corpus(
     dsir_kwargs: dict | None = None,
     pack_seq_len: int | None = None,
     pack_shards: int = 128,
-    seal_every: int | str = 1,
     clean_text_stages: bool = True,
     exact_dedup: bool = True,
     pii: bool = True,
@@ -103,60 +102,16 @@ def curate_corpus(
     stages: dict[str, DataFrame] = {"input": ensure_width(docs)}
     cur = stages["input"]
 
-    # Sealing policy. Lineage must be truncated periodically: every stage
-    # embeds its input's plan at least twice (clean side + passthrough
-    # side of the id-join), so a fully lazy ~10-stage composition grows
-    # ONE flat DAG exponentially (measured: 168 s for the sf0.1 funnel vs
-    # ~20 s sealed). Each localCheckpoint is a driver-synchronized AQE
-    # execution (stage materialization runs eagerly at the call site even
-    # with eager=False).
-    #
-    #   seal_every=k (int, default 1): seal every k-th stage boundary.
-    #   seal_every="heavy": seal only the INPUT of each multi-pass stage
-    #     (boilerplate, span/substr dedup, gopher repetition, fuzzy dedup,
-    #     LM bucketing, DSIR, packing), letting single-pass stages ride
-    #     unsealed.
-    #
-    # r6 measured the policies head-to-head on the sf0.1 bench funnel
-    # (alternating in one session, 3 rounds): seal_every=1 min 13.2 s,
-    # "heavy" min 18.1 s, seal_every=2 min 20.4 s — the funnel is
-    # stage-cost-bound, not boundary-bound, and the unsealed chains'
-    # duplicated post-exchange work costs more than the boundary syncs
-    # save, so per-stage sealing stays the default. Output is identical
-    # under every policy (sealing never changes semantics; law-tested).
-    import os as _os
-    import time as _time
-
-    _state = {"since": 0, "dirty": True, "t": _time.time()}
-    _timing = bool(_os.environ.get("CURATION_STAGE_TIMING"))
-
-    def _ck(df: DataFrame, name: str) -> DataFrame:
-        if not _timing:
-            return df.localCheckpoint(eager=False)
-        t0 = _time.time()
-        out = df.localCheckpoint(eager=False)
-        print(f"[curation] seal {name}: {_time.time() - t0:.2f}s "
-              f"(+{t0 - _state['t']:.2f}s since last)", flush=True)
-        _state["t"] = _time.time()
-        return out
-
-    def _seal(df: DataFrame, name: str = "") -> DataFrame:
-        # stage-boundary hook
-        if seal_every == "heavy":
-            _state["dirty"] = True
-            return df
-        _state["since"] += 1
-        if _state["since"] >= seal_every:
-            _state["since"] = 0
-            return _ck(df, name)
-        return df
-
-    def _sealed_input(df: DataFrame) -> DataFrame:
-        # "heavy" mode: materialize the input of a multi-pass stage once
-        if seal_every == "heavy" and _state["dirty"]:
-            _state["dirty"] = False
-            return _ck(df, "input-of-heavy")
-        return df
+    # Every stage output is sealed with a lazy localCheckpoint: each stage
+    # embeds its input's plan at least twice (clean side + passthrough side
+    # of the id-join), so a fully lazy ~10-stage composition grows ONE flat
+    # DAG exponentially (measured: 168 s for the sf0.1 funnel vs ~20 s
+    # sealed). Sealing less often measured slower (r6, sf0.1 bench funnel:
+    # per-stage 13.2 s, only multi-pass stage inputs 18.1 s, every 2nd stage
+    # 20.4 s) — the funnel is stage-cost-bound, and unsealed chains
+    # duplicate post-exchange work.
+    def _seal(df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=False)
 
     if url_col is not None:
         if blocked_domains is not None:
@@ -164,7 +119,7 @@ def curate_corpus(
             # suffix-matched blocklist on the RAW url, before any text work
             from .cleaning import domain_filter
             cur = _seal(domain_filter(cur, blocked_domains, url_col=url_col,
-                                      id_col=id_col), "domain_filter")
+                                      id_col=id_col))
             stages["domain_filter"] = cur
         c = canonicalize_urls(cur, url_col)
         if ts_col is not None:
@@ -173,15 +128,13 @@ def curate_corpus(
             w = Window.partitionBy("canonical_url").orderBy(
                 F.col(ts_col).desc(), F.col(id_col))
             cur = _seal(c.withColumn("_rk", F.row_number().over(w))
-                        .filter("_rk = 1").drop("_rk", "canonical_url"), "url_dedup")
+                        .filter("_rk = 1").drop("_rk", "canonical_url"))
         else:
             w_first = F.min(F.col(id_col)).over(
                 Window.partitionBy("canonical_url"))
             cur = _seal(c.withColumn("_keep", w_first == F.col(id_col))
-                        .filter("_keep").drop("_keep", "canonical_url"), "url_dedup")
+                        .filter("_keep").drop("_keep", "canonical_url"))
         stages["url_dedup"] = cur
-
-    extra = [c for c in cur.columns if c not in (id_col, text_col)]
 
     def _rewrite(clean: DataFrame, src: DataFrame) -> DataFrame:
         # swap in clean_text, preserving any extra columns from src
@@ -195,14 +148,12 @@ def curate_corpus(
         # frequencies shift after a strip), so a staged runner that
         # materialized the cleaned text must disable them on resume
         # (run_curation_job does exactly that)
-        cur = _sealed_input(cur)
         cur = _seal(_rewrite(strip_boilerplate(
             cur, id_col=id_col, text_col=text_col,
-            max_df_frac=boilerplate_max_df_frac), cur), "boilerplate")
+            max_df_frac=boilerplate_max_df_frac), cur))
         stages["boilerplate"] = cur
-        cur = _sealed_input(cur)
         cur = _seal(_rewrite(span_dedup(cur, id_col=id_col,
-                                        text_col=text_col), cur), "span_dedup")
+                                        text_col=text_col), cur))
         stages["span_dedup"] = cur
 
     if substr_dedup_k is not None:
@@ -210,9 +161,8 @@ def curate_corpus(
         # removal — runs after the line/span cleaners so window keys see
         # boilerplate-free text
         from .cleaning import exact_substring_dedup
-        cur = _sealed_input(cur)
         cur = _seal(_rewrite(exact_substring_dedup(
-            cur, k=substr_dedup_k, id_col=id_col, text_col=text_col), cur), "substr_dedup")
+            cur, k=substr_dedup_k, id_col=id_col, text_col=text_col), cur))
         stages["substr_dedup"] = cur
 
     if exact_dedup:
@@ -228,7 +178,7 @@ def curate_corpus(
         # work by the duplicate factor.
         keepers = (cur.groupBy(F.md5(text_col).alias("_h"))
                    .agg(F.min(id_col).alias(id_col)).select(id_col))
-        cur = _seal(cur.join(keepers, id_col, "left_semi"), "exact_dedup")
+        cur = _seal(cur.join(keepers, id_col, "left_semi"))
         stages["exact_dedup"] = cur
 
     if gopher:
@@ -237,22 +187,20 @@ def curate_corpus(
         gq = gopher_filter(cur, text_col=text_col, id_cols=(id_col,),
                            **(gopher_kwargs or {}))
         cur = _seal(cur.join(gq.filter("passes = 1").select(id_col),
-                             id_col, "left_semi"), "gopher_quality")
+                             id_col, "left_semi"))
         stages["gopher_quality"] = cur
-        cur = _sealed_input(cur)
         gr = gopher_repetition(cur, text_col=text_col, id_cols=(id_col,),
                                **(repetition_kwargs or {}))
         cur = _seal(cur.join(gr.filter("passes = 1").select(id_col),
-                             id_col, "left_semi"), "gopher_repetition")
+                             id_col, "left_semi"))
         stages["gopher_repetition"] = cur
 
     if fuzzy_dedup:
         from .dedup import neardup_dedup
         # after the exact pass only NEAR (non-identical) duplicates remain,
         # so the generator's collapse probe will skip its collapse here
-        cur = _sealed_input(cur)
         cur = _seal(neardup_dedup(cur, id_col=id_col, text_col=text_col,
-                                  **(fuzzy_kwargs or {})), "fuzzy_dedup")
+                                  **(fuzzy_kwargs or {})))
         stages["fuzzy_dedup"] = cur
 
     if lm_model is not None:
@@ -263,7 +211,6 @@ def curate_corpus(
         # the dropped bucket (default: drop 'tail', the lowest tercile)
         from .textstats import (lm_bigram_score, lm_bucket_thresholds,
                                 lm_unigram_score)
-        cur = _sealed_input(cur)
         if len(lm_model) == 3:
             scored0 = lm_bigram_score(cur, lm_model, text_col=text_col,
                                       id_col=id_col)
@@ -278,13 +225,13 @@ def curate_corpus(
             .otherwise(F.lit("tail")))
         cur = _seal(cur.join(
             scored.filter(F.col("lm_bucket") != lm_drop_bucket)
-            .select(id_col), id_col, "left_semi"), "lm_filtered")
+            .select(id_col), id_col, "left_semi"))
         stages["lm_filtered"] = cur
 
     if eval_df is not None:
         cur = _seal(decontaminate(cur, eval_df, n=decontaminate_n,
                                   text_col=text_col, id_col=id_col,
-                                  mode="drop"), "decontaminated")
+                                  mode="drop"))
         stages["decontaminated"] = cur
 
     if pii:
@@ -296,7 +243,7 @@ def curate_corpus(
         cur = _seal(cur.select(
             id_col,
             *[c for c in cur.columns if c not in (id_col, text_col)],
-            redacted_text_col(text_col).alias(text_col)), "pii_redacted")
+            redacted_text_col(text_col).alias(text_col)))
         stages["pii_redacted"] = cur
 
     if dsir_target is not None and dsir_top_n is not None:
@@ -305,18 +252,17 @@ def curate_corpus(
         # docs as the raw distribution, keep the top-n. Runs before the
         # mixture so up-sampling copies don't distort the raw fit.
         from .sampling import dsir_scores, dsir_select, fit_dsir
-        cur = _sealed_input(cur)
         kw = dict(text_col=text_col, id_col=id_col, **(dsir_kwargs or {}))
         weights, w0 = fit_dsir(dsir_target, cur, **kw)
         picked = dsir_select(
             dsir_scores(cur, weights, w0, **kw), dsir_top_n, id_col=id_col)
-        cur = _seal(cur.join(picked.select(id_col), id_col, "left_semi"), "dsir_selected")
+        cur = _seal(cur.join(picked.select(id_col), id_col, "left_semi"))
         stages["dsir_selected"] = cur
 
     if mix_rates is not None:
         if stratum_col is None or stratum_col not in cur.columns:
             raise ValueError("mix_rates needs a stratum_col present in docs")
-        cur = _seal(sample_mix(cur, mix_rates, stratum_col, id_col=id_col), "mixed")
+        cur = _seal(sample_mix(cur, mix_rates, stratum_col, id_col=id_col))
         stages["mixed"] = cur
 
     if pack_seq_len is not None:
@@ -327,7 +273,6 @@ def curate_corpus(
         # key's high bits is monotone by construction, so the two-phase
         # prefix sum reproduces one global order at any cluster size.
         from .sampling import pack_sequences
-        cur = _sealed_input(cur)
         copy = F.col("copy") if "copy" in cur.columns else F.lit(0)
         # arithmetic right-shift = exact monotone floor-division by 2^s,
         # so shard order equals key order (pack_shards rounds up to a
@@ -346,7 +291,6 @@ def curate_corpus(
                              tiebreak_cols=tiebreak).drop("_shard")
         stages["packed"] = cur
 
-    _ = extra  # extra columns ride along via the joins above
     return {"docs": cur, "stages": stages}
 
 
@@ -400,7 +344,7 @@ def run_curation_job(
     # the caller's intended curate_corpus configuration (ADVICE r5)
     _forwarded = {
         "url_col", "blocked_domains", "ts_col", "boilerplate_max_df_frac",
-        "substr_dedup_k", "seal_every", "gopher", "gopher_kwargs",
+        "substr_dedup_k", "gopher", "gopher_kwargs",
         "repetition_kwargs", "fuzzy_dedup", "fuzzy_kwargs", "lm_model",
         "lm_thresholds", "lm_drop_bucket", "eval_df", "decontaminate_n",
         "exact_dedup", "pii", "dsir_target", "dsir_top_n", "dsir_kwargs",
@@ -415,18 +359,16 @@ def run_curation_job(
     group_kwargs = [
         dict(gopher=False, exact_dedup=False, pii=False,
              **g("url_col", "blocked_domains", "ts_col",
-                 "boilerplate_max_df_frac", "substr_dedup_k",
-                 "seal_every")),
+                 "boilerplate_max_df_frac", "substr_dedup_k")),
         dict(clean_text_stages=False,
              **g("gopher", "gopher_kwargs", "repetition_kwargs",
                  "fuzzy_dedup", "fuzzy_kwargs", "lm_model",
                  "lm_thresholds", "lm_drop_bucket", "eval_df",
-                 "decontaminate_n", "exact_dedup", "pii", "seal_every")),
+                 "decontaminate_n", "exact_dedup", "pii")),
         dict(clean_text_stages=False, gopher=False, exact_dedup=False,
              pii=False,
              **g("dsir_target", "dsir_top_n", "dsir_kwargs", "mix_rates",
-                 "stratum_col", "pack_seq_len", "pack_shards",
-                 "seal_every")),
+                 "stratum_col", "pack_seq_len", "pack_shards")),
     ]
     cur, counts = docs, {}
     for gid, gkw in enumerate(group_kwargs):

@@ -9,6 +9,19 @@ Four families, each a standard technique re-expressed Spark-native:
 Everything is native Column API — xxhash64 for all hashing (JVM-side,
 deterministic across runs/executors), no Python in the hot path.
 
+Shared pieces (each decision lives in one function):
+  * token_shingles        the shingler (textstats.shingles, id as doc_id)
+  * collapse_verbatim /   verbatim-duplicate collapse to one representative
+    expand_rep_pairs      per content key, and the re-expansion of
+                          representative pairs to member pairs (also used by
+                          the vector near-dup operators in similarity.py)
+  * _verified_jaccard     the verified-pair core of minhash_neardup_pairs
+                          and ngram_jaccard_pairs: one hashed shingle index,
+                          one df cap, one size table, one Jaccard finish;
+                          only the candidate step differs
+  * banded_hamming_pairs  the banded-hamming engine of simhash_neardup_pairs
+                          and the perceptual-hash families
+
 Scale notes:
   * MinHash signatures are k=64 per-group MIN aggregates over the shingle
     inverted index — one shuffle on doc_id, map-side partial min.
@@ -23,35 +36,24 @@ Scale notes:
 from __future__ import annotations
 
 import logging
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from . import textstats
 
 _LOG = logging.getLogger(__name__)
 
 
 def token_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
                    k: int = 3) -> DataFrame:
-    """distinct k-token shingles per doc (native sequence/transform).
-    Tokens are materialized as a column first — lambda bodies get no
-    common-subexpression elimination, so referencing split() inside the
-    transform would re-split the text ~k*|tokens| times per row (see
-    textstats.shingles)."""
-    src = df.select(F.col(id_col).alias("doc_id"),
-                    F.split(F.col(text_col), " ").alias("_toks"))
-    toks = F.col("_toks")
-    # guard: sequence(1, 0) is DESCENDING [1, 0] in Spark, so a doc with
-    # fewer than k tokens must short-circuit to an empty index list (the
-    # old greatest(..., 0) floor produced [1, 0] and an out-of-bounds
-    # element_at under ANSI for every sub-k-token document)
-    idx = F.when(
-        F.size(toks) >= k, F.sequence(F.lit(1), F.size(toks) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.transform(
-        idx, lambda i: F.concat_ws("_", *[F.element_at(toks, i + j) for j in range(k)])
-    )
-    return src.select("doc_id", F.explode(F.array_distinct(sh)).alias("shingle"))
+    """(doc_id, shingle): distinct k-token shingles per doc —
+    textstats.shingles with the id renamed to ``doc_id``. A doc emits at
+    least one shingle exactly when ``size(split(text, " ")) >= k``."""
+    return textstats.shingles(df, k=k, text_col=text_col, id_col=id_col).select(
+        F.col(id_col).alias("doc_id"), "shingle")
 
 
 def cap_shingle_df(sh: DataFrame, max_df: int, log: bool = True) -> DataFrame:
@@ -173,72 +175,44 @@ def resolve_collapse(df: DataFrame, collapse_exact, content_col: str,
     return bool(collapse_exact)
 
 
-def _collapse_verbatim(df: DataFrame, id_col: str, text_col: str):
-    """Collapse byte-identical texts to one representative (min id) before
-    bucket-based candidate generation. Returns (reps, mem):
-    reps — one row per distinct text: (id_col=rep id, text_col, _n members);
-    mem — (rep, member id) mapping for pair re-expansion.
+def collapse_verbatim(df: DataFrame, id_col: str, key: F.Column,
+                      cols: list[str]):
+    """Collapse verbatim-identical content to one representative (min id)
+    per content ``key`` (a Column over ``df``) before bucket-based pair
+    generation. Returns (reps, mem):
+    reps — one row per distinct content: (id_col=rep id, *cols, _n members);
+    mem — (_rep, _mid) membership for expand_rep_pairs.
 
     Rationale (BENCH_sf16): crawls repeat documents verbatim; k copies land
-    in identical LSH buckets, multiplying within-bucket pair expansion by
-    k^2 and pushing buckets over the max_bucket drop guard — collapsing
-    first shrinks buckets back to distinct-content size AND makes duplicate
+    in identical buckets, multiplying within-bucket pair expansion by k^2
+    and pushing buckets over the max_bucket drop guard — collapsing first
+    shrinks buckets back to distinct-content size AND makes duplicate
     recall exact instead of bucket-dependent."""
-    # slim checksum frame computed once (48 bytes/row) and shared by the rep
-    # election and the membership join; rep texts fetched back by id join —
-    # never materialize or re-hash the text column twice
-    ck = df.select(F.col(id_col).alias("_mid"),
-                   F.md5(F.col(text_col)).alias("_ck")) \
+    # slim (id, key) frame computed once and shared by the rep election and
+    # the membership join; rep content is fetched back by id join — never
+    # materialize or re-hash the content column twice
+    ck = df.select(F.col(id_col).alias("_mid"), key.alias("_ck")) \
            .localCheckpoint(eager=False)
     grp = ck.groupBy("_ck").agg(
         F.min("_mid").alias("_rep"), F.count("*").alias("_n"))
-    reps = grp.join(
-        df.select(F.col(id_col).alias("_rep"), F.col(text_col)), "_rep") \
-        .select(F.col("_rep").alias(id_col), text_col, "_n")
+    reps = grp.join(df.select(F.col(id_col).alias("_rep"), *cols), "_rep") \
+        .select(F.col("_rep").alias(id_col), *cols, "_n")
     mem = ck.join(grp.select("_ck", "_rep"), "_ck").select("_rep", "_mid")
     return reps, mem
 
 
-def _expand_verified_pairs(rep_out: DataFrame, mem: DataFrame,
-                           reps: DataFrame, rep_sz: DataFrame,
-                           id_col: str) -> DataFrame:
-    """Shared expansion for the VERIFIED (da, db, common, union_size) shape
-    (minhash_neardup_pairs / ngram_jaccard_pairs with collapse_exact):
-    cross-content rows carry the representative pair's counts (identical
-    content per member); intra-duplicate rows emit Jaccard exactly 1 using
-    the rep's capped shingle count from ``rep_sz`` (doc_id, _nsh), skipping
-    shingle-less content (which the uncollapsed join can never emit)."""
-    cross = (
-        rep_out
-        .join(mem.select(F.col("_rep").alias("da"),
-                         F.col("_mid").alias("_ia")), "da")
-        .join(mem.select(F.col("_rep").alias("db"),
-                         F.col("_mid").alias("_ib")), "db")
-        .select(F.least("_ia", "_ib").alias("da"),
-                F.greatest("_ia", "_ib").alias("db"),
-                "common", "union_size"))
-    dup_mem = (
-        mem.join(reps.filter(F.col("_n") >= 2)
-                 .select(F.col(id_col).alias("_rep")), "_rep")
-        .join(rep_sz.filter(F.col("_nsh") >= 1)
-              .select(F.col("doc_id").alias("_rep"), "_nsh"), "_rep"))
-    x, y = dup_mem.alias("x"), dup_mem.alias("y")
-    intra = (
-        x.join(y, (F.col("x._rep") == F.col("y._rep"))
-               & (F.col("x._mid") < F.col("y._mid")))
-        .select(F.col("x._mid").alias("da"), F.col("y._mid").alias("db"),
-                F.col("x._nsh").alias("common"),
-                F.col("x._nsh").alias("union_size")))
-    return cross.unionByName(intra)
-
-
-def _expand_rep_pairs(rep_pairs: DataFrame, mem: DataFrame,
-                      dup_reps: DataFrame, a_col: str, b_col: str) -> DataFrame:
-    """(rep_a, rep_b) pairs -> member-level pairs: cross-content pairs via
-    two membership joins, intra-content pairs (identical text => always
-    near-dup) for representatives in ``dup_reps`` (callers pass only groups
-    whose content actually participates, e.g. has >= 1 shingle, mirroring
-    what the uncollapsed path could have emitted)."""
+def expand_rep_pairs(rep_pairs: DataFrame, mem: DataFrame,
+                     dup_reps: DataFrame, a_col: str, b_col: str,
+                     intra: Sequence[F.Column] = ()) -> DataFrame:
+    """Representative pairs -> member pairs (``a_col`` < ``b_col``).
+    Cross-content pairs come from two membership joins and carry the other
+    columns of ``rep_pairs`` (identical content per member). Intra-content
+    pairs (identical content => always near-dup) come from the ``_rep``
+    self-join of the members of ``dup_reps`` (_rep, ...) with the ``intra``
+    columns, evaluated over ``dup_reps``; callers pass only groups whose
+    content the uncollapsed path could pair at all (>= 1 shingle, non-null
+    text, nonzero vector)."""
+    payload = [c for c in rep_pairs.columns if c not in (a_col, b_col)]
     cross = (
         rep_pairs
         .join(mem.select(F.col("_rep").alias(a_col),
@@ -246,16 +220,16 @@ def _expand_rep_pairs(rep_pairs: DataFrame, mem: DataFrame,
         .join(mem.select(F.col("_rep").alias(b_col),
                          F.col("_mid").alias("_ib")), b_col)
         .select(F.least("_ia", "_ib").alias(a_col),
-                F.greatest("_ia", "_ib").alias(b_col))
-    )
-    dup_mem = mem.join(dup_reps.select("_rep"), "_rep")
+                F.greatest("_ia", "_ib").alias(b_col), *payload))
+    dup = dup_reps.select("_rep", *intra)
+    dup_mem = mem.join(dup, "_rep")
     x, y = dup_mem.alias("x"), dup_mem.alias("y")
-    intra = (
+    intra_pairs = (
         x.join(y, (F.col("x._rep") == F.col("y._rep"))
                & (F.col("x._mid") < F.col("y._mid")))
-        .select(F.col("x._mid").alias(a_col), F.col("y._mid").alias(b_col))
-    )
-    return cross.unionByName(intra)
+        .select(F.col("x._mid").alias(a_col), F.col("y._mid").alias(b_col),
+                *[F.col(f"x.{c}") for c in dup.columns[1:]]))
+    return cross.unionByName(intra_pairs)
 
 
 MINHASH_P = (1 << 31) - 1
@@ -353,7 +327,7 @@ def minhash_lsh_candidates(
     Buckets larger than ``max_bucket`` are dropped (web-scale template-text
     guard; at SF nothing approaches the cap). ``collapse_exact`` dedups
     byte-identical texts first and re-expands pairs afterward (see
-    _collapse_verbatim) — the production default for crawl corpora; pass
+    collapse_verbatim) — the production default for crawl corpora; pass
     "auto" to probe the duplicate rate first and collapse only when it can
     bind (resolve_collapse — VERDICT r3 #3: the collapse is pure overhead
     on duplicate-free corpora).
@@ -363,18 +337,18 @@ def minhash_lsh_candidates(
     assert bands * rows == num_hashes
     collapse_exact = resolve_collapse(df, collapse_exact, text_col)
     if collapse_exact:
-        reps, mem = _collapse_verbatim(df, id_col, text_col)
+        reps, mem = collapse_verbatim(df, id_col, F.md5(text_col), [text_col])
         rep_pairs = minhash_lsh_candidates(
             reps, id_col, text_col, num_hashes, bands, rows, shingle_k,
             max_bucket, collapse_exact=False,
             hash_fn=hash_fn, band_key=band_key)
-        # intra pairs only for content the banding could see at all
-        # (>= 1 shingle, i.e. >= shingle_k tokens)
-        shingled = (token_shingles(reps.filter(F.col("_n") >= 2),
-                                   id_col, text_col, k=shingle_k)
-                    .select(F.col("doc_id").alias("_rep")).distinct())
-        return _expand_rep_pairs(rep_pairs, mem, shingled, "da", "db") \
-            .distinct()
+        # intra pairs only for content the banding could see at all: >= 1
+        # shingle, i.e. >= shingle_k tokens (see token_shingles)
+        dup = reps.filter(
+            (F.col("_n") >= 2)
+            & (F.size(F.split(F.col(text_col), " ")) >= shingle_k)) \
+            .select(F.col(id_col).alias("_rep"))
+        return expand_rep_pairs(rep_pairs, mem, dup, "da", "db")
     sh = token_shingles(df, id_col, text_col, k=shingle_k)
     sig = minhash_signatures(sh, num_hashes=num_hashes, hash_fn=hash_fn)
     return _lsh_bucket_pairs(sig, bands, rows, max_bucket, band_key)
@@ -384,7 +358,7 @@ def _lsh_bucket_pairs(sig: DataFrame, bands: int, rows: int,
                       max_bucket: int, band_key: str) -> DataFrame:
     """Signatures -> banded buckets -> distinct within-bucket (da < db)
     pairs, with oversized buckets dropped (the shared tail of
-    minhash_lsh_candidates and the verified-pair fast path)."""
+    minhash_lsh_candidates and _verified_jaccard)."""
     banded = lsh_bands(sig, bands=bands, rows=rows, band_key=band_key)
     buckets = (
         banded.groupBy("band_id", "band_hash")
@@ -410,14 +384,19 @@ def _lsh_bucket_pairs(sig: DataFrame, bands: int, rows: int,
 
 def minhash_neardup_pairs(
     df: DataFrame, jaccard_threshold: float = 0.5,
-    max_shingle_df: int = 1000, collapse_exact: bool = False, **kw
+    max_shingle_df: int = 1000, collapse_exact: bool = False, *,
+    id_col: str = "doc_id", text_col: str = "text", shingle_k: int = 3,
+    num_hashes: int = 64, bands: int = 16, rows: int = 4,
+    max_bucket: int = 200,
 ) -> DataFrame:
     """LSH candidates verified by exact shingle Jaccard (candidates-only join,
     the scale-correct version of the all-pairs oracle). The verification join
     goes back through the raw shingle index, so it gets the same hot-shingle
     document-frequency cap as the exact path (cap_shingle_df — logged, not
     silent); sizes are computed over the capped shingle universe so Jaccard
-    stays consistent.
+    stays consistent. Banding and verification share ONE checkpointed
+    xxhash64 shingle index (_verified_jaccard); the LSH parameters are those
+    of minhash_lsh_candidates.
 
     ``collapse_exact`` collapses byte-identical texts BEFORE both banding and
     verification: representatives are verified once and the verdict is
@@ -430,150 +409,10 @@ def minhash_neardup_pairs(
     reading on a duplicated corpus (a template shared by k mirror copies is
     not k times hotter). "auto" probes the duplicate rate first
     (resolve_collapse)."""
-    collapse_exact = resolve_collapse(
-        df, collapse_exact, kw.get("text_col", "text"))
-    if collapse_exact:
-        id_col = kw.get("id_col", "doc_id")
-        text_col = kw.get("text_col", "text")
-        reps, mem = _collapse_verbatim(df, id_col, text_col)
-        # the verified core hands back the capped hashed shingle index it
-        # verified against, so the intra-duplicate size table shares it
-        # instead of re-shingling the representatives (r6)
-        rep_out, rep_sh = _minhash_verified_pairs(
-            reps, jaccard_threshold, max_shingle_df, **kw)
-        rep_sz = rep_sh.groupBy("doc_id").agg(F.count("*").alias("_nsh"))
-        return _expand_verified_pairs(rep_out, mem, reps, rep_sz, id_col)
-    out, _ = _minhash_verified_pairs(df, jaccard_threshold,
-                                     max_shingle_df, **kw)
-    return out
-
-
-def _minhash_verified_pairs(
-    df: DataFrame, jaccard_threshold: float, max_shingle_df: int | None,
-    **kw,
-) -> tuple[DataFrame, DataFrame]:
-    """Uncollapsed core of minhash_neardup_pairs; returns ``(verified_pairs,
-    capped_sh)`` where capped_sh is the (doc_id, xxhash64-shingle) index the
-    verification ran over (collapse callers derive per-rep sizes from it).
-
-    r6 (guide §2.4, remove duplicated passes): with the default xxhash64
-    family the banding signatures are derived from the SAME checkpointed
-    hashed shingle index as the verification join — ``pmod(stored_hash, p)``
-    is bit-identical to hashing inside minhash_signatures — so the corpus
-    is tokenized+shingled ONCE per query instead of twice. The md5_60
-    oracle family keeps the separate candidate pass (its banding hash is
-    not the verification key's xxhash64)."""
-    id_col = kw.get("id_col", "doc_id")
-    text_col = kw.get("text_col", "text")
-    shingle_k = kw.get("shingle_k", 3)
-    hash_fn = kw.get("hash_fn", "xxhash64")
-    # 64-bit hash key first (cheaper join compare, collision odds ~m^2/2^65),
-    # then localCheckpoint ONCE pre-cap: compute-once without a CacheManager
-    # leak (see driver_contract.q_dedup_ngram_jaccard).
-    sh = (
-        token_shingles(df, id_col, text_col, k=shingle_k)
-        .select("doc_id", F.xxhash64("shingle").alias("shingle"))
-        .localCheckpoint(eager=False)
-    )
-    if hash_fn == "xxhash64":
-        num_hashes = kw.get("num_hashes", 64)
-        bands = kw.get("bands", 16)
-        rows = kw.get("rows", 4)
-        assert bands * rows == num_hashes
-        sig = minhash_signatures(sh, num_hashes=num_hashes,
-                                 hash_fn=hash_fn, pre_hashed=True)
-        cands = _lsh_bucket_pairs(sig, bands, rows,
-                                  kw.get("max_bucket", 200),
-                                  kw.get("band_key", "xxhash64"))
-    else:
-        cands = minhash_lsh_candidates(df, **kw)
-    if max_shingle_df is not None:
-        sh = cap_shingle_df(sh, max_shingle_df)
-    sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("da"), "shingle")
-    b = sh.select(F.col("doc_id").alias("db"), "shingle")
-    common = (
-        cands.join(a, "da").join(b, ["db", "shingle"])
-        .groupBy("da", "db").agg(F.count("*").alias("common"))
-    )
-    out = (
-        common.join(sz.select(F.col("doc_id").alias("da"), F.col("n").alias("na")), "da")
-        .join(sz.select(F.col("doc_id").alias("db"), F.col("n").alias("nb")), "db")
-        .withColumn("union_size", F.col("na") + F.col("nb") - F.col("common"))
-        .filter(F.col("common") >= F.lit(jaccard_threshold) * F.col("union_size"))
-    )
-    return out.select("da", "db", "common", "union_size"), sh
-
-
-def simhash_neardup_pairs(
-    df: DataFrame, max_hamming: int = 3,
-    id_col: str = "doc_id", text_col: str = "text",
-    band_bits: int = 15, bits: int = 60, hash_fn: str = "xxhash64",
-    max_bucket: int = 1000, collapse_exact: bool = False,
-) -> DataFrame:
-    """(da, db, hamming) pairs whose simhash signatures differ in at most
-    ``max_hamming`` bits — banded blocking + exact verification.
-
-    Recall guarantee by pigeonhole: with n_bands = bits/band_bits bands, two
-    signatures within hamming n_bands-1 leave at least one band untouched,
-    so they collide in >= 1 bucket — the default 4x15 over 60 bits makes
-    max_hamming <= 3 EXACT, not approximate. Buckets above ``max_bucket``
-    are dropped (the simhash analog of the hot-shingle guard). Verification
-    is one bit_count(xor) per candidate — no token data moves, only 8-byte
-    signatures.
-
-    ``collapse_exact``: identical texts have identical signatures, so k
-    verbatim copies multiply every bucket they touch by k — collapse to
-    representatives first and expand after, intra-duplicate pairs at
-    hamming 0 (same construction as the other dedup families); "auto"
-    probes the duplicate rate first (resolve_collapse)."""
-    assert max_hamming <= bits // band_bits - 1, \
-        "banding only guarantees recall for hamming <= n_bands - 1"
-    collapse_exact = resolve_collapse(df, collapse_exact, text_col)
-    if collapse_exact:
-        reps, mem = _collapse_verbatim(df, id_col, text_col)
-        rep_out = simhash_neardup_pairs(
-            reps, max_hamming, id_col, text_col, band_bits, bits, hash_fn,
-            max_bucket, collapse_exact=False)
-        cross = (
-            rep_out
-            .join(mem.select(F.col("_rep").alias("da"),
-                             F.col("_mid").alias("_ia")), "da")
-            .join(mem.select(F.col("_rep").alias("db"),
-                             F.col("_mid").alias("_ib")), "db")
-            .select(F.least("_ia", "_ib").alias("da"),
-                    F.greatest("_ia", "_ib").alias("db"), "hamming"))
-        # null-text groups have no signature (explode of split(null) is
-        # empty), so the uncollapsed path can never pair them — exclude
-        # them from intra expansion too
-        dup_mem = mem.join(
-            reps.filter((F.col("_n") >= 2) & F.col(text_col).isNotNull())
-            .select(F.col(id_col).alias("_rep")), "_rep")
-        x, y = dup_mem.alias("x"), dup_mem.alias("y")
-        intra = (
-            x.join(y, (F.col("x._rep") == F.col("y._rep"))
-                   & (F.col("x._mid") < F.col("y._mid")))
-            .select(F.col("x._mid").alias("da"), F.col("y._mid").alias("db"),
-                    F.lit(0).cast("int").alias("hamming")))
-        return cross.unionByName(intra)
-    b = simhash_buckets(df, id_col, text_col, band_bits=band_bits,
-                        bits=bits, hash_fn=hash_fn)
-    sized = (b.groupBy("band_id", "band_key")
-             .agg(F.count("*").alias("_n"))
-             .filter((F.col("_n") >= 2) & (F.col("_n") <= max_bucket))
-             .select("band_id", "band_key"))
-    m = b.join(sized, ["band_id", "band_key"])
-    x = m.select("band_id", "band_key", F.col("doc_id").alias("da"),
-                 F.col("simhash").alias("_sa"))
-    y = m.select("band_id", "band_key", F.col("doc_id").alias("db"),
-                 F.col("simhash").alias("_sb"))
-    cands = (x.join(y, ["band_id", "band_key"])
-             .filter(F.col("da") < F.col("db"))
-             .select("da", "db",
-                     F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb")))
-                     .alias("hamming"))
-             .filter(F.col("hamming") <= max_hamming))
-    return cands.distinct()
+    assert bands * rows == num_hashes
+    return _verified_pairs(df, jaccard_threshold, max_shingle_df,
+                           collapse_exact, id_col, text_col, shingle_k,
+                           lsh=(num_hashes, bands, rows, max_bucket))
 
 
 def ngram_jaccard_pairs(
@@ -599,52 +438,123 @@ def ngram_jaccard_pairs(
     the df cap then counts document frequency over distinct content rather
     than copies (the more meaningful reading on a duplicated corpus);
     "auto" probes the duplicate rate first (resolve_collapse)."""
-    collapse_exact = resolve_collapse(df, collapse_exact, text_col)
-    if collapse_exact:
-        reps, mem = _collapse_verbatim(df, id_col, text_col)
-        # share the verified core's capped shingle index with the
-        # intra-duplicate size table instead of re-shingling the reps (r6)
-        rep_out, rep_sh = _ngram_verified_pairs(
-            reps, jaccard_threshold, max_shingle_df, id_col, text_col,
-            shingle_k)
-        rep_sz = rep_sh.groupBy("doc_id").agg(F.count("*").alias("_nsh"))
-        return _expand_verified_pairs(rep_out, mem, reps, rep_sz, id_col)
-    out, _ = _ngram_verified_pairs(df, jaccard_threshold, max_shingle_df,
-                                   id_col, text_col, shingle_k)
-    return out
+    return _verified_pairs(df, jaccard_threshold, max_shingle_df,
+                           collapse_exact, id_col, text_col, shingle_k,
+                           lsh=None)
 
 
-def _ngram_verified_pairs(
-    df: DataFrame, jaccard_threshold: float, max_shingle_df: int | None,
-    id_col: str, text_col: str, shingle_k: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Uncollapsed core of ngram_jaccard_pairs; returns ``(pairs,
-    capped_sh)`` so collapse callers derive per-rep sizes from the same
-    capped hashed shingle index the join ran over."""
+def _verified_pairs(df: DataFrame, jaccard_threshold: float,
+                    max_shingle_df: int | None, collapse_exact, id_col: str,
+                    text_col: str, shingle_k: int,
+                    lsh: tuple[int, int, int, int] | None) -> DataFrame:
+    """The collapse branch shared by minhash_neardup_pairs and
+    ngram_jaccard_pairs around _verified_jaccard."""
+    if not resolve_collapse(df, collapse_exact, text_col):
+        return _verified_jaccard(df, jaccard_threshold, max_shingle_df,
+                                 id_col, text_col, shingle_k, lsh)[0]
+    reps, mem = collapse_verbatim(df, id_col, F.md5(text_col), [text_col])
+    rep_out, rep_sh = _verified_jaccard(reps, jaccard_threshold,
+                                        max_shingle_df, id_col, text_col,
+                                        shingle_k, lsh)
+    # intra-duplicate sizes come from the capped index the core verified
+    # against (no re-shingling); the inner join skips shingle-less content
+    rep_sz = rep_sh.groupBy(F.col("doc_id").alias("_rep")) \
+        .agg(F.count("*").alias("_nsh"))
+    dup = reps.filter(F.col("_n") >= 2) \
+        .select(F.col(id_col).alias("_rep")).join(rep_sz, "_rep")
+    return expand_rep_pairs(
+        rep_out, mem, dup, "da", "db",
+        [F.col("_nsh").alias("common"), F.col("_nsh").alias("union_size")])
+
+
+def _verified_jaccard(df: DataFrame, jaccard_threshold: float,
+                      max_shingle_df: int | None, id_col: str, text_col: str,
+                      shingle_k: int, lsh: tuple[int, int, int, int] | None,
+                      ) -> tuple[DataFrame, DataFrame]:
+    """Verified-pair core: ``(pairs, capped_sh)`` where pairs are
+    (da, db, common, union_size) with common >= jaccard_threshold * union
+    over the capped (doc_id, xxhash64 shingle) index ``capped_sh``.
+
+    The index is built once — 64-bit hash key first (cheaper join compare,
+    collision odds ~m^2/2^65), then ONE pre-cap localCheckpoint:
+    compute-once without a CacheManager leak (see
+    driver_contract.q_dedup_ngram_jaccard). Only the candidate step
+    differs: ``lsh=(num_hashes, bands, rows, max_bucket)`` takes candidate
+    pairs from MinHash LSH buckets over the same (uncapped) index —
+    ``pmod(stored_hash, p)`` is bit-identical to hashing inside
+    minhash_signatures — and joins them to the index; ``lsh=None`` counts
+    common shingles of every pair sharing one (posting-list self-join)."""
     sh = (token_shingles(df, id_col, text_col, k=shingle_k)
           .select("doc_id", F.xxhash64("shingle").alias("shingle"))
           .localCheckpoint(eager=False))
+    if lsh is not None:
+        num_hashes, bands, rows, max_bucket = lsh
+        sig = minhash_signatures(sh, num_hashes=num_hashes, pre_hashed=True)
+        cands = _lsh_bucket_pairs(sig, bands, rows, max_bucket, "xxhash64")
     if max_shingle_df is not None:
         sh = cap_shingle_df(sh, max_shingle_df)
     sz = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db"))
-        .agg(F.count("*").alias("common"))
-    )
-    sa = sz.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    sb = sz.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
+    a = sh.select(F.col("doc_id").alias("da"), "shingle")
+    b = sh.select(F.col("doc_id").alias("db"), "shingle")
+    if lsh is not None:
+        joined = cands.join(a, "da").join(b, ["db", "shingle"])
+    else:
+        joined = a.join(b, "shingle").filter(F.col("da") < F.col("db"))
+    common = joined.groupBy("da", "db").agg(F.count("*").alias("common"))
     out = (
-        common.join(sa, "da").join(sb, "db")
-        .filter(F.col("common") >= F.lit(jaccard_threshold)
-                * (F.col("na") + F.col("nb") - F.col("common")))
-        .select("da", "db", "common",
-                (F.col("na") + F.col("nb") - F.col("common"))
-                .alias("union_size"))
+        common.join(sz.select(F.col("doc_id").alias("da"), F.col("n").alias("na")), "da")
+        .join(sz.select(F.col("doc_id").alias("db"), F.col("n").alias("nb")), "db")
+        .withColumn("union_size", F.col("na") + F.col("nb") - F.col("common"))
+        .filter(F.col("common") >= F.lit(jaccard_threshold) * F.col("union_size"))
     )
-    return out, sh
+    return out.select("da", "db", "common", "union_size"), sh
+
+
+def simhash_neardup_pairs(
+    df: DataFrame, max_hamming: int = 3,
+    id_col: str = "doc_id", text_col: str = "text",
+    band_bits: int = 15, bits: int = 60, hash_fn: str = "xxhash64",
+    max_bucket: int = 1000, collapse_exact: bool = False,
+) -> DataFrame:
+    """(da, db, hamming) pairs whose simhash signatures differ in at most
+    ``max_hamming`` bits — banded blocking + exact verification through
+    banded_hamming_pairs over simhash_signatures.
+
+    Recall guarantee by pigeonhole: with n_bands = bits/band_bits bands, two
+    signatures within hamming n_bands-1 leave at least one band untouched,
+    so they collide in >= 1 bucket — the default 4x15 over 60 bits makes
+    max_hamming <= 3 EXACT, not approximate. Buckets above ``max_bucket``
+    are dropped (the simhash analog of the hot-shingle guard). Verification
+    is one bit_count(xor) per candidate — no token data moves, only 8-byte
+    signatures. Bands match simhash_buckets' whenever bits % band_bits == 0
+    (signatures of <= 63 bits are non-negative, so the unsigned shift
+    equals the signed one).
+
+    ``collapse_exact``: identical texts have identical signatures, so k
+    verbatim copies multiply every bucket they touch by k — collapse to
+    representatives first and expand after, intra-duplicate pairs at
+    hamming 0 (same construction as the other dedup families); "auto"
+    probes the duplicate rate first (resolve_collapse)."""
+    assert max_hamming <= bits // band_bits - 1, \
+        "banding only guarantees recall for hamming <= n_bands - 1"
+    collapse_exact = resolve_collapse(df, collapse_exact, text_col)
+    if collapse_exact:
+        reps, mem = collapse_verbatim(df, id_col, F.md5(text_col), [text_col])
+        rep_out = simhash_neardup_pairs(
+            reps, max_hamming, id_col, text_col, band_bits, bits, hash_fn,
+            max_bucket, collapse_exact=False)
+        # null-text groups have no signature (explode of split(null) is
+        # empty), so the uncollapsed path can never pair them — exclude
+        # them from intra expansion too
+        dup = reps.filter((F.col("_n") >= 2) & F.col(text_col).isNotNull()) \
+            .select(F.col(id_col).alias("_rep"))
+        return expand_rep_pairs(rep_out, mem, dup, "da", "db",
+                                [F.lit(0).cast("int").alias("hamming")])
+    sig = simhash_signatures(df, id_col, text_col, bits=bits, hash_fn=hash_fn)
+    return banded_hamming_pairs(
+        sig, sig_col="simhash", max_hamming=max_hamming,
+        band_bits=band_bits, bits=bits, max_bucket=max_bucket,
+    ).select(F.col("a").alias("da"), F.col("b").alias("db"), "hamming")
 
 
 def _token_hash(col, hash_fn: str):
@@ -739,7 +649,8 @@ def neardup_clusters(
     ("minhash" — the 100 TB default, bucketed + capped, never all-pairs;
     "ngram" — exact, for corpora that fit the inverted-index join; "simhash")
     with ``**kw`` passed through to the generator (jaccard_threshold,
-    text_col, collapse_exact, ...).
+    text_col, collapse_exact, ...; a name the generator does not take
+    raises TypeError).
 
     Scale shape: CC is linking.connected_components — iterative DataFrame
     min-label joins, O(cluster diameter) rounds with lineage truncated per

@@ -149,8 +149,11 @@ def pack_sequences(
 
     Every step is integer arithmetic, so the layout is bit-reproducible
     across cluster sizes and row order — a packing spec is an auditable
-    artifact of a training run, and the DuckDB contract oracle reproduces
-    it with one global window (proving the decomposition exact).
+    artifact of a training run. Rows with equal ``key`` are ordered by
+    ``tiebreak_cols`` (a hash-derived key collides eventually at web-scale
+    doc counts). The DuckDB contract oracle's one global window ordered by
+    ``(shard, key)`` reproduces the layout — proving the decomposition
+    exact — only when no two rows share a key: it applies no tiebreak.
     """
     from pyspark.sql import Window
 

@@ -112,60 +112,31 @@ def _gemm_pairs(ids_a: np.ndarray, mat_a: np.ndarray,
                          "vb": np.concatenate(outs_b)})
 
 
-def _collapse_expand_vectors(df, threshold, id_col, vec_col, rep_pairs_fn):
-    """Shared verbatim-duplicate collapse for the vector near-dup operators:
-    collapse identical vectors (content key = double-seeded xxhash64 over
-    the array column, see below) to one
-    representative (min id), compute representative-level pairs with
-    ``rep_pairs_fn(reps_df)``, then expand back through the membership
-    table — cross-content pairs via two joins, intra-content pairs exactly
-    (identical nonzero vectors have cosine 1 by definition; all-zero groups
-    are skipped, their cosine is undefined and the GEMM drops them too).
-    k verbatim copies otherwise multiply pairwise GEMM work by k^2
-    (BENCH_sf16: measured 12x LSH / 2x+ exact degradation on a 16x-tiled
-    corpus)."""
-    # Checksum pass kept SLIM and computed once: the content key is a DOUBLE
-    # xxhash64 taken directly on the array column (two independent seeds =
-    # 128 combined bits, collision-safe at any corpus size like md5, but
-    # JVM-codegen'd with NO per-row stringification of the 1024-float
-    # array — the md5(cast-to-string) version measured ~1s/16k rows). The
-    # (_mid, _ck) frame is consumed by both the rep election and the
-    # membership join — checkpoint ~32 bytes/row; rep vectors are fetched
-    # back by id join afterward.
-    ck = df.select(
-        F.col(id_col).cast("long").alias("_mid"),
-        F.struct(
-            F.xxhash64(F.col(vec_col)).alias("h1"),
-            F.xxhash64(F.lit(7), F.col(vec_col)).alias("h2"),
-        ).alias("_ck"),
-    ).localCheckpoint(eager=False)
-    grp = ck.groupBy("_ck").agg(
-        F.min("_mid").alias("_rep"), F.count("*").alias("_n"))
-    reps = grp.join(
-        df.select(F.col(id_col).cast("long").alias("_rep"),
-                  F.col(vec_col).alias("_v")), "_rep")
-    rep_pairs = rep_pairs_fn(
-        reps.select(F.col("_rep").alias(id_col), F.col("_v").alias(vec_col)))
-    mem = ck.join(grp.select("_ck", "_rep"), "_ck").select("_rep", "_mid")
-    cross = (
-        rep_pairs
-        .join(mem.select(F.col("_rep").alias("va"),
-                         F.col("_mid").alias("_ia")), "va")
-        .join(mem.select(F.col("_rep").alias("vb"),
-                         F.col("_mid").alias("_ib")), "vb")
-        .select(F.least("_ia", "_ib").alias("va"),
-                F.greatest("_ia", "_ib").alias("vb"))
-    )
-    dup_mem = mem.join(
-        reps.filter((F.col("_n") >= 2) & F.exists("_v", lambda x: x != 0))
-        .select("_rep"), "_rep")
-    x, y = dup_mem.alias("x"), dup_mem.alias("y")
-    intra = (
-        x.join(y, (F.col("x._rep") == F.col("y._rep"))
-               & (F.col("x._mid") < F.col("y._mid")))
-        .select(F.col("x._mid").alias("va"), F.col("y._mid").alias("vb"))
-    )
-    return cross.unionByName(intra)
+def _collapse_expand_vectors(df, id_col, vec_col, rep_pairs_fn):
+    """Shared verbatim-duplicate collapse for the vector near-dup operators
+    (dedup.collapse_verbatim / dedup.expand_rep_pairs): collapse identical
+    vectors to one representative (min id, ids cast to long), compute
+    representative-level (va, vb) pairs with ``rep_pairs_fn(reps_df)``,
+    then expand back — intra-content pairs exactly (identical nonzero
+    vectors have cosine 1 by definition; all-zero groups are skipped, their
+    cosine is undefined and the GEMM drops them too). k verbatim copies
+    otherwise multiply pairwise GEMM work by k^2 (BENCH_sf16: measured 12x
+    LSH / 2x+ exact degradation on a 16x-tiled corpus)."""
+    from .dedup import collapse_verbatim, expand_rep_pairs
+
+    # content key: a DOUBLE xxhash64 taken directly on the array column
+    # (two independent seeds = 128 combined bits, collision-safe at any
+    # corpus size like md5, but JVM-codegen'd with NO per-row
+    # stringification of the 1024-float array — the md5(cast-to-string)
+    # version measured ~1s/16k rows)
+    key = F.struct(F.xxhash64(F.col(vec_col)).alias("h1"),
+                   F.xxhash64(F.lit(7), F.col(vec_col)).alias("h2"))
+    d = df.select(F.col(id_col).cast("long").alias(id_col), vec_col)
+    reps, mem = collapse_verbatim(d, id_col, key, [vec_col])
+    dup = reps.filter((F.col("_n") >= 2)
+                      & F.exists(vec_col, lambda x: x != 0)) \
+        .select(F.col(id_col).alias("_rep"))
+    return expand_rep_pairs(rep_pairs_fn(reps), mem, dup, "va", "vb")
 
 
 def cosine_allpairs(
@@ -202,7 +173,7 @@ def cosine_allpairs(
     collapse_exact = resolve_collapse(df, collapse_exact, vec_col)
     if collapse_exact:
         return _collapse_expand_vectors(
-            df, threshold, id_col, vec_col,
+            df, id_col, vec_col,
             lambda reps: cosine_allpairs(reps, threshold, id_col, vec_col,
                                          n_blocks, collapse_exact=False))
     B = int(n_blocks)
@@ -280,7 +251,7 @@ def cosine_neardup_lsh(
     collapse_exact = resolve_collapse(df, collapse_exact, vec_col)
     if collapse_exact:
         return _collapse_expand_vectors(
-            df, threshold, id_col, vec_col,
+            df, id_col, vec_col,
             lambda reps: cosine_neardup_lsh(
                 reps, threshold, id_col, vec_col, n_planes, n_tables, seed,
                 max_bucket, collapse_exact=False))

@@ -425,17 +425,19 @@ def fit_lm_unigram(
     broadcastable by construction), and oov_cost is the hapax cost. Fit it
     once on a reference corpus, then score any number of snapshots.
     ``pre_counted=True`` takes a (tok, cnt) frequency table instead of raw
-    documents. One scalar driver action (the corpus token total)."""
+    documents; the caller owns its persistence (the table is read twice,
+    so pass a checkpointed one). One scalar driver action (the corpus
+    token total)."""
     import math
 
-    cnt = df if pre_counted else (
-        df.select(F.explode(_tokens(text_col)).alias("tok"))
-        .groupBy("tok").agg(F.count("*").alias("cnt")))
     # the count table is vocabulary-sized, not corpus-sized — persist it so
     # the total below and the vocab cut share ONE aggregation pass (r6: the
     # lazy version re-ran the corpus explode+agg when the vocab frame was
     # broadcast by the scorer)
-    cnt = cnt.localCheckpoint(eager=False)
+    cnt = df if pre_counted else (
+        df.select(F.explode(_tokens(text_col)).alias("tok"))
+        .groupBy("tok").agg(F.count("*").alias("cnt"))
+        .localCheckpoint(eager=False))
     total = cnt.agg(F.sum("cnt")).collect()[0][0]
     vocab = (
         cnt.orderBy(F.desc("cnt"), "tok").limit(vocab_size)
@@ -498,14 +500,15 @@ def lm_unigram_score(
         vocab, oov_cost = model
     else:
         # fit-on-self is inherently two-pass (fit, then score); the fit's
-        # vocabulary-count table is checkpointed inside fit_lm_unigram so
-        # the total and the vocab cut share one aggregation pass. The
-        # corpus-sized (doc, token) table is deliberately NOT persisted:
-        # re-deriving it (explode + map-side-combined agg) is cheaper at
-        # scale than writing it to the checkpoint store (r6 A/B at sf0.1:
-        # within noise either way).
+        # vocabulary-count table is checkpointed here so the total and the
+        # vocab cut share one aggregation pass. The corpus-sized
+        # (doc, token) table is deliberately NOT persisted: re-deriving it
+        # (explode + map-side-combined agg) is cheaper at scale than
+        # writing it to the checkpoint store (r6 A/B at sf0.1: within noise
+        # either way).
         vocab, oov_cost = fit_lm_unigram(
-            dcnt.groupBy("tok").agg(F.sum("c").alias("cnt")),
+            dcnt.groupBy("tok").agg(F.sum("c").alias("cnt"))
+            .localCheckpoint(eager=False),
             vocab_size=vocab_size, pre_counted=True)
     out = (
         dcnt.join(F.broadcast(vocab), "tok", "left")
@@ -572,7 +575,7 @@ def fit_lm_bigram(
     # the unigram count table feeds BOTH the vocab fit and the bigram
     # denominator join below — checkpoint it (vocabulary-sized, bounded)
     # so the corpus-sized explode+agg runs once, not once per consumer (r6;
-    # same fix as fit_lm_unigram's internal count checkpoint)
+    # fit_lm_unigram reads it as is)
     uni = (toks.select(F.explode(t).alias("tok"))
            .groupBy("tok").agg(F.count("*").alias("cnt"))
            .localCheckpoint(eager=False))

@@ -279,18 +279,6 @@ def test_curate_corpus_substr_dedup_stage(spark):
     assert len(holders) == 1
 
 
-def test_curate_corpus_seal_every_equivalence(spark):
-    """seal_every only changes WHERE lineage is truncated, never the
-    output: a sparser sealing policy must produce identical docs."""
-    d = _corpus(spark)
-    a = sorted(map(tuple, curate_corpus(
-        d, url_col="url", boilerplate_max_df_frac=0.2)["docs"].collect()))
-    b = sorted(map(tuple, curate_corpus(
-        d, url_col="url", boilerplate_max_df_frac=0.2,
-        seal_every=3)["docs"].collect()))
-    assert a == b
-
-
 def test_run_curation_job_staged_equals_monolithic_and_resumes(spark, tmp_path):
     """The 3-group materialized runner produces exactly the single-shot
     curate_corpus output, and a killed job resumes from the last committed

@@ -237,6 +237,17 @@ def test_minhash_verified_pairs_match_exact(spark, docs):
     assert len(verified) >= 0.95 * len(exact)
 
 
+def test_minhash_kwarg_typo_raises(spark, docs):
+    """LSH parameters are explicit keywords: a misspelled one raises
+    instead of silently running with the default banding."""
+    from knowledge_graph_studio_spark.operators.dedup import neardup_clusters
+
+    with pytest.raises(TypeError, match="num_hash"):
+        minhash_neardup_pairs(docs, num_hash=128)
+    with pytest.raises(TypeError, match="num_hash"):
+        neardup_clusters(docs, method="minhash", num_hash=128)
+
+
 def test_cap_shingle_df_kills_template_skew(spark):
     """A template shingle shared by every doc (web boilerplate) must be
     dropped by the cap, collapsing the f^2 candidate explosion, while a

@@ -134,6 +134,31 @@ def test_pack_sequences_deterministic_under_repartition(spark):
     assert a == b
 
 
+def test_pack_sequences_key_collisions_deterministic(spark):
+    """Colliding keys (equal key_col, distinct ids — a hash key's 64-bit
+    collision) are ordered by tiebreak_cols: the layout equals the
+    (key, id) reference and does not depend on partitioning."""
+    d = spark.range(120).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 4).alias("key"),
+        ((F.col("id") * 37 % 90) + 1).alias("n_tokens"),
+        F.floor(F.col("id") % 4 / 2).alias("shard"))
+    rows = [(r["key"], r["doc_id"], r["n_tokens"]) for r in d.collect()]
+    want = _py_pack([(key * 1000 + i, n) for key, i, n in rows], 50)
+
+    def layout(frame):
+        return sorted(
+            (r["doc_id"], r["cum_before"], r["seq_id"], r["seq_offset"],
+             r["seq_end_id"], r["n_seqs_spanned"])
+            for r in pack_sequences(frame, 50, key_col="key",
+                                    shard_col="shard",
+                                    tiebreak_cols=("doc_id",)).collect())
+
+    a = layout(d)
+    assert a == layout(d.repartition(7)) == layout(d.repartition(3, "key"))
+    assert a == sorted((i, *want[key * 1000 + i]) for key, i, _ in rows)
+
+
 def test_packing_report(spark):
     d = _tok_corpus(spark, 200)
     packed = pack_sequences(d, 128, shard_col="shard")

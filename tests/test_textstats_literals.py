@@ -314,6 +314,26 @@ def test_lm_bigram_partition_invariant(spark):
     assert a == b
 
 
+def test_fit_lm_bigram_checkpoints_count_table_once(spark, monkeypatch):
+    """fit_lm_bigram checkpoints its unigram count table and hands it to
+    fit_lm_unigram(pre_counted=True), which stores no second copy."""
+    from knowledge_graph_studio_spark.operators.textstats import (
+        fit_lm_bigram)
+
+    d = _bi_docs(spark)
+    cls = type(d)  # the session's concrete DataFrame class
+    calls = []
+    orig = cls.localCheckpoint
+
+    def counting(self, *a, **kw):
+        calls.append(1)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, "localCheckpoint", counting)
+    fit_lm_bigram(d, vocab_size=100, bigram_size=100)
+    assert len(calls) == 1
+
+
 def test_exact_quantiles_reference(spark):
     import math
 
