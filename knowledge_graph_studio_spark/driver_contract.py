@@ -29,6 +29,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .functions.literals import literal_array, literal_df
+from .functions.vector import cosine_col
+
 # deterministic gazetteer over the driver's `documents` vocabulary
 GAZ_TERMS = [
     "spark", "join", "filter", "window", "merge", "sort", "hash", "stream",
@@ -66,20 +69,6 @@ def _cents(col) -> F.Column:
 
 def _tokens(col="text"):
     return F.split(F.col(col), " ")
-
-
-def _cosine(a, b) -> F.Column:
-    """Exact cosine over array<float> cast to double (JVM-side fold — no UDF).
-    Matches DuckDB list_cosine_similarity on ::DOUBLE[] casts."""
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.aggregate(F.transform(ad, lambda x: x * x),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    nb = F.aggregate(F.transform(bd, lambda x: x * x),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    return dot / (F.sqrt(na) * F.sqrt(nb))
 
 
 # --------------------------------------------------------------------------- #
@@ -175,7 +164,8 @@ def q_topk_cosine(spark, sf):
     q = e.filter(F.col("vec_id") == 0).select(
         F.col("embedding").alias("qvec"))
     scored = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q)).select(
-        "vec_id", "label", _cosine(F.col("embedding"), F.col("qvec")).alias("score")
+        "vec_id", "label",
+        cosine_col(F.col("embedding"), F.col("qvec")).alias("score")
     )
     return (
         scored.orderBy(F.desc("score"), F.asc("vec_id")).limit(20)
@@ -205,13 +195,11 @@ def q_semi_join_filter(spark, sf):
 def q_anti_join_validate(spark, sf):
     """E7 triple-vs-pattern validation (graph_service.py:2613-2670) as a
     left-anti join against a broadcast literal pattern set."""
-    from .functions.literals import literal_df
-
     p = _read(spark, sf, "part")
     pats = F.broadcast(literal_df(
         spark,
         [("Brand#1", "ECONOMY"), ("Brand#2", "STANDARD"), ("Brand#3", "SMALL")],
-        ["p_brand", "p_type"],
+        "p_brand string, p_type string",
     ))
     return (
         p.join(pats, ["p_brand", "p_type"], "left_anti")
@@ -654,7 +642,8 @@ def q_domain_filter(spark, sf):
     (om1.com) that must NOT catch dom1.com by mere string-suffix match."""
     from .operators.cleaning import domain_filter
 
-    blocked = spark.createDataFrame(
+    blocked = literal_df(
+        spark,
         [("dom0.com",), ("dom3.co.uk",), ("h1.dom2.com",), ("om1.com",)],
         "domain string")
     return domain_filter(_domain_urls(spark, sf), blocked, mode="tag")
@@ -935,7 +924,7 @@ def q_hybrid_rrf_topk(spark, sf):
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     scored = e.filter(F.col("vec_id") != 0).crossJoin(F.broadcast(q)).select(
         F.col("vec_id").alias("doc_id"),
-        _cosine(F.col("embedding"), F.col("qvec")).alias("score"))
+        cosine_col(F.col("embedding"), F.col("qvec")).alias("score"))
     top = scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(_RRF_POOL)
     wv = Window.orderBy(F.desc("score"), F.asc("doc_id"))
     vecr = top.select("doc_id", F.row_number().over(wv).alias("rank"))
@@ -949,7 +938,7 @@ def q_hybrid_rrf_topk(spark, sf):
 
 def _mentions(spark, sf):
     d = _read(spark, sf, "documents")
-    gaz = F.array(*[F.lit(t) for t in GAZ_TERMS])
+    gaz = literal_array(GAZ_TERMS, "string")
     return (
         d.select("doc_id", F.explode(_tokens()).alias("token"))
         .filter(F.array_contains(gaz, F.col("token")))
@@ -1212,8 +1201,6 @@ def q_kg_triple_topk_hashed(spark, sf):
     in DuckDB, top-10 with deterministic tie-break. The float V2 embedder
     path stays covered by kg_triple_topk (rows-only) and the embedder
     determinism tests."""
-    from .functions.literals import literal_df
-
     qv, nq = _hashed_query_vector(_TOPK_QUERY, _TOPK_DIM)
     t = q_kg_cooccurrence(spark, sf)
     verb = t.select(
@@ -1231,8 +1218,7 @@ def q_kg_triple_topk_hashed(spark, sf):
                F.lit(1)).otherwise(F.lit(-1)).alias("s"))
     vec = kv.groupBy("head", "tail", "bucket").agg(F.sum("s").alias("v"))
     na = vec.groupBy("head", "tail").agg(F.sum(F.col("v") * F.col("v")).alias("na"))
-    q_df = F.broadcast(literal_df(spark, [(b, v) for b, v in qv],
-                                  ["bucket", "qv"]))
+    q_df = F.broadcast(literal_df(spark, qv, "bucket int, qv int"))
     dot = (vec.join(q_df, "bucket")
            .groupBy("head", "tail")
            .agg(F.sum(F.col("v") * F.col("qv")).alias("dot")))
@@ -1252,7 +1238,6 @@ def q_kg_query_text_hashed(spark, sf):
     -> Q13 relevance_filter (the real token-overlap operator) -> Q12
     hydrate_triples. The float-embedder + ANN-index variant of this path
     stays covered by kg_query_text (rows-only) and the recall tests."""
-    from .functions.literals import literal_df
     from .plans.query import hydrate_triples, relevance_filter, structured_filter
 
     qv, nq = _hashed_query_vector(_TOPK_QUERY, _TOPK_DIM)
@@ -1277,8 +1262,7 @@ def q_kg_query_text_hashed(spark, sf):
                F.lit(1)).otherwise(F.lit(-1)).alias("s"))
     vec = kv.groupBy("edge_id", "bucket").agg(F.sum("s").alias("v"))
     na = vec.groupBy("edge_id").agg(F.sum(F.col("v") * F.col("v")).alias("na"))
-    q_df = F.broadcast(literal_df(spark, [(b, v) for b, v in qv],
-                                  ["bucket", "qv"]))
+    q_df = F.broadcast(literal_df(spark, qv, "bucket int, qv int"))
     dot = (vec.join(q_df, "bucket")
            .groupBy("edge_id").agg(F.sum(F.col("v") * F.col("qv")).alias("dot")))
     scored = (verb.join(dot, "edge_id").join(na, "edge_id")

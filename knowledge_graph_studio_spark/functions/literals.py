@@ -1,46 +1,67 @@
-"""JVM-literal construction of tiny DataFrames.
+"""The one way for driver-side values to enter a plan.
 
-``spark.createDataFrame(small_list)`` parallelizes into defaultParallelism
-partitions — on a 32-core session that is a 32-task job, each task spinning a
-Python worker, to ship a handful of rows. Measured on this box: ~5s cold for
-an 8-row alias map (tools/scaling_bench.py investigation). For the broadcast
-dimensions the KG pipeline uses constantly (rule alias maps, canonical-name
-mappings, pattern sets) that overhead dwarfs the data.
+Small driver-side sets (alias maps, schema patterns, query vectors, id and
+term lists) become plan literals here and nowhere else:
 
-``literal_df`` instead inlines the rows as a Catalyst literal
-array-of-structs exploded from a single-row range: one JVM-only task, zero
-Python workers, zero shuffle — the plan carries the data. Use for <= ~10k
-rows; beyond that, real parallelize wins (plan size grows linearly).
+* ``literal_df(spark, rows, schema)`` -> a DataFrame of ``rows``;
+* ``literal_array(values, element_type)`` -> an array Column.
+
+Both render the values as ONE JSON string and parse it with
+``from_json(..., {"mode": "FAILFAST"})`` against an explicit type (a DDL
+string or a DataType; nothing is inferred from the Python values). Catalyst
+folds the parse to a single Literal, the value a per-element
+``array(lit(..), ...)`` tree folds to (its elements typed nullable), and
+building it costs a constant ~20 py4j calls instead of several per element
+(a 1,000-row, 3-column frame: 21 calls against 63,767; a 1,024-d vector: 8
+against 2,053). FAILFAST turns a value that does not fit the type (a string
+in an int field, an int64 in an ``int``) into an error when the plan runs,
+never a silent NULL. A frame is one partition of one JVM task: no Python
+worker, no shuffle.
+
+Filters on an id set keep ``Column.isin(values)``: parquet pushes an ``In``
+over literals down to the scan, and a folded array literal would not be
+pushed. Beyond ``LITERAL_DF_MAX_ROWS`` rows a frame is parallelized with
+``createDataFrame`` instead, because the plan carries the whole literal.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+import json
+from collections.abc import Iterable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 LITERAL_DF_MAX_ROWS = 10_000
 
+_FAILFAST = {"mode": "FAILFAST"}
 
-def literal_df(
-    spark: SparkSession, rows: Sequence[tuple], cols: Sequence[str]
-) -> DataFrame:
-    """Tiny DataFrame as a pure Catalyst literal (no Python workers).
 
-    Values must be plain scalars (str/int/float/bool/None). Falls back to
-    createDataFrame beyond LITERAL_DF_MAX_ROWS."""
+def _parsed(value, data_type: T.DataType | str) -> Column:
+    return F.from_json(F.lit(json.dumps(value)), data_type, _FAILFAST)
+
+
+def literal_array(values: Iterable, element_type: T.DataType | str) -> Column:
+    """``values`` as one array literal of ``element_type`` (a DDL type
+    string such as ``"bigint"`` or ``"struct<a: string, b: array<string>>"``,
+    or a DataType). Values must be JSON-serializable: plain scalars, lists,
+    and dicts keyed by struct field names."""
+    t = (f"array<{element_type}>" if isinstance(element_type, str)
+         else T.ArrayType(element_type))
+    return _parsed(list(values), t)
+
+
+def literal_df(spark: SparkSession, rows: Sequence[tuple],
+               schema: T.StructType | str) -> DataFrame:
+    """``rows`` (tuples in ``schema`` field order) as a one-partition
+    DataFrame of ``schema`` (a DDL string or a StructType). Empty ``rows``
+    give a typed empty frame of the same plan shape, which the optimizer
+    does not prune, so a consumer's joins stay in its plan."""
     if len(rows) > LITERAL_DF_MAX_ROWS:
-        return spark.createDataFrame(rows, list(cols))
-    if not rows:
-        raise ValueError("literal_df needs at least one row (or use an "
-                         "explicit empty-schema createDataFrame)")
-    structs = F.array(*[
-        F.struct(*[F.lit(v).alias(c) for v, c in zip(row, cols)])
-        for row in rows
-    ])
-    return (
-        spark.range(0, 1, 1, 1)  # exactly one partition — one JVM task
-        .select(F.explode(structs).alias("_s"))
-        .select(*[F.col(f"_s.{c}").alias(c) for c in cols])
-    )
+        return spark.createDataFrame(list(rows), schema)
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arr = _parsed([dict(zip(schema.names, r)) for r in rows],
+                  T.ArrayType(schema))
+    return spark.range(0, 1, 1, 1).select(F.inline(arr))

@@ -26,6 +26,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.literals import literal_df
+
 MANIFEST_DIR = "_manifest"
 
 # Orphaned-.tmp sweep grace period: a temp file younger than this is presumed
@@ -306,7 +308,7 @@ class QueryLog:
             for f in os.listdir(self.dir) if f.endswith(".json")
         )
         if not files:
-            return spark.createDataFrame([], self.SCHEMA)
+            return literal_df(spark, [], self.SCHEMA)
         return spark.read.schema(self.SCHEMA).json(files)
 
     def prune(self, before_ts: float | None = None,

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.literals import literal_array
+
 # reference chunk schema: tags is dict[workspace_id, list[str]]
 # (schemas/chunks.py:80), user_metadata dict[str, ...] (:81-88) — typed here
 # as map<string,string>; richer values arrive as JSON strings.
@@ -173,7 +175,7 @@ def rows_to_object_chunks(df: DataFrame, url_col: str = "url") -> DataFrame:
         F.lit("object").alias("data_type"),
         F.lit(None).cast("string").alias("content"),
         F.map_from_arrays(
-            F.array(*[F.lit(c) for c in cells]),
+            literal_array(cells, "string"),
             F.array(*[F.col(c).cast("string") for c in cells]),
         ).alias("content_obj"),
         F.lit(None).cast("int").alias("start"),

@@ -30,6 +30,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.literals import literal_array
+
 
 def _sep_pattern(sep: str) -> str:
     """F.split takes a REGEX while concat_ws reassembles with the literal
@@ -394,8 +396,8 @@ def registered_domain_col(host, extra_suffixes: tuple[str, ...] = ()):
     n = F.size(labels)
     last2 = F.concat_ws(".", F.slice(labels, F.greatest(n - 1, F.lit(1)), 2))
     last3 = F.concat_ws(".", F.slice(labels, F.greatest(n - 2, F.lit(1)), 3))
-    sufs = F.array(*[F.lit(s) for s in
-                     tuple(TWO_LEVEL_SUFFIXES) + tuple(extra_suffixes)])
+    sufs = literal_array(tuple(TWO_LEVEL_SUFFIXES) + tuple(extra_suffixes),
+                         "string")
     return (
         F.when((n >= 3) & F.array_contains(sufs, last2), last3)
         .when(n >= 2, last2)

@@ -78,7 +78,7 @@ def cap_shingle_df(sh: DataFrame, max_df: int, log: bool = True) -> DataFrame:
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     hot = dfreq.filter(F.col("df") > max_df)
     if log:
-        from ..functions.literals import LITERAL_DF_MAX_ROWS
+        from ..functions.literals import LITERAL_DF_MAX_ROWS, literal_df
 
         # ordered, so the bound is one top-k job: a bare limit() collect
         # runs incremental take jobs over growing partition subsets
@@ -98,18 +98,10 @@ def cap_shingle_df(sh: DataFrame, max_df: int, log: bool = True) -> DataFrame:
                 len(rows), max_df, rows[0]["df"])
         else:
             _LOG.info("cap_shingle_df: cap %d did not bind", max_df)
-        spark = sh.sparkSession
-        dt = sh.schema["shingle"].dataType
-        if rows:
-            # one JVM-literal relation, every element cast to the shingle
-            # column's exact type (a 64-bit hash that happens to fit an int
-            # would otherwise type-drift the literal)
-            vals = F.array(*[F.lit(r["shingle"]).cast(dt) for r in rows])
-            hot_lit = (spark.range(0, 1, 1, 1)
-                       .select(F.explode(vals).alias("shingle")))
-        else:  # typed empty literal (hash family may be long or string)
-            hot_lit = spark.createDataFrame(
-                [], T.StructType([T.StructField("shingle", dt)]))
+        # typed as the shingle column (a 64-bit hash family or a string)
+        hot_lit = literal_df(
+            sh.sparkSession, [(r["shingle"],) for r in rows],
+            T.StructType([sh.schema["shingle"]]))
         return sh.join(F.broadcast(hot_lit), "shingle", "left_anti")
     return sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
 
@@ -686,18 +678,12 @@ def neardup_clusters(
     if len(head) <= DRIVER_CC_MAX_PAIRS:
         comp = connected_components_driver(
             [(r["da"], r["db"]) for r in head])
-        spark = pairs.sparkSession
-        dt = p.schema["da"].dataType
-        if not comp:
-            return spark.createDataFrame(
-                [], T.StructType([T.StructField("member", dt),
-                                  T.StructField("component", dt)]))
         from ..functions.literals import literal_df
 
-        lab = literal_df(spark, sorted(comp.items()),
-                         ["member", "component"])
-        return lab.select(F.col("member").cast(dt),
-                          F.col("component").cast(dt))
+        dt = p.schema["da"].dataType
+        return literal_df(pairs.sparkSession, sorted(comp.items()),
+                          T.StructType([T.StructField("member", dt),
+                                        T.StructField("component", dt)]))
     return connected_components(p, src="da", dst="db")
 
 

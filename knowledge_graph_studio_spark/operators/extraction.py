@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.literals import literal_array, literal_df
+
 PROPS = T.MapType(T.StringType(), T.ArrayType(T.StringType()))
 
 TRIPLES_SCHEMA = T.StructType(
@@ -179,20 +181,11 @@ def extract_structured_triples(
     come from the pattern's field columns ("Unnamed" when absent — the
     reference stringifies None the same way, :967,977); listed property keys
     are pulled from the row. Pure column ops: broadcast patterns -> explode."""
-    pat_rows = F.array(
-        *[
-            F.struct(
-                F.lit(p["head_type"]).alias("head_type"),
-                F.lit(p["head_field"]).alias("head_field"),
-                F.array(*[F.lit(x) for x in p["head_props"]]).alias("head_props"),
-                F.lit(p["relation"]).alias("relation"),
-                F.lit(p["tail_type"]).alias("tail_type"),
-                F.lit(p["tail_field"]).alias("tail_field"),
-                F.array(*[F.lit(x) for x in p["tail_props"]]).alias("tail_props"),
-            )
-            for p in patterns
-        ]
-    )
+    pat_rows = literal_array(
+        patterns,
+        "struct<head_type: string, head_field: string, "
+        "head_props: array<string>, relation: string, tail_type: string, "
+        "tail_field: string, tail_props: array<string>>")
 
     def props_for(keys_col, src=F.col("content_obj")):
         # map over the listed property keys, keeping only present ones
@@ -302,16 +295,10 @@ def validate_triples(
 ) -> tuple[DataFrame, DataFrame]:
     """E7 (graph_service.py:2613-2670): split triples into (valid, violating)
     by left-anti join against the broadcast pattern set."""
-    from ..functions.literals import literal_df
-
-    spark = triples.sparkSession
-    pat_df = F.broadcast(
-        literal_df(
-            spark,
-            [(p["head_type"], p["relation"], p["tail_type"]) for p in patterns],
-            ["head_type", "relation", "tail_type"],
-        )
-    )
+    pat_df = F.broadcast(literal_df(
+        triples.sparkSession,
+        [(p["head_type"], p["relation"], p["tail_type"]) for p in patterns],
+        "head_type string, relation string, tail_type string"))
     on = ["head_type", "relation", "tail_type"]
     valid = triples.join(pat_df, on, "left_semi")
     invalid = triples.join(pat_df, on, "left_anti")

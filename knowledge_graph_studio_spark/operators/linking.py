@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.literals import literal_array, literal_df
 from .extraction import PROPS
 
 NODE_KEY = ["name", "type"]
@@ -53,17 +54,13 @@ def rules_to_alias_df(spark: SparkSession, rules: list) -> DataFrame:
 
     Built as a JVM literal (functions/literals.py): workspace rule sets are
     tiny, and a parallelize here costs a cold Python-worker fan-out per query."""
-    from ..functions.literals import literal_df
-
     rows = [
         (fn, r.node_type, r.to_node_name)
         for r in rules
         for fn in r.from_node_names
     ]
-    if not rows:
-        return spark.createDataFrame(
-            [], "from_name string, node_type string, to_name string")
-    return literal_df(spark, rows, ["from_name", "node_type", "to_name"])
+    return literal_df(spark, rows,
+                      "from_name string, node_type string, to_name string")
 
 
 def apply_merge_rules(triples: DataFrame, alias_df: DataFrame) -> DataFrame:
@@ -513,17 +510,12 @@ def canonical_mapping(
         comp = connected_components_driver(
             [((r["src"], r["type"]), (r["dst"], r["type"])) for r in head])
         pairs.unpersist()
-        if not comp:
-            return spark.createDataFrame(
-                [], "name string, type string, canonical_name string")
         if len(comp) <= DRIVER_FINALIZE_MAX_MEMBERS:
             return _finalize_mapping_driver(spark, names, comp)
-        from ..functions.literals import literal_df
-
         cc = F.broadcast(literal_df(
             spark,
             [(m[0], m[1], f"{c[0]}|{c[1]}") for m, c in comp.items()],
-            ["name", "type", "component"]))
+            "name string, type string, component string"))
         clustered = names.join(cc, ["name", "type"], "inner")
     else:
         cc = connected_components(
@@ -567,10 +559,8 @@ def _finalize_mapping_driver(spark, names: DataFrame, comp: dict) -> DataFrame:
     Members absent from ``names`` (e.g. an alias rule whose from-name never
     got extracted) are excluded from both representative candidacy and the
     output, matching the distributed path's inner join."""
-    from ..functions.literals import literal_df
-
     members_df = F.broadcast(literal_df(
-        spark, [(name, typ) for name, typ in comp], ["name", "type"]))
+        spark, [(name, typ) for name, typ in comp], "name string, type string"))
     present = {
         (r["name"], r["type"]): r["freq"]
         for r in names.join(members_df, ["name", "type"], "inner")
@@ -584,11 +574,8 @@ def _finalize_mapping_driver(spark, names: DataFrame, comp: dict) -> DataFrame:
     for root, ms in by_root.items():
         rep = min(ms, key=lambda m: (-present[m], m[0]))[0]
         rows.extend((name, typ, rep) for name, typ in ms if name != rep)
-    if not rows:
-        return spark.createDataFrame(
-            [], "name string, type string, canonical_name string")
     return literal_df(spark, sorted(rows),
-                      ["name", "type", "canonical_name"])
+                      "name string, type string, canonical_name string")
 
 
 def apply_canonical_mapping(triples: DataFrame, mapping: DataFrame) -> DataFrame:
@@ -1106,7 +1093,7 @@ def merge_nodes_interactive(
     property merge, graph_service.py:645-691), so the returned edges are
     re-aggregated through the same law and edge_id is recomputed. Repointed
     endpoints take the merged target node's name/type."""
-    from_lit = F.array(*[F.lit(i) for i in from_ids])
+    from_lit = literal_array(from_ids, "bigint")
     group = nodes.withColumn("_orig_id", F.col("node_id")).withColumn(
         "node_id",
         F.when(F.array_contains(from_lit, F.col("node_id")), F.lit(to_id))

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.literals import literal_df
+
 # parts-per-million rate resolution: rates are snapped to integers so the
 # gate compares integers (no float threshold can sit on a hash value)
 MIX_DENOM = 1_000_000
@@ -172,9 +174,8 @@ def pack_sequences(
     for r in totals:
         prefix.append((r["_shard"], acc))
         acc += r["_tot"] or 0
-    spark = df.sparkSession
-    prefix_df = F.broadcast(
-        spark.createDataFrame(prefix, "_shard bigint, _prefix bigint"))
+    prefix_df = F.broadcast(literal_df(df.sparkSession, prefix,
+                                       "_shard bigint, _prefix bigint"))
 
     # tiebreak_cols break key ties deterministically: a hash-derived key
     # (e.g. curation's _pk = xxhash64(id, copy)) collides eventually at

@@ -26,17 +26,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
-
-def cosine_col(a, b) -> F.Column:
-    ad = F.transform(a, lambda x: x.cast("double"))
-    bd = F.transform(b, lambda x: x.cast("double"))
-    dot = F.aggregate(F.zip_with(ad, bd, lambda x, y: x * y),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    na = F.aggregate(F.transform(ad, lambda x: x * x),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    nb = F.aggregate(F.transform(bd, lambda x: x * x),
-                     F.lit(0.0), lambda acc, x: acc + x)
-    return dot / (F.sqrt(na) * F.sqrt(nb))
+from ..functions.literals import literal_array
+from ..functions.vector import cosine_col
 
 
 def brute_force_topk(
@@ -482,7 +473,7 @@ def _int_dot(r_col, plane: list[int]) -> F.Column:
     """sum_i r_i * p_i with the plane embedded as an int array literal —
     exact int64 arithmetic, order-independent, one per-row fold (no join,
     no shuffle, no Python)."""
-    p = F.array(*[F.lit(v).cast("long") for v in plane])
+    p = literal_array(plane, "bigint")
     return F.aggregate(F.zip_with(r_col, p, lambda a, b: a * b),
                        F.lit(0).cast("long"), lambda acc, x: acc + x)
 

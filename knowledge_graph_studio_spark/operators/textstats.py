@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.literals import literal_array
+
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "that"]
 
 
@@ -29,7 +31,7 @@ def lang_id(df: DataFrame, text_col: str = "text",
     At web scale this is the cheap first-pass filter before any model-based
     LID; the `lang` column of the pages table is its batch output."""
     toks = _tokens(text_col)
-    stop_arr = F.array(*[F.lit(s) for s in EN_STOPWORDS])
+    stop_arr = literal_array(EN_STOPWORDS, "string")
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
     return df.select(
         *id_cols,
@@ -97,7 +99,7 @@ def gopher_filter(
     sym_x100 = F.floor(n_sym * 100 / safe_n).cast("bigint")
     n_alpha = F.size(F.filter(toks, lambda t: t.rlike("[A-Za-z]")))
     alpha_x100 = F.floor(n_alpha * 100 / safe_n).cast("bigint")
-    stop_arr = F.array(*[F.lit(s) for s in GOPHER_STOPWORDS])
+    stop_arr = literal_array(GOPHER_STOPWORDS, "string")
     stop_hits = F.size(F.array_intersect(F.array_distinct(toks), stop_arr))
 
     fails = F.filter(
@@ -699,7 +701,7 @@ def exact_quantiles(
     # per-q filters over the same window subtree would re-derive the melt
     # and the global per-metric sort once per quantile (the oracle's
     # unnest([...]) is the same shape)
-    qarr = F.array(*[F.lit(int(q)).cast("long") for q in qs_x100])
+    qarr = literal_array([int(q) for q in qs_x100], "bigint")
     return (
         ranked.select("metric", "value", "rk", "n",
                       F.explode(qarr).alias("q_x100"))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.literals import literal_array, literal_df
+
 
 def delete_graph(df: DataFrame, graph: str) -> DataFrame:
     """L8: drop every row of one graph (apply to nodes AND edges tables;
@@ -33,8 +35,8 @@ def assign_chunks(
     rows. Returns (new_table, report) where report partitions the request into
     assigned / already_assigned / not_found — the same tri-state response the
     reference builds (services/crud/chunks.py:562-652)."""
-    ids = F.array(*[F.lit(i) for i in target_ids])
-    adds = F.array(*[F.lit(c) for c in chunk_ids])
+    ids = literal_array(target_ids, table.schema[id_col].dataType)
+    adds = literal_array(chunk_ids, "string")
     matched = F.array_contains(ids, F.col(id_col))
     new_table = table.withColumn(
         "chunks",
@@ -49,11 +51,8 @@ def assign_chunks(
     )
     found = {r["target_id"] for r in present.select("target_id").collect()}
     missing = [(i, "not_found", [], []) for i in target_ids if i not in found]
-    report = present
-    if missing:
-        spark = table.sparkSession
-        report = present.unionByName(spark.createDataFrame(
-            missing, present.schema))
+    report = present.unionByName(
+        literal_df(table.sparkSession, missing, present.schema))
     return new_table, report
 
 
@@ -62,8 +61,8 @@ def unassign_chunks(
     id_col: str = "node_id",
 ) -> DataFrame:
     """L9 $pull analog: remove chunk_ids from the matched rows' chunks."""
-    ids = F.array(*[F.lit(i) for i in target_ids])
-    removes = F.array(*[F.lit(c) for c in chunk_ids])
+    ids = literal_array(target_ids, table.schema[id_col].dataType)
+    removes = literal_array(chunk_ids, "string")
     return table.withColumn(
         "chunks",
         F.when(F.array_contains(ids, F.col(id_col)),

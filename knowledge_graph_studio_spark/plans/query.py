@@ -33,8 +33,10 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.embedding_core import TRIPLE_DIM, embed_text
+from ..functions.literals import literal_array, literal_df
 from ..functions.vector import cosine_col
 
 
@@ -169,7 +171,8 @@ def similarity_search(
     Catalyst to walk on every execution."""
     qv = embed_text(query_text, TRIPLE_DIM).astype("float64")
     scored = edges_with_embedding.withColumn(
-        "score", cosine_col(F.col("embedding"), F.lit(qv))
+        "score", cosine_col(F.col("embedding"),
+                            literal_array(qv.tolist(), "double"))
     )
     return scored.orderBy(F.desc("score"), F.asc("edge_id")).limit(k)
 
@@ -239,7 +242,8 @@ class EdgeAnnIndex:
         """Materialize so queries probe parquet (pushed IN filter) instead of
         recomputing the bucketer; metadata rides in a sidecar row."""
         self.index_df.write.mode("overwrite").parquet(path)
-        meta = self.index_df.sparkSession.createDataFrame(
+        meta = literal_df(
+            self.index_df.sparkSession,
             [(self.n_rows, self.n_planes, self.n_tables, self.seed)],
             "n_rows long, n_planes int, n_tables int, seed int")
         meta.write.mode("overwrite").parquet(f"{path}_meta")
@@ -336,7 +340,8 @@ def similarity_search_indexed(
     cand = index.candidate_ids(qv, max_candidates, allowed=allowed)
     scored = (
         edges_with_embedding.filter(F.col("edge_id").isin(cand))
-        .withColumn("score", cosine_col(F.col("embedding"), F.lit(qv)))
+        .withColumn("score", cosine_col(F.col("embedding"),
+                                        literal_array(qv.tolist(), "double")))
     )
     return scored.orderBy(F.desc("score"), F.asc("edge_id")).limit(k)
 
@@ -352,10 +357,9 @@ def relevance_filter(
     """Keep edges whose verbalization shares >= min_overlap word tokens with
     the question (graph_service.py:1781-1842 position/contract; the LLM call
     is replaced by a deterministic score, SURVEY.md §2.6 Q13)."""
-    q_tokens = F.array(*[
-        F.lit(t) for t in sorted(set(
-            question.lower().replace(",", " ").replace("?", " ").split()))
-    ])
+    q_tokens = literal_array(sorted(set(
+        question.lower().replace(",", " ").replace("?", " ").split())),
+        "string")
     toks = F.split(F.lower(F.col(text_col)), " ")
     overlap = F.size(F.array_intersect(F.array_distinct(toks), q_tokens))
     return (
@@ -387,25 +391,21 @@ def khop_distances(
 
     The seed set is query-scale, so it rides as a Catalyst literal frame
     (functions.literals.literal_df: one JVM task, no Python worker) with
-    ``member`` cast to the ``src`` column's type — integer ids stay
-    integer. An empty seed list returns the empty (member, dist) frame of
-    that type without running a job."""
-    from ..functions.literals import literal_df
-
-    member = F.col("member").cast(edges.schema[src].dataType).alias("member")
-    zero = F.lit(0).cast("long").alias("dist")
-    if not seeds:
-        return edges.select(F.col(src).alias("member")).limit(0).select(
-            member, zero)
+    ``member`` typed as the ``src`` column — integer ids stay integer. An
+    empty seed list returns the empty (member, dist) frame of that type
+    without running a job."""
+    dist = literal_df(
+        edges.sparkSession, [(s, 0) for s in sorted(set(seeds))],
+        T.StructType([T.StructField("member", edges.schema[src].dataType),
+                      T.StructField("dist", T.LongType())]))
+    if not seeds:  # limit(0) plans to an empty LocalRelation: no job
+        return dist.limit(0)
     sym = (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
         .localCheckpoint()
     )
-    dist = literal_df(edges.sparkSession,
-                      [(s,) for s in sorted(set(seeds))],
-                      ["member"]).select(member, zero)
     frontier = dist.select("member")
     for i in range(1, max_hops + 1):
         nxt = (
@@ -460,7 +460,7 @@ def bm25_topk(
         return docs.select(
             F.col(id_col), F.lit(0).cast("long").alias("score_x1e6")
         ).limit(0)
-    term_arr = F.array(*[F.lit(t) for t in terms])
+    term_arr = literal_array(terms, "string")
     base = docs.select(
         F.col(id_col).alias("_id"),
         F.expr(f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")
@@ -555,7 +555,7 @@ def best_snippet(
     functions — so a 100 TB scan stays embarrassingly parallel and the
     operator oracle-pairs exactly (no float anywhere)."""
     terms = sorted(set(re.findall(r"[a-z0-9]+", query.lower())))
-    term_arr = F.array(*[F.lit(t) for t in terms])
+    term_arr = literal_array(terms, "string")
     toks = F.expr(f"regexp_extract_all(lower({text_col}), '[a-z0-9]+', 0)")
     base = docs.select(F.col(id_col), toks.alias("_toks")).filter(
         F.size("_toks") > 0)
@@ -855,10 +855,15 @@ def _query_graph(nodes, edges, params, edges_embedded,
     relevant = relevance_filter(top, params.content)
     answer = None
     if params.return_answer:
-        rows = [r["verbalized"] for r in
-                relevant.orderBy(F.desc("score"), F.asc("edge_id"))
-                .select("verbalized").collect()]
-        answer = summarise(rows, params.content)
+        # the top-k and relevance plan runs once: its rows (at most
+        # params.limit) give the answer, and the hydration below semi-joins
+        # a literal of their ids instead of embedding that plan again
+        rows = (relevant.orderBy(F.desc("score"), F.asc("edge_id"))
+                .select("edge_id", "verbalized").collect())
+        answer = summarise([r["verbalized"] for r in rows], params.content)
+        relevant = literal_df(edges.sparkSession,
+                              [(r["edge_id"],) for r in rows],
+                              T.StructType([edges.schema["edge_id"]]))
     kept = edges.join(relevant.select("edge_id"), "edge_id", "left_semi")
     return {
         "triples": hydrate_triples(kept, nodes),

@@ -34,6 +34,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.literals import literal_df
 from ..io.catalog import RunManifest
 from ..operators.dedup import bloom_index_positions, seen_before
 
@@ -50,7 +51,7 @@ def _existing_positions(spark: SparkSession, path: str,
     try:
         df = spark.read.parquet(path)
     except Exception:
-        return spark.createDataFrame([], "pos bigint")
+        return literal_df(spark, [], "pos bigint")
     # distinct: the same pos set in k batches would otherwise fan the
     # seen_before probe join out k-fold as batches accumulate (the seen
     # flag stays correct either way; this bounds join size — ADVICE r5)

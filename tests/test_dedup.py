@@ -426,6 +426,30 @@ def test_neardup_clusters_transitive_chain(spark):
     assert cc == {(10, 10), (20, 10), (30, 10)}
 
 
+def test_neardup_clusters_driver_and_distributed_paths_agree(spark,
+                                                            monkeypatch):
+    """Long ids beyond int32: the driver union-find's literal frame and the
+    distributed connected components (DRIVER_CC_MAX_PAIRS=0) give the same
+    rows, and member/component keep the id column's type."""
+    from knowledge_graph_studio_spark.operators import linking
+    from knowledge_graph_studio_spark.operators.dedup import neardup_clusters
+
+    big = 2 ** 40
+    docs = _chain_docs(spark).select(
+        (F.col("doc_id") + big).alias("doc_id"), "text")
+
+    def clusters():
+        cc = neardup_clusters(docs, method="ngram")
+        assert [f.dataType.simpleString() for f in cc.schema] == \
+            ["bigint", "bigint"]
+        return sorted(tuple(r) for r in cc.collect())
+
+    want = [(big + 10, big + 10), (big + 20, big + 10), (big + 30, big + 10)]
+    assert clusters() == want
+    monkeypatch.setattr(linking, "DRIVER_CC_MAX_PAIRS", 0)
+    assert clusters() == want
+
+
 def test_neardup_dedup_drop_and_tag_modes(spark):
     from knowledge_graph_studio_spark.operators.dedup import neardup_dedup
 

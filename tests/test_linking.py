@@ -117,6 +117,33 @@ def test_canonical_mapping_picks_most_frequent_rep(spark):
     assert rewritten.filter("head = 'OpenAl'").count() == 0
 
 
+def test_canonical_mapping_same_rows_on_all_three_paths(spark,
+                                                       monkeypatch):
+    """Driver finalize (default), the literal component broadcast plus
+    window (DRIVER_FINALIZE_MAX_MEMBERS=0) and the distributed connected
+    components (DRIVER_CC_MAX_PAIRS=0) give the same mapping, here over two
+    fuzzy clusters, one of them a transitive chain."""
+    from knowledge_graph_studio_spark.operators import linking
+
+    rows = []
+    for name, n in (("OpenAI", 9), ("OpenAl", 1), ("Globex", 3),
+                    ("Globexx", 2), ("Globexxx", 1)):
+        rows += [_t("u", f"{name}{i}", name, "company", "has service", "s",
+                    "service") for i in range(n)]
+    triples = _triples_df(spark, rows)
+
+    def mapping():
+        return sorted(tuple(r) for r in canonical_mapping(triples).collect())
+
+    want = [("Globexx", "company", "Globex"), ("Globexxx", "company", "Globex"),
+            ("OpenAl", "company", "OpenAI")]
+    assert mapping() == want
+    monkeypatch.setattr(linking, "DRIVER_FINALIZE_MAX_MEMBERS", 0)
+    assert mapping() == want
+    monkeypatch.setattr(linking, "DRIVER_CC_MAX_PAIRS", 0)
+    assert mapping() == want
+
+
 def test_merge_nodes_interactive_l6(spark):
     triples = _triples_df(spark, [
         _t("u", "c1", "A", "company", "acquired", "B", "company",

@@ -138,6 +138,45 @@ def test_query_graph_structured_and_text_paths(graph):
     assert res2["answer"].startswith("Q: who runs")
 
 
+def test_return_answer_hydrates_from_one_topk_run(graph):
+    """With return_answer the top-k and relevance plan runs once: the
+    answer comes from one collect of the relevant rows, and the hydrated
+    triples semi-join a literal of their ids, so their plan embeds no
+    second top-k. Triples and nodes equal the answerless query's, and the
+    answer lists the relevant facts by score desc, then edge_id."""
+    from knowledge_graph_studio_spark.functions.embeddings import embed_edges
+    from knowledge_graph_studio_spark.plans.query import summarise
+
+    edge = graph["edges"].filter("rel_type = 'runs'").limit(1).collect()[0]
+    q = f"who runs {edge['tail']}?"
+    on, off = (query_graph(graph["nodes"], graph["edges"],
+                           QueryParameters(content=q, relations=["runs"],
+                                           limit=16, return_answer=ans))
+               for ans in (True, False))
+
+    def plans(df):
+        qe = df._jdf.queryExecution()
+        return qe.optimizedPlan().toString() + qe.sparkPlan().toString()
+
+    assert "GlobalLimit" in plans(off["triples"])  # the top-k is embedded
+    on_plan = plans(on["triples"])
+    assert "GlobalLimit" not in on_plan, on_plan
+    assert "TakeOrderedAndProject" not in on_plan, on_plan
+
+    for key in ("triples", "nodes"):
+        assert sorted(on[key].toJSON().collect()) == \
+            sorted(off[key].toJSON().collect()), key
+
+    relevant = relevance_filter(
+        similarity_search(
+            embed_edges(structured_filter(graph["nodes"], graph["edges"],
+                                          relations=["runs"])), q, k=16), q)
+    facts = [r["verbalized"] for r in
+             relevant.orderBy(F.desc("score"), F.asc("edge_id")).collect()]
+    assert facts and len(facts) == off["triples"].count()
+    assert on["answer"] == summarise(facts, q)
+
+
 def _jobs_of(spark, fn) -> int:
     """Spark jobs ``fn`` runs, counted through a job group."""
     import uuid

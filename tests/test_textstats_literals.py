@@ -45,7 +45,7 @@ def test_shingles_distinct_per_doc(spark):
 
 
 def test_literal_df_values_and_single_task(spark):
-    df = literal_df(spark, [("a", 1), ("b", 2)], ["k", "v"])
+    df = literal_df(spark, [("a", 1), ("b", 2)], "k string, v int")
     assert sorted((r["k"], r["v"]) for r in df.collect()) == [("a", 1), ("b", 2)]
     assert df.rdd.getNumPartitions() == 1
     # joins like any other DF

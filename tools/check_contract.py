@@ -1,15 +1,22 @@
 """Local stand-in for the driver's correctness gate: run every
 __spark_entry__.queries() entry on Spark and its oracle_sql() on DuckDB at the
 given SF, compare row count, column names, and an order-insensitive value hash
-(columns sorted by name, rows sorted, values stringified)."""
+(columns sorted by name, rows sorted, values stringified).
+
+Every entry, rows-only ones included, also prints one ``HASH <name> <hex>``
+line with the Spark-side table hash, so two trees can be compared with
+``diff <(grep ^HASH run_a.txt) <(grep ^HASH run_b.txt)``.
+
+Usage: python tools/check_contract.py [SF_DIR] [entry1,entry2,...]"""
 
 from __future__ import annotations
 
 import hashlib
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -67,6 +74,9 @@ def main(sf_dir: str, only: list[str] | None = None):
             failures.append(name)
             print(f"FAIL  {name}: spark error {type(e).__name__}: {e}")
             continue
+        scols = [c.lower() for c in cols]
+        h_s = table_hash(scols, rows)
+        print(f"HASH {name} {h_s}")
         if name not in oracles:
             print(f"rows-only  {name}: {len(rows)} rows  cols={cols} "
                   f"({time.time()-t0:.1f}s)")
@@ -81,10 +91,8 @@ def main(sf_dir: str, only: list[str] | None = None):
             failures.append(name)
             print(f"FAIL  {name}: duckdb error {e}")
             continue
-        scols = [c.lower() for c in cols]
         ok_cols = sorted(scols) == sorted(ocols)
         ok_count = len(rows) == len(orows)
-        h_s = table_hash(scols, rows)
         h_o = table_hash(ocols, orows)
         ok_hash = h_s == h_o
         status = "OK   " if (ok_cols and ok_count and ok_hash) else "FAIL "
