@@ -20,12 +20,20 @@ Reference parity (file:line in /root/reference/src/whyhow_api):
 Scale notes (the load-bearing part):
   * L1 is a BROADCAST join — the rule/alias map is tiny by construction
     (workspace rules), so no shuffle of the triple stream.
-  * Node aggregation is TWO-PHASE SALTED: groupBy(name, type, salt) partial
-    merge, then groupBy(name, type) final merge. The hot entity (~20% of
-    pages) would otherwise pile one groupBy key onto one task; the salt bounds
-    per-task fan-in at phase 1, and phase 2 sees at most SALT rows per key.
-  * Property merge is NATIVE (aggregate + map_zip_with + transform_values) —
-    no UDAF, no Python in the agg path; the law is the commutative
+  * Nodes and edges share ONE SALTED MERGE TREE (_merge_tree): keyed
+    (name, type) for nodes, (head_id, tail_id, relation) for edges, with
+    chunk ids and property values riding the same flat (k, is_chunk, v)
+    rows through a per-salt partial merge, a per-key merge and a final
+    per-entity fold. The hot entity (~20% of pages) would otherwise pile
+    one groupBy key onto one task; the salt bounds per-task fan-in at the
+    partial phase, and the per-key phase sees at most SALT rows per key.
+  * An edge stores only its endpoint ids; its head/tail names and types are
+    read from the node table by the same head and tail joins that fetch
+    the endpoint chunk sets for the L4 chunk law (the reference's triple
+    documents hold node ids, and names are hydrated from the node docs).
+  * Property merge is NATIVE (explode/regroup in the tree; aggregate +
+    map_zip_with + transform_values in the small upsert/merge folds) — no
+    UDAF, no Python in the agg path; the law is the commutative
     specialization of merge_dicts (textcore.merge_string_props).
   * CC is label propagation to the component minimum: per-iteration cost is one
     shuffle join on node id; hot components are star-shaped alias clusters so
@@ -37,7 +45,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..functions.literals import literal_array, literal_df
 from .extraction import PROPS
@@ -442,14 +449,6 @@ def triangle_counts(
 # limits and far above anything a per-workspace alias graph produces.
 DRIVER_CC_MAX_PAIRS = 100_000
 
-# member count below which the representative selection ALSO runs driver-side
-# (one bounded freq-fetch job + in-memory argmax instead of a window shuffle
-# + cluster join): the mapping comes back as a literal DataFrame, so the
-# canonicalization tail costs two small jobs total and downstream consumers
-# re-evaluate a local relation instead of a checkpointed plan. Above it the
-# distributed window path runs (same semantics).
-DRIVER_FINALIZE_MAX_MEMBERS = 20_000
-
 
 def canonical_mapping(
     triples: DataFrame,
@@ -510,20 +509,15 @@ def canonical_mapping(
         comp = connected_components_driver(
             [((r["src"], r["type"]), (r["dst"], r["type"])) for r in head])
         pairs.unpersist()
-        if len(comp) <= DRIVER_FINALIZE_MAX_MEMBERS:
-            return _finalize_mapping_driver(spark, names, comp)
-        cc = F.broadcast(literal_df(
-            spark,
-            [(m[0], m[1], f"{c[0]}|{c[1]}") for m, c in comp.items()],
-            "name string, type string, component string"))
-        clustered = names.join(cc, ["name", "type"], "inner")
-    else:
-        cc = connected_components(
-            pairs.select(F.concat_ws("|", "src", "type").alias("src"),
-                         F.concat_ws("|", "dst", "type").alias("dst")))
-        pairs.unpersist()
-        keyed = names.withColumn("member", F.concat_ws("|", "name", "type"))
-        clustered = keyed.join(cc, "member", "inner").drop("member")
+        # at most 2 * DRIVER_CC_MAX_PAIRS members: the driver finalize's one
+        # member literal is bounded by the same probe
+        return _finalize_mapping_driver(spark, names, comp)
+    cc = connected_components(
+        pairs.select(F.concat_ws("|", "src", "type").alias("src"),
+                     F.concat_ws("|", "dst", "type").alias("dst")))
+    pairs.unpersist()
+    keyed = names.withColumn("member", F.concat_ws("|", "name", "type"))
+    clustered = keyed.join(cc, "member", "inner").drop("member")
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("component").orderBy(
@@ -605,8 +599,8 @@ def _merge_props_col(col):
     per-key array concat, then sorted distinct (textcore.merge_string_props).
 
     Used on SMALL collections only (interactive node merge L6, upserts over
-    already-aggregated tables). The bulk node/edge materialization paths use
-    the fused _kv_entries explode/regroup tree instead — this higher-order
+    already-aggregated tables). The bulk node/edge materializations use the
+    _merge_tree explode/regroup tree instead — this higher-order
     fold is interpreted (no whole-stage codegen for lambda expressions),
     which measured 4-5x slower than the explode/regroup plan on the hot
     aggregation."""
@@ -638,18 +632,16 @@ def _capped(arr, max_n: int | None):
     return arr if max_n is None else F.slice(arr, 1, max_n)
 
 
-def _salt_count(df: DataFrame, salt: int | None) -> int:
-    """Default the salt fan-out to the cluster size (4x defaultParallelism,
-    floor 16). A FIXED salt re-creates the hot-key problem at scale: the hot
+def _salt_count(df: DataFrame) -> int:
+    """Size the salt fan-out to the cluster (4x defaultParallelism, floor
+    16). A FIXED salt re-creates the hot-key problem at scale: the hot
     entity's per-salt collect_set grows linearly with the corpus, so phase-1
     work per task grows even though the key space is salted. Scaling the
     salt with the cluster (weak-scaling shape: data/core constant => per-salt
     set size constant) keeps phase-1 bounded; phase-2 then merges at most
     salt partials per key (salt * max_chunks elements under the cap).
     Measured: the weak-scaling nodes stage went 6.9s->17.4s at 4x data with
-    salt=16 fixed; scaling the salt removes the growth."""
-    if salt is not None:
-        return salt
+    a fixed salt of 16; scaling the salt removes the growth."""
     return max(16, 4 * df.sparkSession.sparkContext.defaultParallelism)
 
 
@@ -733,22 +725,134 @@ def _keep_rank(max_chunks: int | None, max_vals: int | None):
 
 def _branch_cap(col, max_chunks: int | None, max_vals: int | None):
     """Per-branch prefix cap: chunk rows cap at max_chunks, property-value
-    rows at max_vals (see build_nodes on why caps exist at every phase)."""
+    rows at max_vals (see _merge_tree on why caps exist at every phase)."""
     return F.when(F.col("is_chunk"), _capped(col, max_chunks)) \
         .otherwise(_capped(col, max_vals))
 
 
+def _merge_tree(rows: DataFrame, keys: list[str], max_chunks: int | None,
+                max_vals: int | None) -> DataFrame:
+    """The L2/L4 merge law as ONE salted aggregation tree: ``(keys...,
+    chunk_id, props)`` rows in, one ``(keys..., chunks, properties,
+    mention_count, chunk_count)`` row per key out. build_nodes feeds it
+    endpoints keyed (name, type), build_edges triples keyed (head_id,
+    tail_id, relation).
+
+    chunks is the sorted set union of the key's chunk ids (graph_service.py:
+    486-493); properties is the merge_string_props fold of its property
+    maps. The reference POPS "chunks" out of the property dicts before
+    merging (graph_service.py:552, ~628): provenance lives in the chunks
+    field only, which also keeps a hot key's provenance out of the props agg.
+
+    Chunk ids ride as a PLAIN column select (the >99% branch at web scale; no
+    per-row array construction), property values as an explode that emits
+    nothing for the common empty map (_prop_entries). Both flow as flat
+    (k, is_chunk, v) rows through the _ranked_kv sort and three groupBys:
+
+      partial: (keys, salt, is_chunk, k) — reuses the window's partitioning
+      per_key: (keys, is_chunk, k) — merges <= salt partials per key
+      final:   (keys) — folds the chunk row and the property rows
+
+    so the tree costs three hash exchanges and no join. The salt is sized to
+    the cluster (_salt_count) and bounds the hot key's per-task fan-in.
+
+    Caps (None = exact reference semantics): the salt fixes groupBy skew, but
+    a hot key's provenance ARRAY still grows linearly with the corpus (~20% of
+    a web crawl mentions the head entity -> millions of chunk ids sorted in
+    one final task; measured as the dominant straggler at 768k pages).
+    ``max_chunks`` keeps the lexicographic prefix of the chunk set at every
+    phase, bounding final-task work to salt*max_chunks; ``max_vals`` caps
+    property value lists the same way.
+
+    Counters alongside the (possibly capped) chunks array:
+      * mention_count — input rows of the key (an entity in N triples of one
+        chunk counts N).
+      * chunk_count — EXACT distinct-chunk total, the uncapped size of the
+        chunks set. Exact despite the phases because the salt is a pure
+        function of chunk_id, so each distinct chunk lands in exactly one
+        salt partition and per-salt distinct counts sum without overlap."""
+    flat = rows.select(
+        *keys, "chunk_id",
+        F.map_filter("props", lambda k, _v: k != "chunks").alias("props"),
+        F.pmod(F.xxhash64("chunk_id"), F.lit(_salt_count(rows))).alias("salt"),
+    )
+    kv = flat.select(
+        *keys, "salt", F.lit(None).cast("string").alias("k"),
+        F.lit(True).alias("is_chunk"), F.col("chunk_id").alias("v"),
+    ).unionByName(flat.select(
+        *keys, "salt", F.explode(_prop_entries(F.col("props"))).alias("e"),
+    ).select(*keys, "salt", "e.k", F.lit(False).alias("is_chunk"), "e.v"))
+    ranked = _ranked_kv(kv, keys)
+    keep = _keep_rank(max_chunks, max_vals)
+    partial = ranked.groupBy(*keys, "salt", "is_chunk", "k").agg(
+        # survivors only: per-group buffer bounded by the cap (see _ranked_kv)
+        F.array_sort(F.collect_set(F.when(keep, F.col("v")))).alias("vs"),
+        # per-salt EXACT distinct (uncapped), disjoint across salts
+        F.max(F.when(F.col("v").isNotNull(), F.col("dr"))).alias("dcnt"),
+        F.count("*").alias("cnt"),
+    )
+    per_key = partial.groupBy(*keys, "is_chunk", "k").agg(
+        _branch_cap(
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list("vs")))),
+            max_chunks, max_vals).alias("vals"),
+        F.sum("cnt").alias("cnt"),
+        F.sum("dcnt").alias("dsum"),
+    )
+    is_chunk = F.col("is_chunk")
+    return per_key.groupBy(*keys).agg(
+        # exactly one is_chunk row per key (every input row contributes a
+        # chunk entry), so the flatten/max pick it out losslessly
+        F.flatten(F.collect_list(F.when(is_chunk, F.col("vals"))))
+        .alias("chunks"),
+        F.coalesce(
+            F.map_from_entries(F.array_sort(F.collect_list(
+                F.when(~is_chunk, F.struct("k", "vals"))))),
+            F.from_json(F.lit("{}"), PROPS),
+        ).alias("properties"),
+        F.max(F.when(is_chunk, F.col("cnt"))).alias("mention_count"),
+        F.max(F.when(is_chunk, F.col("dsum"))).alias("chunk_count"),
+    )
+
+
+def _with_endpoints(df: DataFrame, nodes: DataFrame) -> DataFrame:
+    """Attach head/head_type/head_chunks and tail/tail_type/tail_chunks from
+    the node table to rows keyed by head_id/tail_id: one head join and one
+    tail join on node_id. An edge stores only its endpoint ids; the names
+    are the node table's (the reference hydrates triple endpoints from the
+    node documents). Left joins: an endpoint missing from ``nodes`` reads
+    NULL."""
+    n = nodes.select("node_id", "name", "type", "chunks")
+    for end in ("head", "tail"):
+        df = df.join(n.select(F.col("node_id").alias(f"{end}_id"),
+                              F.col("name").alias(end),
+                              F.col("type").alias(f"{end}_type"),
+                              F.col("chunks").alias(f"{end}_chunks")),
+                     f"{end}_id", "left")
+    return df
+
+
+def _edge_chunks(own, max_chunks: int | None = None):
+    """L4 chunk law over _with_endpoints rows (graph_service.py:668-691):
+    sorted setUnion(intersect(head node chunks, tail node chunks), own)."""
+    return _capped(F.array_sort(F.array_distinct(F.concat(
+        F.array_intersect(F.coalesce("head_chunks", F.array()),
+                          F.coalesce("tail_chunks", F.array())),
+        own,
+    ))), max_chunks)
+
+
 def build_nodes(
-    triples: DataFrame, graph: str = "default", salt: int | None = None,
+    triples: DataFrame, graph: str = "default",
     max_chunks: int | None = None, max_prop_vals: int | None = None,
     workspace: str = "default", created_by: str = "default",
-    share_scan: bool = False,
 ) -> DataFrame:
     """L2: endpoints -> deduped nodes with merged properties + chunk sets.
 
-    Two-phase salted aggregation (skew-proof for hot entities):
-      phase 1: groupBy(name, type, salt) — map-side + partial merge
-      phase 2: groupBy(name, type) — merge <=salt partials per key
+    Every triple contributes its head and its tail as (name, type, chunk_id,
+    props) endpoint rows — ONE scan exploding a 2-element struct array, not
+    union(heads, tails), which scans the input twice — and _merge_tree folds
+    them per (name, type). mention_count counts triple-ENDPOINT occurrences;
+    chunk_count is the exact, uncapped distinct-chunk total.
     node_id = xxhash64(graph, workspace, created_by, name, type) (replaces
     L3's id lookup).
 
@@ -759,215 +863,59 @@ def build_nodes(
     many tenants' builds never collide on same-named entities, and readers
     scope with plans.query.scope_filter.
 
-    ``max_chunks``: the salt fixes groupBy skew, but a hot entity's provenance
-    ARRAY still grows linearly with the corpus (~20% of a web crawl mentions
-    the head entity -> millions of chunk ids sorted in one final task; measured
-    as the dominant straggler at 768k pages). max_chunks keeps the
-    lexicographic prefix of the chunk set at both phases, bounding final-task
-    work to salt*max_chunks. Default None = exact reference semantics (the
-    array is the full set union, graph_service.py:486-493); production
-    web-scale runs should set a cap and keep full provenance in a normalized
-    (node_id, chunk_id) side table if they need it queryable.
-
-    ``max_prop_vals`` independently caps property value lists (None = exact).
-
-    Counters alongside the (possibly capped) chunks array:
-      * mention_count — triple-ENDPOINT occurrences of the entity (an entity
-        in N triples of one chunk counts N).
-      * chunk_count — EXACT distinct-chunk total, the uncapped size of the
-        chunks set. Exact despite the two phases because the salt is a pure
-        function of chunk_id, so each distinct chunk lands in exactly one
-        salt partition and per-salt distinct counts sum without overlap."""
-    # the reference POPS "chunks" out of the property dicts before merging
-    # (graph_service.py:552 `properties.pop("chunks", [])`): chunk provenance
-    # lives in the chunks field only, never in properties. Besides parity,
-    # this keeps the hot entity's provenance out of the per-key props agg.
-    def _no_chunks(col):
-        return F.map_filter(col, lambda k, _v: k != "chunks")
-
-    salt = _salt_count(triples, salt)
-    # Endpoint expansion in ONE scan of the (usually recomputed-per-use
-    # canonicalized) triples: explode a 2-element struct array instead of
-    # union(heads, tails), which scans the input twice per consuming tree.
-    # ``share_scan=True`` additionally materializes the expanded frame once
-    # (non-eager localCheckpoint) for the chunks and props trees to share;
-    # measured on this box the re-scan is CHEAPER than the materialization
-    # (the expansion is a narrow codegen'd map over an already-cached input),
-    # so the default recomputes. The knob stays for cluster deployments where
-    # the upstream is an expensive uncached lineage.
-    raw = triples.select(
-        F.explode(F.array(
-            F.struct(F.col("head").alias("name"),
-                     F.col("head_type").alias("type"),
-                     _no_chunks(F.col("head_properties")).alias("props")),
-            F.struct(F.col("tail").alias("name"),
-                     F.col("tail_type").alias("type"),
-                     _no_chunks(F.col("tail_properties")).alias("props")),
-        )).alias("e"),
-        F.col("chunk_id"),
-    ).select(
-        "e.name", "e.type", "e.props", "chunk_id",
-        F.pmod(F.xxhash64("chunk_id"), F.lit(salt)).alias("salt"),
-    )
-    if share_scan:
-        raw = raw.localCheckpoint(eager=False)
-    # ONE fused aggregation tree: the chunk id and the property entries ride
-    # the same flat (k, is_chunk, v) rows through the salted aggregation —
-    # chunks as PLAIN column selects (the >99% branch at web scale; no
-    # per-row array construction), property values as an explode that emits
-    # nothing for the common empty map. Previously chunks and props were two
-    # trees over the same exploded input joined at the end — double the
-    # shuffled data plus a join, all in the non-scaling tail.
-    null_s = F.lit(None).cast("string")
-    kv = raw.select(
-        "name", "type", "salt",
-        null_s.alias("k"), F.lit(True).alias("is_chunk"),
-        F.col("chunk_id").alias("v"),
-    ).unionByName(raw.select(
-        "name", "type", "salt",
-        F.explode(_prop_entries(F.col("props"))).alias("e"),
-    ).select("name", "type", "salt", "e.k",
-             F.lit(False).alias("is_chunk"), "e.v"))
-    ranked = _ranked_kv(kv, ["name", "type"])
-    keep = _keep_rank(max_chunks, max_prop_vals)
-    partial = ranked.groupBy("name", "type", "salt", "is_chunk", "k").agg(
-        # survivors only: per-group buffer bounded by the cap (see _ranked_kv)
-        F.array_sort(F.collect_set(F.when(keep, F.col("v")))).alias("vs"),
-        # per-salt EXACT distinct (uncapped), disjoint across salts
-        F.max(F.when(F.col("v").isNotNull(), F.col("dr"))).alias("dcnt"),
-        F.count("*").alias("cnt"),
-    ).select("name", "type", "is_chunk", "k", "vs", "dcnt", "cnt")
-    per_key = partial.groupBy("name", "type", "is_chunk", "k").agg(
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("vs"))))
-        .alias("_vals"),
-        F.sum("cnt").alias("cnt"),
-        F.sum("dcnt").alias("dsum"),
-    ).select(
-        "name", "type", "is_chunk", "k",
-        _branch_cap(F.col("_vals"), max_chunks, max_prop_vals).alias("vals"),
-        "cnt", "dsum",
-    )
-    empty_props = F.from_json(F.lit("{}"), PROPS)
-    final = per_key.groupBy("name", "type").agg(
-        # exactly one is_chunk row per key (every endpoint row contributes a
-        # chunk entry), so the flatten/max pick it out losslessly
-        F.flatten(F.collect_list(F.when(F.col("is_chunk"), F.col("vals"))))
-        .alias("chunks"),
-        F.max(F.when(F.col("is_chunk"), F.col("cnt"))).alias("mention_count"),
-        F.max(F.when(F.col("is_chunk"), F.col("dsum"))).alias("chunk_count"),
-        F.map_from_entries(
-            F.array_sort(F.collect_list(
-                F.when(~F.col("is_chunk"), F.struct("k", "vals"))))
-        ).alias("properties"),
-    )
-    return final.select(
+    ``max_chunks`` / ``max_prop_vals`` cap the chunk set and the property
+    value lists to lexicographic prefixes (None = exact reference semantics;
+    see _merge_tree on why caps exist). Production web-scale runs should set
+    a cap and keep full provenance in node_chunk_table if they need it
+    queryable."""
+    ends = triples.select(
+        F.explode(F.array(*[
+            F.struct(F.col(end).alias("name"),
+                     F.col(f"{end}_type").alias("type"),
+                     F.col(f"{end}_properties").alias("props"))
+            for end in ("head", "tail")])).alias("e"),
+        "chunk_id",
+    ).select("e.name", "e.type", "chunk_id", "e.props")
+    return _merge_tree(ends, NODE_KEY, max_chunks, max_prop_vals).select(
         _node_id(graph, workspace, created_by).alias("node_id"),
         F.lit(graph).alias("graph"),
         F.lit(workspace).alias("workspace"),
         F.lit(created_by).alias("created_by"),
-        "name", "type",
-        F.coalesce("properties", empty_props).alias("properties"),
+        "name", "type", "properties",
         "chunks", "mention_count", "chunk_count",
     )
 
 
 def build_edges(
     triples: DataFrame, nodes: DataFrame, graph: str = "default",
-    salt: int | None = None, max_chunks: int | None = None,
-    max_prop_vals: int | None = None,
+    max_chunks: int | None = None, max_prop_vals: int | None = None,
     workspace: str = "default", created_by: str = "default",
 ) -> DataFrame:
     """L4: triples -> deduped edges keyed (head_id, tail_id, relation).
 
-    Chunk law (graph_service.py:668-691): chunks = setUnion(
-    intersect(head_node.chunks, tail_node.chunks), contributed chunk ids).
-    Node chunk-sets are aggregated first and joined back (two-phase order the
-    reference also uses: nodes before triples, graph_service.py:597-671).
+    _merge_tree folds each key's relation properties and contributed chunk
+    ids; then one head join and one tail join on ``nodes`` (_with_endpoints)
+    supply each endpoint's name, type and chunk set. Chunk law
+    (graph_service.py:668-691): chunks = setUnion(intersect(head_node.chunks,
+    tail_node.chunks), contributed chunk ids) — nodes are built first and
+    joined back, the order the reference also uses (graph_service.py:
+    597-671).
 
-    Multi-tenancy: workspace/created_by must match the build_nodes call so
-    the endpoint-id hashes line up (triple upserts are user-scoped too,
-    graph_service.py:645-653)."""
-    salt = _salt_count(triples, salt)
-    keyed = triples.withColumn(
-        "head_id", _node_id(graph, workspace, created_by, "head", "head_type")
-    ).withColumn(
-        "tail_id", _node_id(graph, workspace, created_by, "tail", "tail_type")
-    ).withColumn(
-        "salt", F.pmod(F.xxhash64("chunk_id"), F.lit(salt))
+    Precondition: ``nodes`` holds every endpoint of ``triples``, i.e. it is
+    build_nodes over the same triples with the same graph/workspace/
+    created_by, so the endpoint-id hashes line up (triple upserts are
+    user-scoped too, graph_service.py:645-653). An endpoint missing from
+    ``nodes`` gets a NULL name and type and adds no chunks."""
+    keyed = triples.select(
+        _node_id(graph, workspace, created_by, "head", "head_type")
+        .alias("head_id"),
+        _node_id(graph, workspace, created_by, "tail", "tail_type")
+        .alias("tail_id"),
+        "relation", "chunk_id", F.col("relation_properties").alias("props"),
     )
-    # fused chunk+props aggregation tree (see _prop_entries / build_nodes) —
-    # one salted agg instead of a chunks tree + props tree + join; chunk ids
-    # ride as plain columns, property values as a usually-empty explode.
-    # reference pops "chunks" from relation_properties too (graph_service.py:
-    # ~628 in the triple-upsert phase) — provenance is the chunks field only
-    null_s = F.lit(None).cast("string")
-    kv = keyed.select(
-        "head_id", "tail_id", "relation", "salt",
-        "head", "head_type", "tail", "tail_type",
-        null_s.alias("k"), F.lit(True).alias("is_chunk"),
-        F.col("chunk_id").alias("v"),
-    ).unionByName(keyed.select(
-        "head_id", "tail_id", "relation", "salt",
-        "head", "head_type", "tail", "tail_type",
-        F.explode(_prop_entries(
-            F.map_filter("relation_properties", lambda k, _v: k != "chunks")
-        )).alias("e"),
-    ).select(
-        "head_id", "tail_id", "relation", "salt",
-        "head", "head_type", "tail", "tail_type",
-        "e.k", F.lit(False).alias("is_chunk"), "e.v",
-    ))
-    ranked = _ranked_kv(kv, ["head_id", "tail_id", "relation"])
-    keep = _keep_rank(max_chunks, max_prop_vals)
-    partial = ranked.groupBy("head_id", "tail_id", "relation", "salt",
-                             "is_chunk", "k").agg(
-        F.array_sort(F.collect_set(F.when(keep, F.col("v")))).alias("vs"),
-        F.first("head").alias("head"), F.first("head_type").alias("head_type"),
-        F.first("tail").alias("tail"), F.first("tail_type").alias("tail_type"),
-    )
-    per_key = partial.groupBy("head_id", "tail_id", "relation",
-                              "is_chunk", "k").agg(
-        _branch_cap(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("vs")))),
-            max_chunks, max_prop_vals).alias("vals"),
-        F.first("head").alias("head"), F.first("head_type").alias("head_type"),
-        F.first("tail").alias("tail"), F.first("tail_type").alias("tail_type"),
-    )
-    agg = per_key.groupBy("head_id", "tail_id", "relation").agg(
-        F.flatten(F.collect_list(F.when(F.col("is_chunk"), F.col("vals"))))
-        .alias("own_chunks"),
-        F.map_from_entries(
-            F.array_sort(F.collect_list(
-                F.when(~F.col("is_chunk"), F.struct("k", "vals"))))
-        ).alias("_props"),
-        F.first("head").alias("head"), F.first("head_type").alias("head_type"),
-        F.first("tail").alias("tail"), F.first("tail_type").alias("tail_type"),
-    ).withColumn(
-        "properties", F.coalesce("_props", F.from_json(F.lit("{}"), PROPS))
-    ).drop("_props")
-    n = nodes.select(F.col("node_id"), F.col("chunks"))
-    out = (
-        agg.join(n.withColumnRenamed("chunks", "_hc"),
-                 agg["head_id"] == n["node_id"], "left").drop("node_id")
-        .join(n.withColumnRenamed("chunks", "_tc"),
-              agg["tail_id"] == n["node_id"], "left").drop("node_id")
-        .withColumn(
-            "chunks",
-            F.array_sort(
-                F.array_distinct(
-                    F.concat(
-                        F.array_intersect(
-                            F.coalesce("_hc", F.array()),
-                            F.coalesce("_tc", F.array()),
-                        ),
-                        F.col("own_chunks"),
-                    )
-                )
-            ),
-        )
-        .drop("_hc", "_tc", "own_chunks")
-    )
-    return out.select(
+    agg = _merge_tree(keyed, ["head_id", "tail_id", "relation"],
+                      max_chunks, max_prop_vals)
+    return _with_endpoints(agg, nodes).select(
         F.xxhash64(F.lit(graph), "head_id", "tail_id", "relation").alias("edge_id"),
         F.lit(graph).alias("graph"),
         F.lit(workspace).alias("workspace"),
@@ -975,7 +923,7 @@ def build_edges(
         "head_id", "tail_id",
         F.col("relation").alias("rel_type"),
         "head", "head_type", "tail", "tail_type",
-        "properties", "chunks",
+        "properties", _edge_chunks(F.col("chunks")).alias("chunks"),
     )
 
 
@@ -1019,7 +967,8 @@ def upsert_edges(
     the reference's upsert law evaluated against the UPDATED node documents
     (graph_service.py:668-691: the intersection is recomputed at upsert time
     from the merged nodes, then unioned with the stored chunk lists).
-    Properties follow the merge law; edge identity is stable (edge_id)."""
+    Properties follow the merge law; edge identity is stable (edge_id);
+    endpoint names are read from ``merged_nodes`` (see _with_endpoints)."""
     both = old.unionByName(delta)
     merged = both.groupBy("edge_id").agg(
         F.first("graph").alias("graph"),
@@ -1028,34 +977,15 @@ def upsert_edges(
         F.first("head_id").alias("head_id"),
         F.first("tail_id").alias("tail_id"),
         F.first("rel_type").alias("rel_type"),
-        F.first("head").alias("head"), F.first("head_type").alias("head_type"),
-        F.first("tail").alias("tail"), F.first("tail_type").alias("tail_type"),
         _merge_props_col(F.collect_list("properties")).alias("properties"),
-        F.array_distinct(F.flatten(F.collect_list("chunks"))).alias("_own"),
+        F.array_distinct(F.flatten(F.collect_list("chunks"))).alias("chunks"),
     )
-    n = merged_nodes.select("node_id", "chunks")
-    out = (
-        merged.join(n.withColumnRenamed("chunks", "_hc"),
-                    merged["head_id"] == n["node_id"], "left").drop("node_id")
-        .join(n.withColumnRenamed("chunks", "_tc"),
-              merged["tail_id"] == n["node_id"], "left").drop("node_id")
-        .withColumn(
-            "chunks",
-            _capped(
-                F.array_sort(F.array_distinct(F.concat(
-                    F.array_intersect(F.coalesce("_hc", F.array()),
-                                      F.coalesce("_tc", F.array())),
-                    F.col("_own"),
-                ))),
-                max_chunks,
-            ),
-        )
-        .drop("_hc", "_tc", "_own")
+    return _with_endpoints(merged, merged_nodes).select(
+        "edge_id", "graph", "workspace", "created_by",
+        "head_id", "tail_id", "rel_type",
+        "head", "head_type", "tail", "tail_type", "properties",
+        _edge_chunks(F.col("chunks"), max_chunks).alias("chunks"),
     )
-    return out.select("edge_id", "graph", "workspace", "created_by",
-                      "head_id", "tail_id", "rel_type",
-                      "head", "head_type", "tail", "tail_type",
-                      "properties", "chunks")
 
 
 def node_chunk_table(
@@ -1088,73 +1018,46 @@ def merge_nodes_interactive(
     """L6 (graph_service.py:2074-2181): repoint edges from from_ids to to_id,
     fold the from-nodes' properties/chunks into the target, drop from-nodes.
 
-    After repointing, two edges can collapse onto the same (head_id, tail_id,
-    rel_type) key; the reference's triple upsert merges them (chunks union +
-    property merge, graph_service.py:645-691), so the returned edges are
-    re-aggregated through the same law and edge_id is recomputed. Repointed
-    endpoints take the merged target node's name/type."""
+    The merged node keeps the target's name and type whatever order the rows
+    arrive in. After repointing, two edges can collapse onto the same
+    (head_id, tail_id, rel_type) key; the reference's triple upsert merges
+    them (chunks union + property merge, graph_service.py:645-691), so the
+    returned edges are re-aggregated through the same law and edge_id is
+    recomputed. Endpoint names are read from the merged node table (see
+    _with_endpoints), so repointed endpoints show the target's."""
     from_lit = literal_array(from_ids, "bigint")
-    group = nodes.withColumn("_orig_id", F.col("node_id")).withColumn(
-        "node_id",
-        F.when(F.array_contains(from_lit, F.col("node_id")), F.lit(to_id))
-        .otherwise(F.col("node_id")),
-    )
+
+    def repoint(c):
+        return F.when(F.array_contains(from_lit, F.col(c)), F.lit(to_id)) \
+            .otherwise(F.col(c))
+
+    def of_target(c):
+        # the target row's value; min() only decides for an absent target
+        return F.coalesce(F.max(F.when(F.col("_orig_id") == to_id, F.col(c))),
+                          F.min(c)).alias(c)
+
+    group = nodes.withColumn("_orig_id", F.col("node_id")) \
+        .withColumn("node_id", repoint("node_id"))
     merged_nodes = group.groupBy("node_id").agg(
         F.first("graph").alias("graph"),
         F.first("workspace").alias("workspace"),
         F.first("created_by").alias("created_by"),
-        F.coalesce(
-            F.max(F.when(F.col("_orig_id") == to_id, F.col("name"))),
-            F.min("name"),
-        ).alias("name"),
-        F.first("type").alias("type"),
+        of_target("name"), of_target("type"),
         _merge_props_col(F.collect_list("properties")).alias("properties"),
         F.array_sort(F.array_distinct(F.flatten(F.collect_list("chunks")))).alias("chunks"),
-    )
-    moved = edges.withColumn(
-        "head_id",
-        F.when(F.array_contains(from_lit, F.col("head_id")), F.lit(to_id))
-        .otherwise(F.col("head_id")),
-    ).withColumn(
-        "tail_id",
-        F.when(F.array_contains(from_lit, F.col("tail_id")), F.lit(to_id))
-        .otherwise(F.col("tail_id")),
-    )
-    # repointed endpoints display the merged target's name/type (single-row
-    # broadcast — interactive merges touch one target node)
-    target = F.broadcast(
-        merged_nodes.filter(F.col("node_id") == to_id)
-        .select(F.lit(True).alias("_has_t"),
-                F.col("name").alias("_tname"), F.col("type").alias("_ttype"))
-    )
-    moved = (
-        moved.join(target, F.lit(True), "left")  # 0-or-1-row broadcast
-        .withColumn("head", F.when(F.col("head_id") == to_id,
-                                   F.coalesce("_tname", "head"))
-                    .otherwise(F.col("head")))
-        .withColumn("head_type", F.when(F.col("head_id") == to_id,
-                                        F.coalesce("_ttype", "head_type"))
-                    .otherwise(F.col("head_type")))
-        .withColumn("tail", F.when(F.col("tail_id") == to_id,
-                                   F.coalesce("_tname", "tail"))
-                    .otherwise(F.col("tail")))
-        .withColumn("tail_type", F.when(F.col("tail_id") == to_id,
-                                        F.coalesce("_ttype", "tail_type"))
-                    .otherwise(F.col("tail_type")))
-        .drop("_has_t", "_tname", "_ttype")
     )
     # L4 re-aggregation: collapsed keys merge chunks (set union) + properties
-    merged_edges = moved.groupBy("head_id", "tail_id", "rel_type").agg(
-        F.first("graph").alias("graph"),
-        F.first("workspace").alias("workspace"),
-        F.first("created_by").alias("created_by"),
-        F.first("head").alias("head"), F.first("head_type").alias("head_type"),
-        F.first("tail").alias("tail"), F.first("tail_type").alias("tail_type"),
-        _merge_props_col(F.collect_list("properties")).alias("properties"),
-        F.array_sort(F.array_distinct(F.flatten(F.collect_list("chunks")))).alias("chunks"),
-    ).select(
+    merged_edges = edges.withColumn("head_id", repoint("head_id")) \
+        .withColumn("tail_id", repoint("tail_id")) \
+        .groupBy("head_id", "tail_id", "rel_type").agg(
+            F.first("graph").alias("graph"),
+            F.first("workspace").alias("workspace"),
+            F.first("created_by").alias("created_by"),
+            _merge_props_col(F.collect_list("properties")).alias("properties"),
+            F.array_sort(F.array_distinct(F.flatten(F.collect_list("chunks")))).alias("chunks"),
+        )
+    return merged_nodes, _with_endpoints(merged_edges, merged_nodes).select(
         F.xxhash64("graph", "head_id", "tail_id", "rel_type").alias("edge_id"),
         "graph", "workspace", "created_by", "head_id", "tail_id", "rel_type",
         "head", "head_type", "tail", "tail_type", "properties", "chunks",
     )
-    return merged_nodes, merged_edges

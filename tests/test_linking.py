@@ -117,12 +117,10 @@ def test_canonical_mapping_picks_most_frequent_rep(spark):
     assert rewritten.filter("head = 'OpenAl'").count() == 0
 
 
-def test_canonical_mapping_same_rows_on_all_three_paths(spark,
-                                                       monkeypatch):
-    """Driver finalize (default), the literal component broadcast plus
-    window (DRIVER_FINALIZE_MAX_MEMBERS=0) and the distributed connected
-    components (DRIVER_CC_MAX_PAIRS=0) give the same mapping, here over two
-    fuzzy clusters, one of them a transitive chain."""
+def test_canonical_mapping_same_rows_on_both_paths(spark, monkeypatch):
+    """Driver union-find plus driver finalize (default) and the distributed
+    connected components plus window (DRIVER_CC_MAX_PAIRS=0) give the same
+    mapping, here over two fuzzy clusters, one of them a transitive chain."""
     from knowledge_graph_studio_spark.operators import linking
 
     rows = []
@@ -137,8 +135,6 @@ def test_canonical_mapping_same_rows_on_all_three_paths(spark,
 
     want = [("Globexx", "company", "Globex"), ("Globexxx", "company", "Globex"),
             ("OpenAl", "company", "OpenAI")]
-    assert mapping() == want
-    monkeypatch.setattr(linking, "DRIVER_FINALIZE_MAX_MEMBERS", 0)
     assert mapping() == want
     monkeypatch.setattr(linking, "DRIVER_CC_MAX_PAIRS", 0)
     assert mapping() == want
@@ -175,6 +171,54 @@ def test_merge_nodes_interactive_l6(spark):
     # no duplicate edge keys remain
     assert new_edges.count() == new_edges.select(
         "head_id", "tail_id", "rel_type").distinct().count()
+
+
+def test_merge_nodes_interactive_target_type_order_independent(spark):
+    """The merged node and its edges take the TARGET's type whichever node
+    row arrives first: ("ACME", person) merged into ("Acme", company) stays
+    a company on both row orders."""
+    triples = _triples_df(spark, [
+        _t("u", "c1", "ACME", "person", "acquired", "Globex", "company"),
+        _t("u", "c2", "Acme", "company", "acquired", "Globex", "company"),
+    ])
+    nodes = build_nodes(triples, graph="g")
+    edges = build_edges(triples, nodes, graph="g")
+    ids = {r["name"]: r["node_id"] for r in nodes.collect()}
+    from_first = F.when(F.col("node_id") == ids["ACME"], 0).otherwise(1)
+    for order in (from_first.asc(), from_first.desc()):
+        new_nodes, new_edges = merge_nodes_interactive(
+            nodes.orderBy(order).coalesce(1), edges,
+            from_ids=[ids["ACME"]], to_id=ids["Acme"])
+        merged = new_nodes.filter(F.col("node_id") == ids["Acme"]).collect()
+        assert [(r["name"], r["type"]) for r in merged] == [("Acme", "company")]
+        acq = new_edges.filter(F.col("head_id") == ids["Acme"]).collect()
+        assert [(r["head"], r["head_type"]) for r in acq] == [("Acme", "company")]
+
+
+def test_edge_endpoint_names_are_node_names(spark):
+    """Endpoint-name law through build_graph with fuzzy canonicalization:
+    every edge's (head, head_type) and (tail, tail_type) are the node table's
+    (name, type) for head_id/tail_id, and the edge keys are exactly the
+    canonical triples' (head, head_type, relation, tail, tail_type) set."""
+    from knowledge_graph_studio_spark.pipeline import build_graph
+    from knowledge_graph_studio_spark.sources.pages import synthetic_pages
+
+    # rules=[] leaves the corpus' alias spellings ("Open AI") to the fuzzy pass
+    out = build_graph(spark, synthetic_pages(spark, 200, seed=11, partitions=4),
+                      rules=[])
+    names = {r["node_id"]: (r["name"], r["type"])
+             for r in out["nodes"].collect()}
+    edges = out["edges"].collect()
+    assert edges
+    for e in edges:
+        assert names[e["head_id"]] == (e["head"], e["head_type"])
+        assert names[e["tail_id"]] == (e["tail"], e["tail_type"])
+    assert not out["mapping"].isEmpty()  # fuzzy merges really rewrote names
+    canon = apply_canonical_mapping(out["triples"], out["mapping"])
+    key = ["head", "head_type", "relation", "tail", "tail_type"]
+    assert ({tuple(r) for r in canon.select(key).distinct().collect()}
+            == {(e["head"], e["head_type"], e["rel_type"], e["tail"],
+                 e["tail_type"]) for e in edges})
 
 
 def test_merge_law_df_matches_merge_string_props_empty_and_none(spark):
@@ -267,19 +311,6 @@ def test_build_nodes_chunk_count_exact_under_cap(spark):
     assert row["mention_count"] == 12       # endpoint occurrences
     uncapped = build_nodes(triples, graph="g").filter("name = 'Hot'").collect()[0]
     assert uncapped["chunk_count"] == len(uncapped["chunks"]) == 10
-
-
-def test_build_nodes_share_scan_equivalence(spark):
-    """share_scan=True (materialize the endpoint expansion once) must be a
-    pure execution-strategy knob — byte-identical node table."""
-    rows = [_t("u", f"c{i % 7}", f"E{i % 5}", "company", "r",
-               f"T{i % 3}", "company") for i in range(40)]
-    triples = _triples_df(spark, rows)
-    base = sorted(map(str, build_nodes(triples, graph="g",
-                                       max_chunks=4).collect()))
-    shared = sorted(map(str, build_nodes(triples, graph="g", max_chunks=4,
-                                         share_scan=True).collect()))
-    assert base == shared
 
 
 def test_incremental_upsert_equals_full_build(spark):

@@ -204,7 +204,7 @@ def worker(cores: int, pages: int, partitions: int,
     # max_prop_vals=2048), staged explicitly so each stage gets its own wall
     # (the per-stage scaling table is the evidence for WHERE residual
     # inefficiency lives). max_chunks bounds hot-entity provenance — the
-    # web-scale config; see build_nodes docstring.
+    # web-scale config; see linking._merge_tree.
     t0 = time.time()
     triples = triples_from_pages(spark, src, schema, gaz, rules).persist()
     n_triples = triples.count()
@@ -229,7 +229,7 @@ def worker(cores: int, pages: int, partitions: int,
     n_nodes = nodes.count()
     t4 = time.time()
     dt = t4 - t0
-    salt = _salt_count(triples, None)
+    salt = _salt_count(triples)
     spark.stop()
     return {
         "cores": cores, "pages": pages, "partitions": partitions,
