@@ -1,7 +1,7 @@
-"""The one way for driver-side values to enter a plan.
+"""The driver boundary, both directions.
 
-Small driver-side sets (alias maps, schema patterns, query vectors, id and
-term lists) become plan literals here and nowhere else:
+Values in. Small driver-side sets (alias maps, schema patterns, query
+vectors, id and term lists) become plan literals here and nowhere else:
 
 * ``literal_df(spark, rows, schema)`` -> a DataFrame of ``rows``;
 * ``literal_array(values, element_type)`` -> an array Column.
@@ -22,6 +22,14 @@ Filters on an id set keep ``Column.isin(values)``: parquet pushes an ``In``
 over literals down to the scan, and a folded array literal would not be
 pushed. Beyond ``LITERAL_DF_MAX_ROWS`` rows a frame is parallelized with
 ``createDataFrame`` instead, because the plan carries the whole literal.
+
+Rows out. A result whose size depends on the data leaves through
+``bounded_collect(df, max_rows)``: one ``limit(max_rows + 1)`` collect that
+returns the rows, or ``None`` when there are more than ``max_rows`` of them.
+The probe decides and fetches in one pass, and the driver never holds more
+than ``max_rows + 1`` rows; each caller chooses what overflow means (a
+distributed fallback, or an error naming the bound). Pass an ordered frame
+to get its top rows: the sort and the limit plan as one top-k job.
 """
 
 from __future__ import annotations
@@ -50,6 +58,13 @@ def literal_array(values: Iterable, element_type: T.DataType | str) -> Column:
     t = (f"array<{element_type}>" if isinstance(element_type, str)
          else T.ArrayType(element_type))
     return _parsed(list(values), t)
+
+
+def bounded_collect(df: DataFrame, max_rows: int) -> list | None:
+    """``df``'s rows when there are at most ``max_rows`` of them, else
+    ``None``, from one ``limit(max_rows + 1)`` collect."""
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
 
 
 def literal_df(spark: SparkSession, rows: Sequence[tuple],

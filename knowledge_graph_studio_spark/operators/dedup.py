@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.literals import bounded_collect, literal_df
 from . import textstats
 
 _LOG = logging.getLogger(__name__)
@@ -78,13 +79,12 @@ def cap_shingle_df(sh: DataFrame, max_df: int, log: bool = True) -> DataFrame:
     dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
     hot = dfreq.filter(F.col("df") > max_df)
     if log:
-        from ..functions.literals import LITERAL_DF_MAX_ROWS, literal_df
+        from ..functions.literals import LITERAL_DF_MAX_ROWS
 
         # ordered, so the bound is one top-k job: a bare limit() collect
         # runs incremental take jobs over growing partition subsets
-        rows = hot.orderBy(F.desc("df")).limit(LITERAL_DF_MAX_ROWS + 1) \
-            .collect()
-        if len(rows) > LITERAL_DF_MAX_ROWS:
+        rows = bounded_collect(hot.orderBy(F.desc("df")), LITERAL_DF_MAX_ROWS)
+        if rows is None:
             n, worst = hot.agg(F.count("*"), F.max("df")).first()
             _LOG.warning(
                 "cap_shingle_df: dropping %d shingles with df > %d (worst df "
@@ -653,18 +653,16 @@ def neardup_clusters(
     implicit), keeping the label table proportional to the DUPLICATED subset
     of the corpus, not the corpus.
 
-    r6: below DRIVER_CC_MAX_PAIRS verified pairs the closure runs as
-    driver-side union-find instead (the same bounded limit(N+1).collect()
-    probe + fallback design as linking.canonical_mapping): the iterative
-    loop costs ~4 driver-synchronized rounds (join + agg + signature probe
-    each), which dominates wall clock whenever the pair table is small —
-    and a SMALL pair table is the common case, because pairs are
-    proportional to the duplicated subset, not the corpus. Labels are
-    identical by construction (both sides label each component by its min
-    member; parity law-tested in tests/test_linking.py)."""
-    from .linking import (
-        DRIVER_CC_MAX_PAIRS, connected_components, connected_components_driver,
-    )
+    Below DRIVER_CC_MAX_PAIRS verified pairs the closure runs as
+    driver-side union-find instead (linking.pair_components, the same
+    bounded probe + fallback canonical_mapping uses): the iterative loop
+    costs ~4 driver-synchronized rounds (join + agg + signature probe each),
+    which dominates wall clock whenever the pair table is small — and a
+    SMALL pair table is the common case, because pairs are proportional to
+    the duplicated subset, not the corpus. Labels are identical by
+    construction (both sides label each component by its min member;
+    parity law-tested in tests/test_linking.py)."""
+    from .linking import pair_components
 
     if pairs is None:
         gen = {
@@ -673,18 +671,7 @@ def neardup_clusters(
             "simhash": simhash_neardup_pairs,
         }[method]
         pairs = gen(df, id_col=id_col, **kw)
-    p = pairs.select("da", "db").localCheckpoint(eager=False)
-    head = p.limit(DRIVER_CC_MAX_PAIRS + 1).collect()
-    if len(head) <= DRIVER_CC_MAX_PAIRS:
-        comp = connected_components_driver(
-            [(r["da"], r["db"]) for r in head])
-        from ..functions.literals import literal_df
-
-        dt = p.schema["da"].dataType
-        return literal_df(pairs.sparkSession, sorted(comp.items()),
-                          T.StructType([T.StructField("member", dt),
-                                        T.StructField("component", dt)]))
-    return connected_components(p, src="da", dst="db")
+    return pair_components(pairs, src="da", dst="db")
 
 
 def neardup_dedup(
@@ -777,9 +764,6 @@ def seen_before(
     m_bits: int = 1 << 27,
     k: int = 5,
     hash_fn: str = "xxhash64",
-    via: str = "join",
-    max_driver_positions: int = 50_000_000,
-    broadcast_index: bool = False,
 ) -> DataFrame:
     """Flag documents whose content was (probably) already in the history
     corpus: ``seen = 1`` iff ALL k probe positions are set in the history
@@ -789,75 +773,23 @@ def seen_before(
     are reproducible and the contract oracle reproduces the md5_60 family
     bit-for-bit.
 
-    Returns (id, n_probes, n_hits, seen). Two physical strategies, same
-    answer (equality is law-tested):
-
-      * ``via="join"``   explode the new docs' probes and LEFT-join the
-        positions table on ``pos`` — never collects, works at any m_bits;
-        AQE broadcasts the build side when the index is small.
-      * ``via="bitset"`` collect the positions ONCE into an m_bits/8-byte
-        numpy bitset (guarded by ``max_driver_positions``), broadcast it,
-        and test probes in an Arrow-batched mapInPandas — no shuffle on the
-        new-docs side at all, the right shape when the delta is huge and
-        the index fits an executor (2^30 bits = 128 MB covers ~150M docs
-        at k=5 with fpp<1%).
-    """
-    probed = new_docs.select(
+    Returns (id, n_probes, n_hits, seen). One strategy: explode the new
+    docs' distinct probes and LEFT-join the positions table on ``pos``,
+    then count hits per doc. Nothing is collected, so it works at any
+    m_bits; AQE broadcasts the index side when its statistics say it is
+    small (a persisted parquet index carries them)."""
+    ex = new_docs.select(
         F.col(id_col),
-        _bloom_probe_array(content_col, m_bits, k, hash_fn).alias("_probes"))
-
-    if via == "join":
-        ex = probed.select(
-            id_col, F.explode(F.array_distinct("_probes")).alias("pos"))
-        hit = history_positions.select("pos").withColumn("_hit", F.lit(1))
-        if broadcast_index:
-            # caller-asserted small index (parquet-backed indexes carry
-            # stats and AQE converts on its own; in-memory/estimate-less
-            # sources need the hint)
-            hit = F.broadcast(hit)
-        agg = (ex.join(hit, "pos", "left")
-               .groupBy(id_col)
-               .agg(F.count("*").cast("int").alias("n_probes"),
-                    F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
-                    .cast("int").alias("n_hits")))
-        return agg.withColumn(
-            "seen",
-            (F.col("n_hits") == F.col("n_probes")).cast("int"))
-
-    if via == "bitset":
-        import numpy as np
-
-        rows = (history_positions.select("pos")
-                .limit(max_driver_positions + 1).collect())
-        if len(rows) > max_driver_positions:
-            raise ValueError(
-                "history Bloom index exceeds max_driver_positions; "
-                "use via='join' or raise the cap")
-        arr = np.zeros(m_bits, dtype=bool)
-        if rows:
-            arr[np.array([r["pos"] for r in rows], dtype=np.int64)] = True
-        packed = np.packbits(arr)
-        bc = new_docs.sparkSession.sparkContext.broadcast(packed)
-
-        out_schema = f"{id_col} long, n_probes int, n_hits int, seen int"
-
-        def _check(batches):
-            bits = np.unpackbits(np.frombuffer(bc.value, dtype=np.uint8))
-            import pandas as pd
-            for pdf in batches:
-                ids, n_probes, n_hits = [], [], []
-                for i, probes in zip(pdf[id_col], pdf["_probes"]):
-                    ps = np.unique(np.asarray(probes, dtype=np.int64))
-                    ids.append(i)
-                    n_probes.append(len(ps))
-                    n_hits.append(int(bits[ps].sum()))
-                yield pd.DataFrame({
-                    id_col: ids, "n_probes": n_probes, "n_hits": n_hits,
-                    "seen": [int(a == b) for a, b in zip(n_hits, n_probes)]})
-
-        return probed.mapInPandas(_check, out_schema)
-
-    raise ValueError(f"unknown via: {via}")
+        F.explode(F.array_distinct(
+            _bloom_probe_array(content_col, m_bits, k, hash_fn))).alias("pos"))
+    hit = history_positions.select("pos").withColumn("_hit", F.lit(1))
+    agg = (ex.join(hit, "pos", "left")
+           .groupBy(id_col)
+           .agg(F.count("*").cast("int").alias("n_probes"),
+                F.sum(F.coalesce(F.col("_hit"), F.lit(0)))
+                .cast("int").alias("n_hits")))
+    return agg.withColumn(
+        "seen", (F.col("n_hits") == F.col("n_probes")).cast("int"))
 
 
 def banded_hamming_pairs(

@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.literals import literal_df
+from ..functions.literals import bounded_collect, literal_df
 
 # parts-per-million rate resolution: rates are snapped to integers so the
 # gate compares integers (no float threshold can sit on a hash value)
@@ -164,10 +164,10 @@ def pack_sequences(
     shard = F.col(shard_col) if shard_col else F.lit(0)
     d = df.withColumn("_shard", shard.cast("bigint"))
 
-    totals = (d.groupBy("_shard")
-              .agg(F.sum(tokens_col).cast("bigint").alias("_tot"))
-              .orderBy("_shard").limit(max_shards + 1).collect())
-    if len(totals) > max_shards:
+    totals = bounded_collect(
+        d.groupBy("_shard").agg(F.sum(tokens_col).cast("bigint").alias("_tot"))
+        .orderBy("_shard"), max_shards)
+    if totals is None:
         raise ValueError(
             f"more than max_shards={max_shards} shards; coarsen shard_col")
     prefix, acc = [], 0

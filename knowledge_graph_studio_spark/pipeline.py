@@ -80,13 +80,13 @@ def build_graph(
     # long-lived session after callers drop the returned frames.
     triples = triples.localCheckpoint(eager=False)
     if fuzzy:
-        # no checkpoint here: canonical_mapping returns either a literal
-        # relation (driver-finalized small path, free to re-evaluate) or an
-        # internally checkpointed plan (distributed path).
+        # no checkpoint here: canonical_mapping returns its mapping sealed
+        # (a lazy localCheckpoint) on both its driver and distributed CC
+        # paths.
         mapping = canonical_mapping(triples, alias_df=None, fuzzy=True)
         # empty mapping (no fuzzy merges found) -> skip the two broadcast
-        # rewrite joins entirely; isEmpty is ~free on the literal/
-        # checkpointed relation canonical_mapping returns.
+        # rewrite joins entirely; isEmpty is the action that materializes
+        # the sealed mapping, so the rewrite reads it without a re-run.
         canon = triples if mapping.isEmpty() \
             else apply_canonical_mapping(triples, mapping)
     else:

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.embedding_core import TRIPLE_DIM, embed_text
-from ..functions.literals import literal_array, literal_df
+from ..functions.literals import bounded_collect, literal_array, literal_df
 from ..functions.vector import cosine_col
 
 
@@ -623,17 +623,24 @@ def improve_matching(
 
     Scale shape: the extracted terms are query-scale literals; the inventory
     (potentially the whole node table) is scanned ONCE with a codegen'd OR
-    predicate — no join, no shuffle; the collected result is bounded by the
-    match count (query-scale by contract). Apply to nodes for entities and
-    to ``edges.select(rel_type)`` distinct for relations."""
+    predicate — no join, no shuffle; the matches come back through
+    ``bounded_collect`` at LITERAL_DF_MAX_ROWS, and more matches than that
+    raise ValueError. Apply to nodes for entities and to
+    ``edges.select(rel_type)`` distinct for relations."""
+    from ..functions.literals import LITERAL_DF_MAX_ROWS
+
     matched = list(matched or [])
     already = {m.lower() for m in matched}
     terms = sorted({t.lower() for t in extracted} - already)
     if not terms:
         return sorted(set(matched))
-    hits = [r[0] for r in
-            match_candidates(inventory, terms, name_col).collect()]
-    return sorted(set(matched) | set(hits))
+    rows = bounded_collect(match_candidates(inventory, terms, name_col),
+                           LITERAL_DF_MAX_ROWS)
+    if rows is None:
+        raise ValueError(
+            f"improve_matching: more than LITERAL_DF_MAX_ROWS="
+            f"{LITERAL_DF_MAX_ROWS} inventory names match the terms")
+    return sorted(set(matched) | {r[0] for r in rows})
 
 
 def match_candidates(

@@ -9,7 +9,8 @@ batch:
   1. exact-dedups WITHIN the batch (md5 groupBy, keep min id — a segment
      can repeat a page);
   2. flags docs whose content the Bloom index has already seen
-     (``seen_before`` join path — never collects, any m_bits);
+     (``seen_before``: a left join of the docs' probe positions against
+     the index — never collects, any m_bits);
   3. writes the surviving docs to ``docs/batch=<id>`` (idempotent
      overwrite, so restarts replay safely);
   4. appends the survivors' probe positions to the index at

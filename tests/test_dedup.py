@@ -523,36 +523,6 @@ def test_seen_before_recall_and_fp_bound(spark):
     assert fps <= 2
 
 
-def test_seen_before_join_equals_bitset(spark):
-    from knowledge_graph_studio_spark.operators.dedup import (
-        bloom_index_positions, seen_before,
-    )
-
-    hist, new = _bloom_corpora(spark)
-    # tiny filter (m=2^10) so false positives actually occur and both
-    # paths must agree on them, not just on the easy zeros
-    idx = bloom_index_positions(hist, m_bits=1 << 10, k=4)
-    a = sorted(map(tuple,
-                   seen_before(new, idx, m_bits=1 << 10, k=4).collect()))
-    b = sorted(map(tuple,
-                   seen_before(new, idx, m_bits=1 << 10, k=4,
-                               via="bitset").collect()))
-    assert a == b
-    assert any(r[3] == 1 for r in a)
-
-
-def test_seen_before_bitset_cap(spark):
-    from knowledge_graph_studio_spark.operators.dedup import (
-        bloom_index_positions, seen_before,
-    )
-
-    hist, new = _bloom_corpora(spark)
-    idx = bloom_index_positions(hist, m_bits=1 << 16, k=5)
-    with pytest.raises(ValueError, match="max_driver_positions"):
-        seen_before(new, idx, m_bits=1 << 16, k=5, via="bitset",
-                    max_driver_positions=10)
-
-
 def test_seen_before_probe_collisions_counted_once(spark):
     from knowledge_graph_studio_spark.operators.dedup import (
         bloom_index_positions, seen_before,
@@ -566,24 +536,6 @@ def test_seen_before_probe_collisions_counted_once(spark):
         assert 1 <= r["n_probes"] <= 6
         assert 0 <= r["n_hits"] <= r["n_probes"]
         assert r["seen"] == int(r["n_hits"] == r["n_probes"])
-
-
-def test_seen_before_join_path_broadcasts_small_index(spark):
-    from knowledge_graph_studio_spark.operators.dedup import (
-        bloom_index_positions, seen_before,
-    )
-
-    hist, new = _bloom_corpora(spark)
-    idx = bloom_index_positions(hist, m_bits=1 << 16, k=5)
-    plan = (seen_before(new, idx, m_bits=1 << 16, k=5, broadcast_index=True)
-            ._jdf.queryExecution().executedPlan().toString())
-    assert "BroadcastHashJoin" in plan and "SortMergeJoin" not in plan
-    # hinted == unhinted answers (the knob only changes the physical plan)
-    a = sorted(map(tuple, seen_before(new, idx, m_bits=1 << 16, k=5,
-                                      broadcast_index=True).collect()))
-    b = sorted(map(tuple,
-                   seen_before(new, idx, m_bits=1 << 16, k=5).collect()))
-    assert a == b
 
 
 def test_clustering_metrics_pairwise_reference(spark):

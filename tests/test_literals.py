@@ -1,4 +1,5 @@
-"""functions/literals.py: the one way for driver values to enter a plan."""
+"""functions/literals.py: the one way for driver values to enter a plan, and
+the one bounded way for rows to leave it."""
 
 import ast
 from pathlib import Path
@@ -7,7 +8,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from knowledge_graph_studio_spark.functions.literals import (
-    literal_array, literal_df,
+    bounded_collect, literal_array, literal_df,
 )
 
 PKG = Path(__file__).resolve().parent.parent / "knowledge_graph_studio_spark"
@@ -15,6 +16,28 @@ PKG = Path(__file__).resolve().parent.parent / "knowledge_graph_studio_spark"
 # (file under the package, function) allowed to build a frame from a list
 # itself: its rows carry bytes, which JSON cannot hold
 ALLOWED = {("operators/multimodal.py", "synthetic_media")}
+
+# functions in operators/, plans/ and pipeline.py allowed a raw .collect() or
+# .toPandas(): each one's result is bounded by construction; any other
+# data-sized result leaves through bounded_collect
+COLLECT_ALLOWED = {
+    "duplicate_rate": "one-row aggregates",
+    "connected_components._sig": "one-row aggregate",
+    "fit_dsir": "one-row aggregate",
+    "fit_lm_unigram": "one-row aggregate",
+    "lm_bucket_thresholds": "one-row aggregate",
+    "suggest_gopher_thresholds": "cols x quantiles",
+    "validate_triples": "limit(5)",
+    "fit_bpe": "top max_words",
+    "ivf_centroids": "k rows",
+    "_lloyd_step": "k x dim rows",
+    "induce_schema": "the schema's patterns",
+    "assign_chunks": "at most target_ids rows",
+    "EdgeAnnIndex.load": "one meta row",
+    "EdgeAnnIndex.candidate_ids": "top max_candidates",
+    "_query_graph": "top params.limit",
+    "query_graph": "log ids, human-scale by the Entry C contract",
+}
 
 
 def test_literal_df_thousand_rows_costs_constant_calls(spark, gateway_calls):
@@ -165,3 +188,103 @@ def test_driver_values_enter_plans_only_through_literals():
         found += [(rel, fn, kind) for fn, kind in _bypasses(path.read_text())
                   if (rel, fn) not in ALLOWED]
     assert found == [], found
+
+
+# --------------------------------------------------------------------------- #
+# rows out: bounded_collect, and a source scan keeping collects bounded
+# --------------------------------------------------------------------------- #
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_bounded_collect_bound_order_and_jobs(spark):
+    df = spark.range(0, 40, 1, 8)
+    assert sorted(r.id for r in bounded_collect(df, 40)) == list(range(40))
+    assert bounded_collect(df, 39) is None
+    assert bounded_collect(df.filter("id < 0"), 0) == []
+    ordered = df.orderBy(F.desc("id"))
+    assert [r.id for r in bounded_collect(ordered, 40)] == \
+        list(range(39, -1, -1))
+    # the probe is the fetch: no count job ahead of the collect
+    assert _jobs_of(spark, lambda: bounded_collect(df, 100)) == 1
+
+
+class _CollectScan(ast.NodeVisitor):
+    def __init__(self):
+        self.scope, self.hits = [], []
+
+    def _enter(self, node):
+        self.scope.append(node.name)
+        self.generic_visit(node)
+        self.scope.pop()
+
+    visit_FunctionDef = visit_ClassDef = _enter
+
+    def visit_Call(self, node):
+        f, args = node.func, node.args
+        where = ".".join(self.scope) or "<module>"
+        if (isinstance(f, ast.Attribute) and f.attr == "limit" and args
+                and isinstance(args[0], ast.BinOp)
+                and isinstance(args[0].op, ast.Add)
+                and isinstance(args[0].right, ast.Constant)
+                and args[0].right.value == 1):
+            self.hits.append((where, "limit(+1)"))
+        elif (isinstance(f, ast.Attribute)
+              and f.attr in ("collect", "toPandas") and not args):
+            self.hits.append((where, f.attr))
+        self.generic_visit(node)
+
+
+def _driver_exits(source):
+    scan = _CollectScan()
+    scan.visit(ast.parse(source))
+    return scan.hits
+
+
+def test_source_scan_detects_each_unbounded_exit():
+    src = '''
+class Index:
+    def load(self, df, n):
+        return df.limit(n + 1).collect()
+
+def site(df, rows):
+    a = df.toPandas()
+    b = [r for r in rows.collect()]
+    c = df.limit(5)
+'''
+    assert _driver_exits(src) == [("Index.load", "collect"),
+                                  ("Index.load", "limit(+1)"),
+                                  ("site", "toPandas"),
+                                  ("site", "collect")]
+
+
+def test_rows_leave_plans_only_through_bounded_collect():
+    probes, unlisted, listed = [], [], set()
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "functions/literals.py":
+            continue
+        scoped = (rel.startswith(("operators/", "plans/"))
+                  or rel == "pipeline.py")
+        for where, kind in _driver_exits(path.read_text()):
+            if kind == "limit(+1)":
+                probes.append((rel, where))
+            elif scoped and where in COLLECT_ALLOWED:
+                listed.add(where)
+            elif scoped:
+                unlisted.append((rel, where, kind))
+    assert probes == [], probes
+    assert unlisted == [], unlisted
+    # every allowlisted function still holds a collect
+    assert listed == set(COLLECT_ALLOWED), set(COLLECT_ALLOWED) - listed

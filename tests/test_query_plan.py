@@ -387,6 +387,21 @@ def test_improve_matching_q17(spark):
     assert improve_matching(inv, ["initech"], matched=["Initech"]) == ["Initech"]
 
 
+def test_improve_matching_raises_past_the_literal_bound(spark, monkeypatch):
+    """The match collect is bounded: more matches than LITERAL_DF_MAX_ROWS
+    raise, naming the bound, instead of reaching the driver."""
+    from knowledge_graph_studio_spark.functions import literals
+    from knowledge_graph_studio_spark.plans.query import improve_matching
+
+    inv = spark.createDataFrame(
+        [("Acme",), ("Acme Labs",), ("Acme Corp",), ("Initech",)], ["name"])
+    assert improve_matching(inv, ["acme"]) == [
+        "Acme", "Acme Corp", "Acme Labs"]
+    monkeypatch.setattr(literals, "LITERAL_DF_MAX_ROWS", 2)
+    with pytest.raises(ValueError, match="LITERAL_DF_MAX_ROWS=2"):
+        improve_matching(inv, ["acme"])
+
+
 def test_hydrate_chunk_contents_empty_and_null_arrays(spark, graph):
     """Rows with [] or NULL chunks must survive hydration with a well-typed
     empty list (ADVICE: explode dropped them, leaving NULL chunk_contents)."""
