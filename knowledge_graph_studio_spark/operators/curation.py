@@ -197,8 +197,9 @@ def curate_corpus(
 
     if fuzzy_dedup:
         from .dedup import neardup_dedup
-        # after the exact pass only NEAR (non-identical) duplicates remain,
-        # so the generator's collapse probe will skip its collapse here
+        # after the exact pass only NEAR (non-identical) duplicates remain;
+        # neardup_dedup's generators keep their verbatim collapse off
+        # (collapse_exact=False) because exact dedup already ran
         cur = _seal(neardup_dedup(cur, id_col=id_col, text_col=text_col,
                                   **(fuzzy_kwargs or {})))
         stages["fuzzy_dedup"] = cur

@@ -43,6 +43,13 @@ Scale notes (the load-bearing part):
     shuffle join on node id; hot components are star-shaped alias clusters
     so the iteration count is the graph diameter (small); lineage is
     truncated every iteration via localCheckpoint to keep plans bounded.
+  * Every graph operator (connected_components, pagerank, triangle_counts,
+    plans.query.khop_distances) reads ONE undirected edge table,
+    undirected_edges: both orientations, distinct, sealed once eagerly
+    (weighted PageRank alone keeps its weight-summing table).
+    Loops with no per-round probe (PageRank ranks, k-hop frontiers) cut
+    lineage on ONE cadence, every ROUNDS_PER_SEAL rounds; CC seals every
+    round because its convergence signature reads each round's labels.
 """
 
 from __future__ import annotations
@@ -80,23 +87,9 @@ def rules_to_alias_df(spark: SparkSession, rules: list) -> DataFrame:
 def apply_merge_rules(triples: DataFrame, alias_df: DataFrame) -> DataFrame:
     """Rewrite head/tail through the alias map (rule.py:141-156 semantics:
     name ∈ from_node_names AND type == node_type → to_node_name)."""
-    a = F.broadcast(alias_df)
-    out = (
-        triples.join(
-            a.select(F.col("from_name").alias("head"),
-                     F.col("node_type").alias("head_type"),
-                     F.col("to_name").alias("_h_to")),
-            ["head", "head_type"], "left")
-        .join(
-            a.select(F.col("from_name").alias("tail"),
-                     F.col("node_type").alias("tail_type"),
-                     F.col("to_name").alias("_t_to")),
-            ["tail", "tail_type"], "left")
-        .withColumn("head", F.coalesce("_h_to", "head"))
-        .withColumn("tail", F.coalesce("_t_to", "tail"))
-        .drop("_h_to", "_t_to")
-    )
-    return out
+    return apply_canonical_mapping(triples, alias_df.select(
+        F.col("from_name").alias("name"), F.col("node_type").alias("type"),
+        F.col("to_name").alias("canonical_name")))
 
 
 # --------------------------------------------------------------------------- #
@@ -164,33 +157,51 @@ def fuzzy_candidate_pairs(
 # Connected components (label propagation to min, checkpointed)
 # --------------------------------------------------------------------------- #
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 20,
-) -> DataFrame:
-    """(src, dst) undirected edges -> (member, component) with component =
-    min member label. Iterative DataFrame joins; localCheckpoint every
-    iteration truncates lineage; converges in O(diameter) rounds (alias/fuzzy
-    clusters are stars, so ~2-3). Skew: the join key is the member id, not the
-    component id, so hot components don't concentrate on one task; AQE skew
-    handling covers residual imbalance."""
-    # ONE EAGER localCheckpoint on the symmetrized edge table: the initial
-    # label table reads sym twice in a single job (select u UNION select v)
-    # and every min-label round joins against it again — without lineage
-    # truncation each of those re-runs the whole upstream edge GENERATOR
-    # (for fuzzy-dedup clusters that is the full ngram/minhash inverted-
-    # index pair join). Eager (not eager=False) because the double read in
-    # the init job happens BEFORE a lazy checkpoint would have materialized
-    # (measured: lazy left neardup_dedup at 17.4 s, eager takes it to ~11 s
-    # at sf0.1; kg-sized edge inputs are unaffected within noise).
-    sym = (
+# Lineage-cut cadence of every iterative graph loop that does not probe
+# each round: 4 rounds per query execution lets AQE pipeline the iteration
+# joins inside one execution while the unrolled plan stays small (measured
+# on PageRank, r6: a seal per round cost ~2.6x more driver syncs).
+ROUNDS_PER_SEAL = 4
+
+
+def undirected_edges(edges: DataFrame, src: str = "src",
+                     dst: str = "dst") -> DataFrame:
+    """Both orientations of every (src, dst) edge, distinct, as (u, v) —
+    the one undirected edge table of connected_components, pagerank,
+    triangle_counts and plans.query.khop_distances.
+
+    Sealed with ONE EAGER localCheckpoint: every caller reads the table
+    more than once, starting in its first job (CC's initial label table is
+    select u UNION select v; PageRank and the triangle count derive degree
+    tables from it and join back onto it; k-hop joins every frontier of one
+    plan against it), and every later round joins against it again.
+    Without the seal each read re-runs the whole upstream edge GENERATOR
+    (for fuzzy-dedup clusters the full ngram/minhash inverted-index pair
+    join); a lazy seal would materialize only after that first double read
+    (measured: lazy left neardup_dedup at 17.4 s, eager takes it to ~11 s
+    at sf0.1; kg-sized edge inputs are unaffected within noise)."""
+    return (
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
         .localCheckpoint()
     )
+
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+) -> DataFrame:
+    """(src, dst) undirected edges -> (member, component) with component =
+    min member label. Iterative DataFrame joins; localCheckpoint every
+    iteration truncates lineage; the loop runs until the label signature
+    stops changing — labels only decrease, so that is within diameter + 1
+    rounds (alias/fuzzy clusters are stars, so ~2-3). Skew: the join key is
+    the member id, not the component id, so hot components don't
+    concentrate on one task; AQE skew handling covers residual
+    imbalance."""
+    sym = undirected_edges(edges, src, dst)
     cc = (
         sym.select("u").union(sym.select("v")).distinct()
         .select(F.col("u").alias("member"), F.col("u").alias("component"))
@@ -218,7 +229,7 @@ def connected_components(
         return (row["a"], row["b"])
 
     prev_sig = _sig(cc)
-    for _ in range(max_iter):
+    while True:
         # every member proposes its current component to its neighbors
         proposals = (
             sym.join(cc, sym["u"] == cc["member"], "inner")
@@ -238,9 +249,8 @@ def connected_components(
         sig = _sig(nxt)
         cc = nxt
         if sig == prev_sig:
-            break
+            return cc
         prev_sig = sig
-    return cc
 
 
 def connected_components_driver(pairs: list[tuple]) -> dict:
@@ -303,17 +313,13 @@ def pagerank(
     the destination), the same skew profile as connected_components — the
     join key is the member, not the component, and AQE skew-join covers hot
     entities. The weight-annotated edge table is checkpointed once and
-    reused every round; ranks are checkpointed per round to truncate
-    lineage. Symmetrization means every node has out-degree >= 1, so there
-    is no dangling-mass redistribution term."""
+    reused every round (unweighted: undirected_edges plus ``w = 1``); ranks
+    are checkpointed every ROUNDS_PER_SEAL rounds to truncate lineage.
+    Symmetrization means every node has out-degree >= 1, so there is no
+    dangling-mass redistribution term."""
     if weight_col is None:
-        sym = (
-            edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-            .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-            .distinct()
-            .select("u", "v", F.lit(1).cast("long").alias("w"))
-            .localCheckpoint()
-        )
+        sym = undirected_edges(edges, src, dst).withColumn(
+            "w", F.lit(1).cast("long"))
     else:
         w = F.col(weight_col).cast("long")
         sym = (
@@ -361,17 +367,17 @@ def pagerank(
              + F.expr(f"({damping_pct} * s) div 100")
              ).cast("long").alias("rank"),
         )
-        # Truncate lineage every 4th round and at the end (the returned
-        # frame stays checkpointed for downstream reuse). r6: a checkpoint
-        # per round cost one synchronous AQE stage-materialization round
-        # trip per iteration (localCheckpoint executes all non-result
-        # stages eagerly even with eager=False — measured 38 jobs for the
-        # 5-iteration bench entry); with no per-round reuse (each rank
-        # feeds exactly the next round) the unrolled plan grows only
-        # linearly, so 4 rounds per query execution is safe and lets AQE
-        # pipeline the iteration joins inside one execution (~2.6x fewer
-        # driver syncs).
-        if (i + 1) % 4 == 0 or i == n_iter - 1:
+        # Truncate lineage every ROUNDS_PER_SEAL-th round and at the end
+        # (the returned frame stays checkpointed for downstream reuse). r6:
+        # a checkpoint per round cost one synchronous AQE stage-
+        # materialization round trip per iteration (localCheckpoint
+        # executes all non-result stages eagerly even with eager=False —
+        # measured 38 jobs for the 5-iteration bench entry); with no
+        # per-round reuse (each rank feeds exactly the next round) the
+        # unrolled plan grows only linearly, so ROUNDS_PER_SEAL rounds per
+        # query execution is safe and lets AQE pipeline the iteration joins
+        # inside one execution (~2.6x fewer driver syncs).
+        if (i + 1) % ROUNDS_PER_SEAL == 0 or i == n_iter - 1:
             rank = rank.localCheckpoint(eager=False)
     return rank
 
@@ -394,18 +400,18 @@ def triangle_counts(
     O(sqrt(|E|)), so the wedge join is Sum C(outdeg, 2) = O(|E|^1.5) worst
     case instead of Sum C(deg, 2), which a hot hub would otherwise make
     quadratic. Each triangle is emitted exactly once (at its lowest-ordered
-    vertex); joins shuffle on member ids (AQE skew-join covers hubs)."""
-    e = (
-        edges.select(F.least(F.col(src), F.col(dst)).alias("u"),
-                     F.greatest(F.col(src), F.col(dst)).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint()  # eager: read twice in the degree job below
-    )
+    vertex); joins shuffle on member ids (AQE skew-join covers hubs).
+
+    Input normalization rides the shared undirected_edges table: its
+    ``u < v`` half is each edge once whatever its input orientation or
+    multiplicity, self-loops drop out of both that half and the degree
+    (``u != v``), and a node's degree is its count of distinct other
+    neighbours, read off the one orientation keyed by ``u``."""
+    sym = undirected_edges(edges, src, dst)
+    e = sym.filter(F.col("u") < F.col("v"))
     deg = (
-        e.select(F.col("u").alias("member"))
-        .union(e.select(F.col("v").alias("member")))
-        .groupBy("member").agg(F.count("*").alias("degree"))
+        sym.filter(F.col("u") != F.col("v"))
+        .groupBy(F.col("u").alias("member")).agg(F.count("*").alias("degree"))
         .localCheckpoint(eager=False)
     )
     du = deg.select(F.col("member").alias("u"), F.col("degree").alias("du"))

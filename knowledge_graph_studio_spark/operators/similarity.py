@@ -287,23 +287,25 @@ def lsh_query_keys(vec, n_planes: int, n_tables: int,
             for t in range(n_tables)]
 
 
-def _projection_udf(dim: int, n_planes: int, n_tables: int, seed: int):
-    """Returns a mapInPandas fn adding LSH bucket keys per table."""
+def _projection_udf(n_planes: int, n_tables: int, seed: int):
+    """Returns a mapInPandas fn emitting one (id, table_id, bucket) row per
+    (vector, table). The planes are built from each batch's vector width;
+    _lsh_planes is seeded, so every batch (and the driver-side prober)
+    sees the same family without a driver-side read of the width."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        planes, powers = _lsh_planes(dim, n_planes, n_tables, seed)
         for pdf in batches:
             if len(pdf) == 0:  # zero-row Arrow batch: (0,)-shaped matmul fails
                 continue
             mat = np.array([np.asarray(v, dtype=np.float64) for v in pdf["_vec"]])
-            keys = []
-            for t in range(n_tables):
-                bits = (mat @ planes[t].T) > 0  # (n, n_planes)
-                keys.append(bits @ powers)
-            res = pdf[["_id"]].copy()
-            for t in range(n_tables):
-                res[f"bucket_{t}"] = keys[t]
-            yield res
+            planes, powers = _lsh_planes(mat.shape[1], n_planes, n_tables, seed)
+            bits = np.stack([mat @ planes[t].T for t in range(n_tables)],
+                            axis=1) > 0  # (n, n_tables, n_planes)
+            yield pd.DataFrame({
+                "_id": np.repeat(pdf["_id"].to_numpy(), n_tables),
+                "table_id": np.tile(np.arange(n_tables, dtype=np.int32), len(pdf)),
+                "bucket": (bits @ powers).ravel(),
+            })
 
     return run
 
@@ -316,28 +318,13 @@ def lsh_bucket_keys(
     n_tables: int = 4,
     seed: int = 7,
 ) -> DataFrame:
-    """(id, table_id, bucket) — one row per (vector, table)."""
-    dim = len(df.select(vec_col).first()[0])
-    schema = T.StructType(
-        [T.StructField("_id", T.LongType())]
-        + [T.StructField(f"bucket_{t}", T.LongType()) for t in range(n_tables)]
-    )
+    """(id, table_id, bucket) — one row per (vector, table). An empty
+    frame gives an empty result."""
     src = df.select(F.col(id_col).cast("long").alias("_id"),
                     F.col(vec_col).alias("_vec"))
-    keyed = src.mapInPandas(
-        _projection_udf(dim, n_planes, n_tables, seed), schema=schema
-    )
-    stacked = keyed.select(
-        "_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(t).alias("table_id"),
-                         F.col(f"bucket_{t}").alias("bucket"))
-                for t in range(n_tables)
-            ])
-        ).alias("tb"),
-    )
-    return stacked.select(F.col("_id").alias(id_col), "tb.table_id", "tb.bucket")
+    keyed = src.mapInPandas(_projection_udf(n_planes, n_tables, seed),
+                            schema="_id long, table_id int, bucket long")
+    return keyed.withColumnRenamed("_id", id_col)
 
 
 def ivf_assign(

@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -38,6 +39,7 @@ from pyspark.sql import types as T
 from ..functions.embedding_core import TRIPLE_DIM, embed_text
 from ..functions.literals import bounded_collect, literal_array, literal_df
 from ..functions.vector import cosine_col
+from ..operators.linking import ROUNDS_PER_SEAL, undirected_edges
 
 
 @dataclass
@@ -310,18 +312,10 @@ class EdgeAnnIndex:
         changed in place (possible only for inputs whose verbalization
         includes mutated properties) keeps its old buckets — use a full
         rebuild for those (pipeline.refresh_ann_index(mode="rebuild"))."""
-        from ..operators.similarity import lsh_bucket_keys
-
-        keyed = lsh_bucket_keys(new_edges_embedded, "embedding", "edge_id",
-                                self.n_planes, self.n_tables, self.seed)
-        new_idx = keyed.select(
-            "edge_id",
-            (F.shiftleft(F.col("table_id").cast("long"), _TB_SHIFT)
-             + F.col("bucket")).alias("tb_key"),
-        )
-        n_new = new_edges_embedded.count()
-        return EdgeAnnIndex(self.index_df.unionByName(new_idx),
-                            self.n_rows + n_new, self.n_planes,
+        new = self.build(new_edges_embedded, self.n_planes, self.n_tables,
+                         self.seed)
+        return EdgeAnnIndex(self.index_df.unionByName(new.index_df),
+                            self.n_rows + new.n_rows, self.n_planes,
                             self.n_tables, self.seed)
 
 
@@ -381,13 +375,18 @@ def khop_distances(
     graph UI issues; the structured prefilter (Q11) restricts to an id set,
     this grows one.
 
-    Scale shape: level-synchronous frontier BFS as iterative DataFrame
-    joins — per round one join frontier><edges (shuffle on member id, AQE
-    skew-join for hub entities) and one left-anti against the visited set;
-    the visited/distance table is checkpointed per round to truncate
-    lineage. Rounds = min(max_hops, eccentricity), each a constant number
-    of shuffles; the frontier is emptiness-probed so a converged expansion
-    stops early.
+    Scale shape: level-synchronous frontier BFS as ONE plan per
+    ROUNDS_PER_SEAL rounds over the shared undirected_edges table. Hop i's
+    frontier is the distinct set of neighbours of hop i-1's frontier (one
+    join, shuffle on member id, AQE skew-join for hub entities); the result
+    is the minimum hop per member over the seeds and every frontier, which
+    is the BFS distance because a node first appears at its shortest walk.
+    There is no emptiness probe and no anti-join against earlier rounds:
+    the loop always builds ``max_hops`` rounds (once a frontier covers its
+    component, later ones only revisit members at longer walks, which the
+    minimum ignores), and only the frontier is sealed, lazily,
+    after each ROUNDS_PER_SEAL-th round that is not the last, so the plan
+    stays bounded for long expansions.
 
     The seed set is query-scale, so it rides as a Catalyst literal frame
     (functions.literals.literal_df: one JVM task, no Python worker) with
@@ -400,26 +399,16 @@ def khop_distances(
                       T.StructField("dist", T.LongType())]))
     if not seeds:  # limit(0) plans to an empty LocalRelation: no job
         return dist.limit(0)
-    sym = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    frontier = dist.select("member")
+    sym = undirected_edges(edges, src, dst)
+    frontier, hops = dist.select("member"), [dist]
     for i in range(1, max_hops + 1):
-        nxt = (
-            sym.join(frontier, sym["u"] == frontier["member"])
-            .select(F.col("v").alias("member")).distinct()
-            .join(dist, "member", "left_anti")
-            .withColumn("dist", F.lit(i).cast("long"))
-            .localCheckpoint()  # eager: probed below AND unioned
-        )
-        if nxt.isEmpty():
-            break
-        dist = dist.union(nxt).localCheckpoint(eager=False)
-        frontier = nxt.select("member")
-    return dist
+        frontier = (sym.join(frontier, sym["u"] == frontier["member"])
+                    .select(F.col("v").alias("member")).distinct())
+        if i % ROUNDS_PER_SEAL == 0 and i < max_hops:
+            frontier = frontier.localCheckpoint(eager=False)
+        hops.append(frontier.withColumn("dist", F.lit(i).cast("long")))
+    return (reduce(DataFrame.union, hops)
+            .groupBy("member").agg(F.min("dist").alias("dist")))
 
 
 def bm25_topk(

@@ -400,6 +400,16 @@ def test_connected_components_matches_union_find_random(spark):
     assert all(c == min(ms) for c, ms in g_dist.items())
 
 
+def test_connected_components_runs_to_convergence_on_a_long_path(spark):
+    """A 31-node path needs 30 min-label rounds: every member ends in
+    component 0, however many rounds that takes."""
+    df = spark.createDataFrame([(i, i + 1) for i in range(30)],
+                               "src long, dst long")
+    got = {r["member"]: r["component"]
+           for r in connected_components(df).collect()}
+    assert got == {i: 0 for i in range(31)}
+
+
 def test_fuzzy_pairs_exact_recall_for_first_char_indels(spark):
     # a first-character insertion was missed by prefix blocking; the
     # deletion-neighborhood join is exact for one edit

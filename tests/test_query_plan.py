@@ -611,7 +611,7 @@ def test_khop_distances_matches_bfs(spark):
 def test_khop_early_stop_and_isolated_seed(spark):
     from knowledge_graph_studio_spark.plans.query import khop_distances
 
-    # two-node component: frontier empties after hop 1, loop stops early
+    # two-node component: hops past 1 only revisit a and b at longer walks
     df = spark.createDataFrame([("a", "b")], ["src", "dst"])
     got = {r["member"]: r["dist"]
            for r in khop_distances(df, ["a"], max_hops=10).collect()}
@@ -647,6 +647,66 @@ def test_khop_long_ids_stay_integer(spark):
     rows = {r["member"]: r["dist"] for r in got.collect()}
     assert rows == {2: 0, big: 0, 1: 1, 3: 1}
     assert all(type(m) is int for m in rows)
+
+
+def _count_calls(monkeypatch, cls, name):
+    """Count calls of ``cls.name`` (still delegating) -> list of calls.
+    Patch the concrete frame class (``type(df)``): it overrides the
+    ``pyspark.sql.DataFrame`` base methods."""
+    calls, orig = [], getattr(cls, name)
+
+    def wrapper(self, *a, **kw):
+        calls.append(a or kw)
+        return orig(self, *a, **kw)
+
+    monkeypatch.setattr(cls, name, wrapper)
+    return calls
+
+
+def test_khop_two_hops_is_one_plan(spark, monkeypatch):
+    """A short expansion seals only the undirected edge table and never
+    probes a frontier for emptiness."""
+    from knowledge_graph_studio_spark.plans.query import khop_distances
+
+    df = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")], ["src", "dst"])
+    seals = _count_calls(monkeypatch, type(df), "localCheckpoint")
+    probes = _count_calls(monkeypatch, type(df), "isEmpty")
+    got = {r["member"]: r["dist"]
+           for r in khop_distances(df, ["a"], max_hops=2).collect()}
+    assert got == {"a": 0, "b": 1, "c": 2}
+    assert len(seals) == 1
+    assert probes == []
+
+
+def test_khop_long_path_exact_with_bounded_seals(spark, monkeypatch):
+    """20 hops along a 31-node path: exact distances 0..20, and the frontier
+    is sealed only every ROUNDS_PER_SEAL rounds."""
+    from knowledge_graph_studio_spark.operators.linking import ROUNDS_PER_SEAL
+    from knowledge_graph_studio_spark.plans.query import khop_distances
+
+    df = spark.createDataFrame([(i, i + 1) for i in range(30)],
+                               "src long, dst long")
+    seals = _count_calls(monkeypatch, type(df), "localCheckpoint")
+    got = {r["member"]: r["dist"]
+           for r in khop_distances(df, [0], max_hops=20).collect()}
+    assert got == {i: i for i in range(21)}
+    assert len(seals) <= 1 + 20 // ROUNDS_PER_SEAL
+
+
+def test_ann_index_extend_with_no_new_edges(spark):
+    """An update that mints no edge extends the index by nothing."""
+    from knowledge_graph_studio_spark.plans.query import EdgeAnnIndex
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5 - 2) for j in range(8)])
+         for i in range(6)], "edge_id long, embedding array<double>")
+    idx = EdgeAnnIndex.build(emb, n_planes=3, n_tables=4, seed=3)
+    before = sorted(map(tuple, idx.index_df.collect()))
+    ext = idx.extend(emb.limit(0))
+    assert ext.n_rows == idx.n_rows == 6
+    assert sorted(map(tuple, ext.index_df.collect())) == before
+    assert len(before) == 6 * 4
 
 
 def test_rrf_fuse_matches_integer_reference(spark):
