@@ -9,6 +9,9 @@ atomic unit is a url-hash bucket: each bucket's output directory is written in
 full, then its manifest record appears — a bucket with no manifest record is
 treated as never-run and is overwritten idempotently on retry (rename-free
 last-writer-wins, safe because content is deterministic per bucket).
+Committed tables are written by :func:`write_counted`, which observes the
+row count on the write itself (no read-back job). Kill/restart tests inject
+their crash by patching ``RunManifest.commit``.
 
 In an Iceberg deployment the same interface maps onto `MERGE INTO` + snapshot
 ids; the manifest schema is deliberately a plain table so it ports: partition
@@ -21,9 +24,11 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Iterator
+from contextlib import contextmanager
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.literals import literal_df
@@ -69,14 +74,8 @@ class RunManifest:
         return os.path.join(self.dir, f"{stage}_p{partition_id:05d}.json")
 
     def committed(self, stage: str) -> set[int]:
-        out = set()
-        for f in os.listdir(self.dir):
-            if f.startswith(f"{stage}_p") and f.endswith(".json"):
-                with open(os.path.join(self.dir, f)) as fh:
-                    rec = json.load(fh)
-                if rec.get("status") == "committed":
-                    out.add(rec["partition_id"])
-        return out
+        return {r["partition_id"] for r in self.records()
+                if r["stage"] == stage and r["status"] == "committed"}
 
     def commit(self, stage: str, partition_id: int, started_at: float,
                **metrics: Any) -> None:
@@ -141,6 +140,15 @@ class RunManifest:
         return deleted
 
 
+def write_counted(df: DataFrame, path: str) -> int:
+    """Write ``df`` to ``path`` as parquet (overwrite) and return its row
+    count, observed on the write's own job instead of a read-back count."""
+    obs = Observation()
+    df.observe(obs, F.count(F.lit(1)).alias("rows")) \
+        .write.mode("overwrite").parquet(path)
+    return obs.get["rows"]
+
+
 class GraphStatus:
     """Graph lifecycle row — the reference tracks creating/updating/ready/
     failed plus an errors list per graph (graph_service.py:751-832,
@@ -174,6 +182,22 @@ class GraphStatus:
                 return json.load(fh)
         except FileNotFoundError:
             return None
+
+    @contextmanager
+    def lifecycle(self, graph: str) -> Iterator[dict]:
+        """One build of ``graph``: 'creating' ('updating' over a ready
+        graph), then 'failed' with ``"{type}: {msg}"`` if the body raises,
+        else 'ready' with the counts the body put in the yielded dict."""
+        prior = self.get(graph)
+        self.set(graph, "updating" if prior and prior["status"] == "ready"
+                 else "creating")
+        counts: dict = {}
+        try:
+            yield counts
+        except Exception as exc:  # recorded, then re-raised (ref :806-832)
+            self.set(graph, "failed", errors=[f"{type(exc).__name__}: {exc}"])
+            raise
+        self.set(graph, "ready", **counts)
 
 
 class DocumentLedger:

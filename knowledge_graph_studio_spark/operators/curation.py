@@ -35,20 +35,27 @@ laws in tests/test_curation.py). The plan stays Spark-shaped end to end:
 stage outputs are DataFrames, nothing collects, and the only driver actions
 are the optional funnel counts.
 
-At 100 TB you run this as one job per stage group with materialization
-between groups (the funnel IS the audit log). In-process the same boundary
-exists as a non-eager localCheckpoint per stage (see the sealing-policy
-comment in curate_corpus): each stage embeds its input's plan on both sides
-of an id-join, so an unsealed lazy composition would duplicate the upstream
-DAG exponentially across the ~10 stages.
+Stages 0-3b, 4-10 and 11-13 are three stage groups (clean, filter, select);
+curate_corpus composes them and run_curation_job materializes and commits
+each one. At 100 TB you run this as one job per stage group with
+materialization between groups (the funnel IS the audit log). In-process
+the same boundary exists as a non-eager localCheckpoint per stage (see the
+sealing-policy comment above _seal): each stage embeds its input's plan on
+both sides of an id-join, so an unsealed lazy composition would duplicate
+the upstream DAG exponentially across the ~10 stages.
 """
 
 from __future__ import annotations
+
+import inspect
+import time
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..io.catalog import RunManifest, write_counted
+from ..session import ensure_width
 from .cleaning import (
     canonicalize_urls, decontaminate, span_dedup, strip_boilerplate,
 )
@@ -56,63 +63,38 @@ from .sampling import sample_mix
 from .textstats import gopher_filter, gopher_repetition
 
 
-def curate_corpus(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
+# Every stage output is sealed with a lazy localCheckpoint: each stage embeds
+# its input's plan at least twice (clean side + passthrough side of the
+# id-join), so a fully lazy ~10-stage composition grows ONE flat DAG
+# exponentially (measured: 168 s for the sf0.1 funnel vs ~20 s sealed).
+# Sealing less often measured slower (r6, sf0.1 bench funnel: per-stage
+# 13.2 s, only multi-pass stage inputs 18.1 s, every 2nd stage 20.4 s) — the
+# funnel is stage-cost-bound, and unsealed chains duplicate post-exchange
+# work.
+def _seal(df: DataFrame) -> DataFrame:
+    return df.localCheckpoint(eager=False)
+
+
+def _rewrite(clean: DataFrame, src: DataFrame, id_col: str,
+             text_col: str) -> DataFrame:
+    # swap in clean_text, preserving any extra columns from src
+    return (src.drop(text_col)
+            .join(clean.select(id_col, F.col("clean_text").alias(text_col)),
+                  id_col))
+
+
+def _clean_group(
+    cur: DataFrame, stages: dict, id_col: str, text_col: str, *,
     url_col: str | None = None,
-    eval_df: DataFrame | None = None,
-    decontaminate_n: int = 13,
-    mix_rates: dict[str, float] | None = None,
-    stratum_col: str | None = None,
-    boilerplate_max_df_frac: float = 0.05,
-    gopher: bool = True,
-    fuzzy_dedup: bool = False,
-    fuzzy_kwargs: dict | None = None,
-    lm_model: tuple[DataFrame, int] | None = None,
-    lm_drop_bucket: str = "tail",
-    lm_thresholds: tuple[int, int] | None = None,
     blocked_domains: DataFrame | None = None,
     ts_col: str | None = None,
-    gopher_kwargs: dict | None = None,
-    repetition_kwargs: dict | None = None,
+    boilerplate_max_df_frac: float = 0.05,
     substr_dedup_k: int | None = None,
-    dsir_target: DataFrame | None = None,
-    dsir_top_n: int | None = None,
-    dsir_kwargs: dict | None = None,
-    pack_seq_len: int | None = None,
-    pack_shards: int = 128,
-    clean_text_stages: bool = True,
-    exact_dedup: bool = True,
-    pii: bool = True,
-) -> dict[str, DataFrame]:
-    """Run the full curation pipeline; returns ``{"docs": final_df,
-    "stages": {name: df}}`` with every intermediate stage inspectable.
-
-    The final df carries (id_col, text_col [, stratum_col, copy]) with text
-    fully cleaned and redacted. Use :func:`curation_funnel` on ``stages``
-    for the per-stage attrition report."""
-    from ..session import ensure_width
-
-    # widen a narrow input ONCE up front: a small corpus scans as 1-2
-    # partitions and every fan-out stage (n-gram explode, shingles) would
-    # run its map work near-serial regardless of core count (measured:
-    # gopher_repetition 8.0 s 1-wide vs 1.7 s 8-wide on sf0.1). No-op when
-    # the input already meets cluster width — always true at scale.
-    stages: dict[str, DataFrame] = {"input": ensure_width(docs)}
-    cur = stages["input"]
-
-    # Every stage output is sealed with a lazy localCheckpoint: each stage
-    # embeds its input's plan at least twice (clean side + passthrough side
-    # of the id-join), so a fully lazy ~10-stage composition grows ONE flat
-    # DAG exponentially (measured: 168 s for the sf0.1 funnel vs ~20 s
-    # sealed). Sealing less often measured slower (r6, sf0.1 bench funnel:
-    # per-stage 13.2 s, only multi-pass stage inputs 18.1 s, every 2nd stage
-    # 20.4 s) — the funnel is stage-cost-bound, and unsealed chains
-    # duplicate post-exchange work.
-    def _seal(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False)
-
+) -> DataFrame:
+    """Stages 0-3b: domain blocklist, url dedup, boilerplate, span dedup,
+    ExactSubstr. The rewriting cleaners are not idempotent on their own
+    output (line frequencies shift after a strip), so this group runs once
+    per corpus."""
     if url_col is not None:
         if blocked_domains is not None:
             # stage 0 of public pipelines (C4 badlist, RefinedWeb/UT1):
@@ -136,25 +118,13 @@ def curate_corpus(
                         .filter("_keep").drop("_keep", "canonical_url"))
         stages["url_dedup"] = cur
 
-    def _rewrite(clean: DataFrame, src: DataFrame) -> DataFrame:
-        # swap in clean_text, preserving any extra columns from src
-        return (src.drop(text_col)
-                .join(clean.select(id_col,
-                                   F.col("clean_text").alias(text_col)),
-                      id_col))
-
-    if clean_text_stages:
-        # rewriting cleaners are NOT idempotent on their own output (line
-        # frequencies shift after a strip), so a staged runner that
-        # materialized the cleaned text must disable them on resume
-        # (run_curation_job does exactly that)
-        cur = _seal(_rewrite(strip_boilerplate(
-            cur, id_col=id_col, text_col=text_col,
-            max_df_frac=boilerplate_max_df_frac), cur))
-        stages["boilerplate"] = cur
-        cur = _seal(_rewrite(span_dedup(cur, id_col=id_col,
-                                        text_col=text_col), cur))
-        stages["span_dedup"] = cur
+    cur = _seal(_rewrite(strip_boilerplate(
+        cur, id_col=id_col, text_col=text_col,
+        max_df_frac=boilerplate_max_df_frac), cur, id_col, text_col))
+    stages["boilerplate"] = cur
+    cur = _seal(_rewrite(span_dedup(cur, id_col=id_col, text_col=text_col),
+                         cur, id_col, text_col))
+    stages["span_dedup"] = cur
 
     if substr_dedup_k is not None:
         # ExactSubstr (Lee et al.): keep-first repeated k-token substring
@@ -162,24 +132,41 @@ def curate_corpus(
         # boilerplate-free text
         from .cleaning import exact_substring_dedup
         cur = _seal(_rewrite(exact_substring_dedup(
-            cur, k=substr_dedup_k, id_col=id_col, text_col=text_col), cur))
+            cur, k=substr_dedup_k, id_col=id_col, text_col=text_col), cur,
+            id_col, text_col))
         stages["substr_dedup"] = cur
+    return cur
 
-    if exact_dedup:
-        # BEFORE the Gopher filters, deliberately: both rule sets are pure
-        # per-doc functions of the (cleaned) text, so every member of an
-        # identical-text group gets the same verdict and the kept min-id
-        # representative is the same doc in either order — the final set is
-        # provably identical (law-tested in tests/test_curation.py). The
-        # cheap hash groupBy first means the n-gram-explode filter stages
-        # see only DISTINCT texts: on a crawl-shaped x64 corpus (98.4%
-        # verbatim duplicates) gopher_repetition measured 181.9 s of a
-        # 231.6 s funnel when it ran pre-dedup — dedup-first removes that
-        # work by the duplicate factor.
-        keepers = (cur.groupBy(F.md5(text_col).alias("_h"))
-                   .agg(F.min(id_col).alias(id_col)).select(id_col))
-        cur = _seal(cur.join(keepers, id_col, "left_semi"))
-        stages["exact_dedup"] = cur
+
+def _filter_group(
+    cur: DataFrame, stages: dict, id_col: str, text_col: str, *,
+    gopher: bool = True,
+    gopher_kwargs: dict | None = None,
+    repetition_kwargs: dict | None = None,
+    fuzzy_dedup: bool = False,
+    fuzzy_kwargs: dict | None = None,
+    lm_model: tuple[DataFrame, int] | None = None,
+    lm_drop_bucket: str = "tail",
+    lm_thresholds: tuple[int, int] | None = None,
+    eval_df: DataFrame | None = None,
+    decontaminate_n: int = 13,
+) -> DataFrame:
+    """Stages 4-10: exact dedup, Gopher quality + repetition, fuzzy dedup,
+    LM bucketing, decontamination, PII redaction."""
+    # BEFORE the Gopher filters, deliberately: both rule sets are pure
+    # per-doc functions of the (cleaned) text, so every member of an
+    # identical-text group gets the same verdict and the kept min-id
+    # representative is the same doc in either order — the final set is
+    # provably identical (law-tested in tests/test_curation.py). The cheap
+    # hash groupBy first means the n-gram-explode filter stages see only
+    # DISTINCT texts: on a crawl-shaped x64 corpus (98.4% verbatim
+    # duplicates) gopher_repetition measured 181.9 s of a 231.6 s funnel
+    # when it ran pre-dedup — dedup-first removes that work by the
+    # duplicate factor.
+    keepers = (cur.groupBy(F.md5(text_col).alias("_h"))
+               .agg(F.min(id_col).alias(id_col)).select(id_col))
+    cur = _seal(cur.join(keepers, id_col, "left_semi"))
+    stages["exact_dedup"] = cur
 
     if gopher:
         # thresholds are corpus-tunable in every public pipeline; the
@@ -235,18 +222,30 @@ def curate_corpus(
                                   mode="drop"))
         stages["decontaminated"] = cur
 
-    if pii:
-        # r6: redaction is a pure codegen regexp projection (cleaning.
-        # redacted_text_col) — rewrite the text IN PLACE instead of the old
-        # drop-join-on-id round trip (one join + exchange fewer; the column
-        # order replicates the old join output: id first, extras, text last)
-        from .cleaning import redacted_text_col
-        cur = _seal(cur.select(
-            id_col,
-            *[c for c in cur.columns if c not in (id_col, text_col)],
-            redacted_text_col(text_col).alias(text_col)))
-        stages["pii_redacted"] = cur
+    # r6: redaction is a pure codegen regexp projection (cleaning.
+    # redacted_text_col) — rewrite the text IN PLACE instead of the old
+    # drop-join-on-id round trip (one join + exchange fewer; the column
+    # order replicates the old join output: id first, extras, text last)
+    from .cleaning import redacted_text_col
+    cur = _seal(cur.select(
+        id_col,
+        *[c for c in cur.columns if c not in (id_col, text_col)],
+        redacted_text_col(text_col).alias(text_col)))
+    stages["pii_redacted"] = cur
+    return cur
 
+
+def _select_group(
+    cur: DataFrame, stages: dict, id_col: str, text_col: str, *,
+    dsir_target: DataFrame | None = None,
+    dsir_top_n: int | None = None,
+    dsir_kwargs: dict | None = None,
+    mix_rates: dict[str, float] | None = None,
+    stratum_col: str | None = None,
+    pack_seq_len: int | None = None,
+    pack_shards: int = 128,
+) -> DataFrame:
+    """Stages 11-13: DSIR selection, mixture, sequence packing."""
     if dsir_target is not None and dsir_top_n is not None:
         # DSIR data selection (Xie et al. 2023): fit hashed-ngram
         # importance weights against the target corpus with the CLEANED
@@ -291,7 +290,44 @@ def curate_corpus(
                              key_col="_pk",
                              tiebreak_cols=tiebreak).drop("_shard")
         stages["packed"] = cur
+    return cur
 
+
+_GROUPS = (_clean_group, _filter_group, _select_group)
+
+
+def _group_params(params: dict) -> list[dict]:
+    """``params`` split by the group that takes each name. An unknown name
+    raises ValueError: dropping it silently would run a different
+    configuration than the caller asked for (ADVICE r5)."""
+    names = [{p.name for p in inspect.signature(g).parameters.values()
+              if p.kind is p.KEYWORD_ONLY} for g in _GROUPS]
+    unknown = set(params).difference(*names)
+    if unknown:
+        raise ValueError(f"unknown curation parameters {sorted(unknown)}; "
+                         f"known: {sorted(set().union(*names))}")
+    return [{k: v for k, v in params.items() if k in n} for n in names]
+
+
+def curate_corpus(docs: DataFrame, id_col: str = "doc_id",
+                  text_col: str = "text", **params) -> dict[str, DataFrame]:
+    """Run the full curation pipeline; returns ``{"docs": final_df,
+    "stages": {name: df}}`` with every intermediate stage inspectable.
+
+    ``params`` are the keyword parameters of :func:`_clean_group`,
+    :func:`_filter_group` and :func:`_select_group`. The final df carries
+    (id_col, text_col [, stratum_col, copy]) with text fully cleaned and
+    redacted. Use :func:`curation_funnel` on ``stages`` for the per-stage
+    attrition report."""
+    # widen a narrow input ONCE up front: a small corpus scans as 1-2
+    # partitions and every fan-out stage (n-gram explode, shingles) would
+    # run its map work near-serial regardless of core count (measured:
+    # gopher_repetition 8.0 s 1-wide vs 1.7 s 8-wide on sf0.1). No-op when
+    # the input already meets cluster width — always true at scale.
+    stages: dict[str, DataFrame] = {"input": ensure_width(docs)}
+    cur = stages["input"]
+    for group, kw in zip(_GROUPS, _group_params(params)):
+        cur = group(cur, stages, id_col, text_col, **kw)
     return {"docs": cur, "stages": stages}
 
 
@@ -308,7 +344,6 @@ def run_curation_job(
     workdir: str,
     id_col: str = "doc_id",
     text_col: str = "text",
-    fail_after_group: int | None = None,
     **kwargs,
 ) -> dict:
     """Resumable curation: the module docstring's "one job per stage group
@@ -324,67 +359,24 @@ def run_curation_job(
                            redaction
       group 2  "selected"  DSIR selection, mixture, sequence packing
 
-    ``kwargs`` is the ``curate_corpus`` surface; each group receives only
-    its own stages' parameters, with the text-rewriting cleaners disabled
-    after group 0 (they are not idempotent on their own output — see
-    ``clean_text_stages``). Staged output equals the single-shot
-    ``curate_corpus`` output exactly (law-tested): every stage is
-    deterministic, so materialization points cannot change the result.
-    ``fail_after_group`` injects a crash for kill/restart tests."""
-    import time as _time
-
-    from ..io.catalog import RunManifest
-
+    ``kwargs`` is the ``curate_corpus`` surface. Staged output equals the
+    single-shot ``curate_corpus`` output exactly (law-tested): every stage
+    is deterministic, so materialization points cannot change the result.
+    Group row counts are observed on the writes (io.catalog.write_counted);
+    a committed group's count comes from its manifest record. Tests kill a
+    run by patching ``RunManifest.commit``."""
     manifest = RunManifest(workdir, run_id="curate0")
-    done = manifest.committed("curation_group")
-    g = lambda *names: {k: kwargs[k] for k in names if k in kwargs}  # noqa: E731
-
-    # every kwarg must belong to exactly one group's forward list — an
-    # unknown name (typo, or a toggle this runner does not thread) would
-    # otherwise be SILENTLY dropped and the staged run would diverge from
-    # the caller's intended curate_corpus configuration (ADVICE r5)
-    _forwarded = {
-        "url_col", "blocked_domains", "ts_col", "boilerplate_max_df_frac",
-        "substr_dedup_k", "gopher", "gopher_kwargs",
-        "repetition_kwargs", "fuzzy_dedup", "fuzzy_kwargs", "lm_model",
-        "lm_thresholds", "lm_drop_bucket", "eval_df", "decontaminate_n",
-        "exact_dedup", "pii", "dsir_target", "dsir_top_n", "dsir_kwargs",
-        "mix_rates", "stratum_col", "pack_seq_len", "pack_shards",
-    }
-    unknown = set(kwargs) - _forwarded
-    if unknown:
-        raise ValueError(
-            f"run_curation_job: unknown kwargs {sorted(unknown)}; "
-            f"forwardable: {sorted(_forwarded)}")
-
-    group_kwargs = [
-        dict(gopher=False, exact_dedup=False, pii=False,
-             **g("url_col", "blocked_domains", "ts_col",
-                 "boilerplate_max_df_frac", "substr_dedup_k")),
-        dict(clean_text_stages=False,
-             **g("gopher", "gopher_kwargs", "repetition_kwargs",
-                 "fuzzy_dedup", "fuzzy_kwargs", "lm_model",
-                 "lm_thresholds", "lm_drop_bucket", "eval_df",
-                 "decontaminate_n", "exact_dedup", "pii")),
-        dict(clean_text_stages=False, gopher=False, exact_dedup=False,
-             pii=False,
-             **g("dsir_target", "dsir_top_n", "dsir_kwargs", "mix_rates",
-                 "stratum_col", "pack_seq_len", "pack_shards")),
-    ]
+    done = {r["partition_id"]: r for r in manifest.records()
+            if r["stage"] == "curation_group" and r["status"] == "committed"}
     cur, counts = docs, {}
-    for gid, gkw in enumerate(group_kwargs):
+    for gid, (group, kw) in enumerate(zip(_GROUPS, _group_params(kwargs))):
         path = f"{workdir}/group={gid}"
         if gid in done:
-            cur = spark.read.parquet(path)
-            counts[gid] = cur.count()
-            continue
-        t0 = _time.time()
-        cur = curate_corpus(cur, id_col=id_col, text_col=text_col,
-                            **gkw)["docs"]
-        cur.write.mode("overwrite").parquet(path)
+            counts[gid] = done[gid]["rows"]
+        else:
+            t0 = time.time()
+            counts[gid] = write_counted(
+                group(ensure_width(cur), {}, id_col, text_col, **kw), path)
+            manifest.commit("curation_group", gid, t0, rows=counts[gid])
         cur = spark.read.parquet(path)
-        counts[gid] = cur.count()
-        manifest.commit("curation_group", gid, t0, rows=counts[gid])
-        if fail_after_group is not None and gid >= fail_after_group:
-            raise RuntimeError(f"injected failure after group {gid}")
     return {"docs": cur, "group_rows": counts, "workdir": workdir}

@@ -13,17 +13,23 @@ Two entry points:
   * build_graph_resumable  bucketed by xxhash64(url) with per-bucket manifest
     commits: a killed run restarts from the last committed bucket and never
     recomputes committed work (north-rule resume clause; tested by
-    tests/test_resume.py).
+    tests/test_resume.py, which kills a run by patching RunManifest.commit).
+
+Every committed table is written by io.catalog.write_counted: the row count
+a manifest record carries is observed on the write, never re-read.
 """
 
 from __future__ import annotations
 
+import os
+import shutil
 import time
+import zlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .io.catalog import GraphStatus, RunManifest, read_table
+from .io.catalog import GraphStatus, RunManifest, read_table, write_counted
 from .operators.extraction import TRIPLES_SCHEMA, pages_to_triples
 from .operators.linking import (
     apply_canonical_mapping, apply_merge_rules, build_edges, build_nodes,
@@ -50,6 +56,19 @@ def triples_from_pages(
     if alias_df is not None:
         t = apply_merge_rules(t, alias_df)
     return t
+
+
+def _canonicalize(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Fuzzy canonicalization -> (mapping, canonical triples)."""
+    # no checkpoint here: canonical_mapping returns its mapping sealed (a
+    # lazy localCheckpoint) on both its driver and distributed CC paths
+    mapping = canonical_mapping(triples, alias_df=None, fuzzy=True)
+    # empty mapping (no fuzzy merges found) -> skip the two broadcast rewrite
+    # joins entirely; isEmpty is the action that materializes the sealed
+    # mapping, so the rewrite reads it without a re-run.
+    canon = triples if mapping.isEmpty() \
+        else apply_canonical_mapping(triples, mapping)
+    return mapping, canon
 
 
 def build_graph(
@@ -79,19 +98,7 @@ def build_graph(
     # CC + node agg + edge agg, but no CacheManager entries left behind in a
     # long-lived session after callers drop the returned frames.
     triples = triples.localCheckpoint(eager=False)
-    if fuzzy:
-        # no checkpoint here: canonical_mapping returns its mapping sealed
-        # (a lazy localCheckpoint) on both its driver and distributed CC
-        # paths.
-        mapping = canonical_mapping(triples, alias_df=None, fuzzy=True)
-        # empty mapping (no fuzzy merges found) -> skip the two broadcast
-        # rewrite joins entirely; isEmpty is the action that materializes
-        # the sealed mapping, so the rewrite reads it without a re-run.
-        canon = triples if mapping.isEmpty() \
-            else apply_canonical_mapping(triples, mapping)
-    else:
-        mapping = None
-        canon = triples
+    mapping, canon = _canonicalize(triples) if fuzzy else (None, triples)
     nodes = build_nodes(canon, graph=graph, max_chunks=max_chunks,
                         max_prop_vals=max_prop_vals,
                         workspace=workspace,
@@ -111,7 +118,6 @@ def build_graph_resumable(
     schema=None,
     gazetteer=None,
     rules=None,
-    fail_after_bucket: int | None = None,
     workspace: str = "default",
     created_by: str = "default",
     max_chunks: int | None = 2048,
@@ -121,8 +127,12 @@ def build_graph_resumable(
 
     Stage 1 (per url-hash bucket, resumable): extraction -> triples parquet +
     manifest commit. Stage 2 (global, idempotent overwrite): CC + node/edge
-    aggregation over all committed triples. ``fail_after_bucket`` injects a
-    crash for the resume test.
+    aggregation over all committed triples. The node table is written first
+    and the edge build reads it back: the written table is the seal its
+    second consumer needs, so nothing is persisted. Every count a commit
+    records is observed on its table's write (io.catalog.write_counted).
+    The resume test kills a run by patching ``RunManifest.commit`` to raise
+    after a given bucket commits.
 
     ``max_chunks``/``max_prop_vals`` bound per-node/edge provenance arrays,
     exactly as in build_graph — but here they DEFAULT ON (2048): this is
@@ -139,11 +149,7 @@ def build_graph_resumable(
     after ready, failed (with the error recorded) on any exception."""
     schema, gazetteer, alias_df = _config(spark, schema, gazetteer, rules)
     manifest = RunManifest(workdir)
-    status = GraphStatus(workdir)
-    prior = status.get(graph)
-    status.set(graph, "updating" if prior and prior["status"] == "ready"
-               else "creating")
-    try:
+    with GraphStatus(workdir).lifecycle(graph) as ready:
         pages = spark.read.parquet(pages_path).withColumn(
             "_bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int")
         )
@@ -154,12 +160,8 @@ def build_graph_resumable(
             t0 = time.time()
             part = pages.filter(F.col("_bucket") == b).drop("_bucket")
             triples_b = triples_from_pages(spark, part, schema, gazetteer, rules)
-            out = f"{workdir}/triples/bucket={b}"
-            triples_b.write.mode("overwrite").parquet(out)
-            n = spark.read.parquet(out).count()
+            n = write_counted(triples_b, f"{workdir}/triples/bucket={b}")
             manifest.commit("extract", b, t0, triples_emitted=n)
-            if fail_after_bucket is not None and b >= fail_after_bucket:
-                raise RuntimeError(f"injected failure after bucket {b}")
 
         # Size the link stage's SCAN parallelism by split sizing, not by a
         # repartition: the committed triples table is often far smaller than
@@ -177,26 +179,20 @@ def build_graph_resumable(
             spark.read.schema(TRIPLES_SCHEMA).parquet(f"{workdir}/triples")
             .select([f.name for f in TRIPLES_SCHEMA.fields])  # drop bucket col
         )
-        mapping = canonical_mapping(triples, alias_df=None, fuzzy=True)
-        canon = triples if mapping.isEmpty() \
-            else apply_canonical_mapping(triples, mapping)
+        mapping, canon = _canonicalize(triples)
         nodes = build_nodes(canon, graph=graph, workspace=workspace,
-                            created_by=created_by, max_chunks=max_chunks,
-                            max_prop_vals=max_prop_vals).persist()
-        edges = build_edges(canon, nodes, graph=graph, workspace=workspace,
                             created_by=created_by, max_chunks=max_chunks,
                             max_prop_vals=max_prop_vals)
         t0 = time.time()
-        nodes.write.mode("overwrite").parquet(f"{workdir}/nodes")
-        edges.write.mode("overwrite").parquet(f"{workdir}/edges")
-        nodes.unpersist()  # both consumers (edge build + write) are done
-        n_nodes = read_table(spark, f"{workdir}/nodes").count()
-        n_edges = read_table(spark, f"{workdir}/edges").count()
+        n_nodes = write_counted(nodes, f"{workdir}/nodes")
+        # the explicit schema spares the read an inference job
+        sealed = spark.read.schema(nodes.schema).parquet(f"{workdir}/nodes")
+        edges = build_edges(canon, sealed, graph=graph, workspace=workspace,
+                            created_by=created_by, max_chunks=max_chunks,
+                            max_prop_vals=max_prop_vals)
+        n_edges = write_counted(edges, f"{workdir}/edges")
         manifest.commit("materialize", 0, t0, nodes=n_nodes, edges=n_edges)
-    except Exception as exc:  # status row must record the failure (ref :806-832)
-        status.set(graph, "failed", errors=[f"{type(exc).__name__}: {exc}"])
-        raise
-    status.set(graph, "ready", nodes=n_nodes, edges=n_edges)
+        ready.update(nodes=n_nodes, edges=n_edges)
     return {
         "triples": triples,
         "mapping": mapping,
@@ -234,9 +230,6 @@ def refresh_ann_index(
     versions are only pruned AFTER the commit, best-effort. NOTE: previously
     loaded EdgeAnnIndex handles reference the superseded version and must be
     re-loaded to observe the refresh. Returns the freshly loaded index."""
-    import os
-    import shutil
-
     from .functions.embeddings import embed_edges
     from .plans.query import EdgeAnnIndex
 
@@ -329,47 +322,42 @@ def update_graph_incremental(
     version record (stage `table_version`, carrying the included segment
     list) is published atomically AFTER both writes; a crash in between
     orphans the dirs and the rerun recomputes the same delta against the
-    same base — deterministic, so reruns converge.
-    """
-    import os
+    same base — deterministic, so reruns converge. The counts every commit
+    records are observed on the table writes (io.catalog.write_counted); an
+    upsert's edges read the merged nodes back from ``nodes_v{k}``.
 
+    Raises ValueError when ``pages_path`` has no ``segment=`` partition and
+    no version is committed yet: there is nothing to build or return.
+    """
     schema, gazetteer, alias_df = _config(spark, schema, gazetteer, rules)
     manifest = RunManifest(workdir)
-    status = GraphStatus(workdir)
-    prior = status.get(graph)
-    status.set(graph, "updating" if prior and prior["status"] == "ready"
-               else "creating")
-    try:
+    with GraphStatus(workdir).lifecycle(graph) as ready:
         segments = sorted(
             d.split("=", 1)[1] for d in os.listdir(pages_path)
             if d.startswith("segment="))
-        done = {r["segment"] for r in manifest.records()
-                if r["stage"] == "seg_extract" and r["status"] == "committed"}
+        if not segments and not _committed_versions(manifest):
+            raise ValueError(f"{pages_path} has no segment= partition")
+        extracted = {
+            r["segment"] for r in manifest.records()
+            if r["stage"] == "seg_extract" and r["status"] == "committed"}
         for s in segments:
-            if s in done:
+            if s in extracted:
                 continue
             t0 = time.time()
             part = spark.read.parquet(f"{pages_path}/segment={s}")
             triples_s = triples_from_pages(spark, part, schema, gazetteer,
                                            rules)
-            out = f"{workdir}/triples/segment={s}"
-            triples_s.write.mode("overwrite").parquet(out)
-            n = spark.read.parquet(out).count()
+            n = write_counted(triples_s, f"{workdir}/triples/segment={s}")
             # deterministic manifest id per segment (Python hash() is
             # process-randomized and would mint duplicate records on resume)
-            import zlib
-
             manifest.commit("seg_extract", zlib.crc32(s.encode()), t0,
                             segment=s, triples_emitted=n)
+            extracted.add(s)
 
-        extracted = sorted(
-            r["segment"] for r in manifest.records()
-            if r["stage"] == "seg_extract" and r["status"] == "committed")
         prev = current_tables(spark, workdir)
         included = set(prev["segments"]) if prev else set()
-        new_segs = [s for s in extracted if s not in included]
+        new_segs = sorted(extracted - included)
         if not new_segs:
-            status.set(graph, "ready")
             return prev
 
         delta = spark.read.schema(TRIPLES_SCHEMA).parquet(
@@ -387,25 +375,19 @@ def update_graph_incremental(
                               workspace=workspace, created_by=created_by,
                               max_chunks=max_chunks,
                               max_prop_vals=max_prop_vals)
-        if prev is None:
-            nodes, edges = d_nodes, d_edges
-        else:
-            nodes = upsert_nodes(prev["nodes"], d_nodes,
-                                 max_chunks=max_chunks).persist()
-            edges = upsert_edges(prev["edges"], d_edges, nodes,
-                                 max_chunks=max_chunks)
-
         k = (prev["version"] + 1) if prev else 0
         t0 = time.time()
-        nodes.write.mode("overwrite").parquet(f"{workdir}/nodes_v{k}")
-        edges.write.mode("overwrite").parquet(f"{workdir}/edges_v{k}")
+        nodes = d_nodes if prev is None else upsert_nodes(
+            prev["nodes"], d_nodes, max_chunks=max_chunks)
+        n_nodes = write_counted(nodes, f"{workdir}/nodes_v{k}")
+        edges = d_edges if prev is None else upsert_edges(
+            prev["edges"], d_edges,
+            spark.read.schema(nodes.schema).parquet(f"{workdir}/nodes_v{k}"),
+            max_chunks=max_chunks)
+        n_edges = write_counted(edges, f"{workdir}/edges_v{k}")
         d_nodes.unpersist()
-        if nodes is not d_nodes:
-            nodes.unpersist()
-        n_nodes = read_table(spark, f"{workdir}/nodes_v{k}").count()
-        n_edges = read_table(spark, f"{workdir}/edges_v{k}").count()
-        manifest.commit("table_version", k, t0,
-                        segments=sorted(included | set(new_segs)),
+        segs = sorted(included | extracted)
+        manifest.commit("table_version", k, t0, segments=segs,
                         nodes=n_nodes, edges=n_edges)
         if ann_index:
             # keep the Entry C text-query index in step with this version
@@ -414,13 +396,10 @@ def update_graph_incremental(
             refresh_ann_index(spark, workdir,
                               read_table(spark, f"{workdir}/edges_v{k}"),
                               mode=ann_mode)
-    except Exception as exc:
-        status.set(graph, "failed", errors=[f"{type(exc).__name__}: {exc}"])
-        raise
-    status.set(graph, "ready", nodes=n_nodes, edges=n_edges)
+        ready.update(nodes=n_nodes, edges=n_edges)
     return {
         "version": k,
-        "segments": sorted(included | set(new_segs)),
+        "segments": segs,
         "nodes": read_table(spark, f"{workdir}/nodes_v{k}"),
         "edges": read_table(spark, f"{workdir}/edges_v{k}"),
     }

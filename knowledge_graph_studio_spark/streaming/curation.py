@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.literals import literal_df
-from ..io.catalog import RunManifest
+from ..io.catalog import RunManifest, write_counted
 from ..operators.dedup import bloom_index_positions, seen_before
 
 
@@ -98,8 +98,7 @@ def run_streaming_dedup(
                            id_col, "left_semi")
         # 3. survivors out (idempotent per batch)
         out = f"{workdir}/docs/batch={batch_id}"
-        fresh.write.mode("overwrite").parquet(out)
-        n_kept = spark.read.parquet(out).count()
+        n_kept = write_counted(fresh, out)
         # 4. extend the index with the survivors' positions (idempotent:
         #    the batch directory replaces itself on replay)
         bloom_index_positions(

@@ -39,7 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..io.catalog import RunManifest
+from ..io.catalog import RunManifest, write_counted
 from ..operators.extraction import pages_to_triples
 from ..operators.linking import apply_merge_rules, rules_to_alias_df
 from ..schema_model import default_gazetteer, default_rules, default_schema
@@ -201,9 +201,7 @@ def run_incremental_build(
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         t0 = time.time()
-        out = f"{workdir}/triples/batch={batch_id}"
-        batch_df.write.mode("overwrite").parquet(out)
-        n = spark.read.parquet(out).count()
+        n = write_counted(batch_df, f"{workdir}/triples/batch={batch_id}")
         manifest.commit("stream_extract", int(batch_id), t0, triples_emitted=n)
 
     (

@@ -35,3 +35,31 @@ def gateway_calls(monkeypatch):
         return n[0], out
 
     return calls
+
+
+@pytest.fixture
+def fail_after_commit(monkeypatch):
+    """``with fail_after_commit(stage, partition_id): run()`` kills ``run``
+    right after ``RunManifest.commit`` records that partition of that
+    stage: the commit lands, then RuntimeError("injected failure ...")
+    propagates, as if the process died between two commits."""
+    from contextlib import contextmanager
+
+    from knowledge_graph_studio_spark.io.catalog import RunManifest
+
+    commit = RunManifest.commit
+
+    @contextmanager
+    def inject(stage, partition_id):
+        def failing(self, st, pid, *args, **kwargs):
+            commit(self, st, pid, *args, **kwargs)
+            if (st, pid) == (stage, partition_id):
+                raise RuntimeError(f"injected failure after {stage} {pid}")
+
+        monkeypatch.setattr(RunManifest, "commit", failing)
+        try:
+            yield
+        finally:
+            monkeypatch.setattr(RunManifest, "commit", commit)
+
+    return inject

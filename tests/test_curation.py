@@ -279,7 +279,8 @@ def test_curate_corpus_substr_dedup_stage(spark):
     assert len(holders) == 1
 
 
-def test_run_curation_job_staged_equals_monolithic_and_resumes(spark, tmp_path):
+def test_run_curation_job_staged_equals_monolithic_and_resumes(
+        spark, tmp_path, fail_after_commit):
     """The 3-group materialized runner produces exactly the single-shot
     curate_corpus output, and a killed job resumes from the last committed
     group without recomputing it."""
@@ -299,8 +300,9 @@ def test_run_curation_job_staged_equals_monolithic_and_resumes(spark, tmp_path):
     mono = sorted(map(tuple, curate_corpus(d, **kw)["docs"].collect()))
 
     wd = str(tmp_path / "job")
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_curation_job(spark, d, wd, fail_after_group=0, **kw)
+    with fail_after_commit("curation_group", 0), \
+            pytest.raises(RuntimeError, match="injected failure"):
+        run_curation_job(spark, d, wd, **kw)
     recs0 = {r["partition_id"]: r for r in RunManifest(wd, "curate0").records()
              if r["stage"] == "curation_group"}
     assert set(recs0) == {0}

@@ -13,19 +13,22 @@ def _table_fingerprint(df, keys):
     return rows
 
 
-def test_resume_from_last_committed_partition(spark, tmp_path):
+def test_resume_from_last_committed_partition(spark, tmp_path,
+                                              fail_after_commit):
     pages_path = str(tmp_path / "pages")
     work_fail = str(tmp_path / "work_fail")
     work_full = str(tmp_path / "work_full")
     write_pages(synthetic_pages(spark, 120, seed=5, partitions=4), pages_path)
 
     # run 1: crash injected after bucket 1 commits
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_graph_resumable(spark, pages_path, work_fail, n_buckets=4,
-                              fail_after_bucket=1)
+    with fail_after_commit("extract", 1), \
+            pytest.raises(RuntimeError, match="injected failure"):
+        build_graph_resumable(spark, pages_path, work_fail, n_buckets=4)
     m = RunManifest(work_fail)
     committed_before = m.committed("extract")
     assert committed_before == {0, 1}
+    stamps_before = {r["partition_id"]: r["committed_at"]
+                     for r in m.records() if r["stage"] == "extract"}
 
     # run 2: resumes — only buckets 2,3 get new extract records
     out = build_graph_resumable(spark, pages_path, work_fail, n_buckets=4)
@@ -33,6 +36,8 @@ def test_resume_from_last_committed_partition(spark, tmp_path):
     assert {r["partition_id"] for r in recs} == {0, 1, 2, 3}
     # committed buckets kept their original commit timestamps (not recomputed)
     first_commits = {r["partition_id"]: r["committed_at"] for r in recs}
+    assert first_commits[0] == stamps_before[0]
+    assert first_commits[1] == stamps_before[1]
     m2 = RunManifest(work_fail)
     assert m2.committed("extract") == {0, 1, 2, 3}
 
@@ -130,3 +135,20 @@ def test_diff_graph_versions_changelog(spark, tmp_path):
         RunManifest, _committed_versions)
     latest = _committed_versions(RunManifest(wd))[-1]["partition_id"]
     assert diff_graph_versions(spark, wd, latest, latest).count() == 0
+
+
+def test_incremental_update_without_segments_fails(spark, tmp_path):
+    """An unpartitioned pages table has nothing to upsert segment by
+    segment: the update raises instead of reporting a ready graph with no
+    tables."""
+    from knowledge_graph_studio_spark.io.catalog import GraphStatus
+    from knowledge_graph_studio_spark.pipeline import update_graph_incremental
+
+    pages_path = str(tmp_path / "pages")
+    write_pages(synthetic_pages(spark, 20, seed=5, partitions=2), pages_path)
+    wd = str(tmp_path / "wd")
+    with pytest.raises(ValueError, match="segment="):
+        update_graph_incremental(spark, pages_path, wd)
+    st = GraphStatus(wd).get("default")
+    assert st["status"] == "failed"
+    assert any(pages_path in e for e in st["errors"])

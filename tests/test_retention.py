@@ -54,7 +54,7 @@ def test_manifest_prune_ttl_and_max_records(tmp_path):
     assert len(kept_old) == 1 and kept_old[0]["partition_id"] == 103
 
 
-def test_manifest_prune_preserves_resume(spark, tmp_path):
+def test_manifest_prune_preserves_resume(spark, tmp_path, fail_after_commit):
     """Pruning old-run records mid-run must not shrink the live run's
     committed set: a crashed build pruned then resumed must NOT recompute
     its committed buckets (north-rule resume clause)."""
@@ -66,9 +66,9 @@ def test_manifest_prune_preserves_resume(spark, tmp_path):
     pages_path = str(tmp_path / "pages")
     wd = str(tmp_path / "wd")
     write_pages(synthetic_pages(spark, 80, seed=5, partitions=4), pages_path)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        build_graph_resumable(spark, pages_path, wd, n_buckets=4,
-                              fail_after_bucket=1)
+    with fail_after_commit("extract", 1), \
+            pytest.raises(RuntimeError, match="injected failure"):
+        build_graph_resumable(spark, pages_path, wd, n_buckets=4)
     m = RunManifest(wd)  # same default run_id as the builder
     # stale record from some previous run + aggressive TTL
     _fake_record(m.dir, "ancient", "extract", 77, time.time() - 1e6)
@@ -149,3 +149,63 @@ def test_table_backend_selector():
         cat.set_table_backend("parquet")
     with pytest.raises(ValueError):
         cat.set_table_backend("delta")
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn`` runs, counted through a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_write_counted_exact_counts(spark, tmp_path):
+    from knowledge_graph_studio_spark.io.catalog import write_counted
+
+    df = spark.range(0, 37, 1, 4)
+    assert write_counted(df, str(tmp_path / "full")) == 37
+    assert spark.read.parquet(str(tmp_path / "full")).count() == 37
+    assert write_counted(df.filter("false"), str(tmp_path / "none")) == 0
+    empty_join = df.join(df.filter("id < 0"), "id")
+    assert write_counted(empty_join, str(tmp_path / "join")) == 0
+    # overwrite: the second write replaces the first and counts only itself
+    assert write_counted(df.filter("id < 5"), str(tmp_path / "full")) == 5
+    assert spark.read.parquet(str(tmp_path / "full")).count() == 5
+
+
+def test_write_counted_is_one_job(spark, tmp_path):
+    """The count rides on the write's own job; a write followed by a
+    read-back count runs more."""
+    from knowledge_graph_studio_spark.io.catalog import write_counted
+
+    df = spark.range(0, 100, 1, 4).selectExpr("id", "id % 7 AS k")
+    assert _jobs_of(spark, lambda: write_counted(
+        df, str(tmp_path / "observed"))) == 1
+
+    def write_then_count():
+        df.write.mode("overwrite").parquet(str(tmp_path / "recounted"))
+        return spark.read.parquet(str(tmp_path / "recounted")).count()
+
+    assert _jobs_of(spark, write_then_count) > 1
+
+
+def test_no_read_back_count_of_a_written_table():
+    """Committed tables are counted by write_counted: no module that
+    commits tables counts a parquet read."""
+    import pathlib
+    import re
+
+    import knowledge_graph_studio_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    files = [root / "pipeline.py", root / "operators" / "curation.py",
+             *sorted((root / "streaming").glob("*.py"))]
+    read_back = re.compile(r"(\.parquet|read_table)\([^()]*\)\s*\.count\(\)")
+    for f in files:
+        assert not read_back.search(f.read_text()), f

@@ -70,7 +70,7 @@ def test_scope_filter_isolates_users(spark, two_tenants):
     assert res_all["triples"].count() == 2
 
 
-def test_graph_status_lifecycle(spark, tmp_path):
+def test_graph_status_lifecycle(spark, tmp_path, fail_after_commit):
     from knowledge_graph_studio_spark.io.catalog import GraphStatus
     from knowledge_graph_studio_spark.pipeline import build_graph_resumable
 
@@ -80,8 +80,8 @@ def test_graph_status_lifecycle(spark, tmp_path):
     wd = str(tmp_path / "wd")
 
     # injected failure -> failed status with the error recorded
-    with pytest.raises(RuntimeError):
-        build_graph_resumable(spark, src, wd, n_buckets=4, fail_after_bucket=1)
+    with fail_after_commit("extract", 1), pytest.raises(RuntimeError):
+        build_graph_resumable(spark, src, wd, n_buckets=4)
     st = GraphStatus(wd).get("default")
     assert st["status"] == "failed"
     assert any("injected failure" in e for e in st["errors"])
