@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .functions.literals import literal_array, literal_df
+from .functions.text import hash64
 from .functions.vector import cosine_col
 
 # deterministic gazetteer over the driver's `documents` vocabulary
@@ -1211,7 +1212,7 @@ def q_kg_triple_topk_hashed(spark, sf):
         "head", "tail",
         F.explode(F.expr(
             "regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).alias("tok"))
-    h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
+    h = hash64("tok", "md5_60")
     kv = tok.select(
         "head", "tail", F.pmod(h, F.lit(_TOPK_DIM)).alias("bucket"),
         F.when(F.shiftright(h, 59).bitwiseAND(F.lit(1)) == 1,
@@ -1255,7 +1256,7 @@ def q_kg_query_text_hashed(spark, sf):
         F.explode(F.expr(
             "regexp_extract_all(lower(verbalized), '[a-z0-9]+', 0)"))
         .alias("tok"))
-    h = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
+    h = hash64("tok", "md5_60")
     kv = tok.select(
         "edge_id", F.pmod(h, F.lit(_TOPK_DIM)).alias("bucket"),
         F.when(F.shiftright(h, 59).bitwiseAND(F.lit(1)) == 1,

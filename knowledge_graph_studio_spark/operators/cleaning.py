@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.literals import literal_array
+from ..functions.text import hash64, token_windows, tokens
 
 
 def _sep_pattern(sep: str) -> str:
@@ -557,26 +558,21 @@ def exact_substring_dedup(
     k-token strings."""
     from pyspark.sql.window import Window
 
-    toks = F.split(F.col(text_col), " ")
-    src = docs.select(F.col(id_col), toks.alias("_toks"))
-    t = F.col("_toks")
-    idx = F.when(F.size(t) >= k, F.sequence(F.lit(1), F.size(t) - (k - 1))) \
-           .otherwise(F.array().cast("array<int>"))
-    if hash_fn == "xxhash64":
-        key_of = lambda i: F.xxhash64(  # noqa: E731
-            F.concat_ws("\x01", F.slice(t, i, k)))
-    elif hash_fn == "raw":
-        key_of = lambda i: F.concat_ws(  # noqa: E731
-            "\x01", F.slice(t, i, k))
-    else:
+    if hash_fn not in ("xxhash64", "raw"):
         raise ValueError(f"unknown hash_fn: {hash_fn}")
 
-    wins = src.select(
-        id_col,
-        F.explode(F.transform(
-            idx, lambda i: F.struct((i - 1).alias("pos"),
-                                    key_of(i).alias("key"))))
-        .alias("w")).select(id_col, "w.pos", "w.key")
+    def window_key(w, i):
+        key = F.concat_ws("\x01", w)
+        if hash_fn == "xxhash64":
+            key = hash64(key, hash_fn)
+        return F.struct((i - 1).alias("pos"), key.alias("key"))
+
+    toks = tokens(text_col)
+    wins = (
+        docs.select(F.col(id_col), toks.alias("_toks"))
+        .select(id_col, F.explode(
+            token_windows(F.col("_toks"), k, window_key)).alias("w"))
+        .select(id_col, "w.pos", "w.key"))
 
     grp = wins.groupBy("key").agg(
         F.count("*").alias("_n"),

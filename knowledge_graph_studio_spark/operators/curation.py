@@ -54,6 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.text import tokens
 from ..io.catalog import RunManifest, write_counted
 from ..session import ensure_width
 from .cleaning import (
@@ -280,7 +281,7 @@ def _select_group(
         shift = 64 - max(1, (pack_shards - 1).bit_length())
         d = (cur.withColumn("_pk", F.xxhash64(F.col(id_col), copy))
              .withColumn("n_tokens",
-                         F.size(F.split(F.col(text_col), " ")).cast("bigint"))
+                         F.size(tokens(text_col)).cast("bigint"))
              .withColumn("_shard", F.shiftright(F.col("_pk"), shift)))
         # (id, copy) tiebreak: 64-bit _pk collisions are expected at
         # web-scale doc counts and would otherwise leave intra-shard order

@@ -43,6 +43,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.literals import bounded_collect, literal_df
+from ..functions.text import hash64, tokens
 from . import textstats
 
 _LOG = logging.getLogger(__name__)
@@ -57,7 +58,7 @@ def token_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
         F.col(id_col).alias("doc_id"), "shingle")
 
 
-def cap_shingle_df(sh: DataFrame, max_df: int, log: bool = True) -> DataFrame:
+def cap_shingle_df(sh: DataFrame, max_df: int) -> DataFrame:
     """Hot-shingle guard: drop shingles whose document frequency exceeds
     ``max_df``. A shingle shared by f docs creates ~f^2/2 candidate pairs in
     any inverted-index join — one boilerplate/template shingle at web scale
@@ -65,45 +66,39 @@ def cap_shingle_df(sh: DataFrame, max_df: int, log: bool = True) -> DataFrame:
     Jaccard for genuine near-dups (a boilerplate shingle inflates
     intersection and union together) and is standard stop-shingle practice.
 
-    Not silent: with log=True the hot set is probed in ONE pass over the
-    frequency aggregation, bounded at LITERAL_DF_MAX_ROWS + 1 rows, its
-    stats logged, and the filter applied as a broadcast LEFT ANTI against
-    the collected literal. A hot set past the bound never reaches the
-    driver: its count and worst df come from one 2-scalar aggregation and
-    the filter falls back to the lazy broadcast build (more aggregation
-    passes, but a bounded plan and driver). With log=False nothing is
-    collected and the single lazy aggregation feeds the broadcast directly
-    (the collapse paths call it this way over un-checkpointed rep
-    shingles, where an eager probe would force a second shingle
-    generation)."""
-    dfreq = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    hot = dfreq.filter(F.col("df") > max_df)
-    if log:
-        from ..functions.literals import LITERAL_DF_MAX_ROWS
+    Not silent: the hot set is probed in ONE pass over the frequency
+    aggregation, bounded at LITERAL_DF_MAX_ROWS + 1 rows, its stats logged,
+    and the filter applied as a broadcast LEFT ANTI against the collected
+    literal. A hot set past the bound never reaches the driver: its count
+    and worst df come from one 2-scalar aggregation and the filter falls
+    back to the lazy broadcast build (more aggregation passes, but a
+    bounded plan and driver)."""
+    from ..functions.literals import LITERAL_DF_MAX_ROWS
 
-        # ordered, so the bound is one top-k job: a bare limit() collect
-        # runs incremental take jobs over growing partition subsets
-        rows = bounded_collect(hot.orderBy(F.desc("df")), LITERAL_DF_MAX_ROWS)
-        if rows is None:
-            n, worst = hot.agg(F.count("*"), F.max("df")).first()
-            _LOG.warning(
-                "cap_shingle_df: dropping %d shingles with df > %d (worst df "
-                "%d) through a broadcast join: over the %d-row literal bound",
-                n, max_df, worst, LITERAL_DF_MAX_ROWS)
-            return sh.join(F.broadcast(hot.select("shingle")),
-                           "shingle", "left_anti")
-        if rows:
-            _LOG.warning(
-                "cap_shingle_df: dropping %d shingles with df > %d (worst df %d)",
-                len(rows), max_df, rows[0]["df"])
-        else:
-            _LOG.info("cap_shingle_df: cap %d did not bind", max_df)
-        # typed as the shingle column (a 64-bit hash family or a string)
-        hot_lit = literal_df(
-            sh.sparkSession, [(r["shingle"],) for r in rows],
-            T.StructType([sh.schema["shingle"]]))
-        return sh.join(F.broadcast(hot_lit), "shingle", "left_anti")
-    return sh.join(F.broadcast(hot.select("shingle")), "shingle", "left_anti")
+    hot = (sh.groupBy("shingle").agg(F.count("*").alias("df"))
+           .filter(F.col("df") > max_df))
+    # ordered, so the bound is one top-k job: a bare limit() collect runs
+    # incremental take jobs over growing partition subsets
+    rows = bounded_collect(hot.orderBy(F.desc("df")), LITERAL_DF_MAX_ROWS)
+    if rows is None:
+        n, worst = hot.agg(F.count("*"), F.max("df")).first()
+        _LOG.warning(
+            "cap_shingle_df: dropping %d shingles with df > %d (worst df "
+            "%d) through a broadcast join: over the %d-row literal bound",
+            n, max_df, worst, LITERAL_DF_MAX_ROWS)
+        return sh.join(F.broadcast(hot.select("shingle")),
+                       "shingle", "left_anti")
+    if rows:
+        _LOG.warning(
+            "cap_shingle_df: dropping %d shingles with df > %d (worst df %d)",
+            len(rows), max_df, rows[0]["df"])
+    else:
+        _LOG.info("cap_shingle_df: cap %d did not bind", max_df)
+    # typed as the shingle column (a 64-bit hash family or a string)
+    hot_lit = literal_df(
+        sh.sparkSession, [(r["shingle"],) for r in rows],
+        T.StructType([sh.schema["shingle"]]))
+    return sh.join(F.broadcast(hot_lit), "shingle", "left_anti")
 
 
 def duplicate_rate(df: DataFrame, content_col: str, cells: int = 4,
@@ -254,16 +249,16 @@ def minhash_signatures(shingles: DataFrame, num_hashes: int = 64,
     integer ops each (JVM codegen, products < 2^62 so ANSI-safe), not k string
     hashes. One groupBy with k parallel MIN aggregates — map-side combinable.
     ``hash_fn``: "xxhash64" (production default) or "md5_60" (bit-identical
-    in DuckDB — the oracle-checkable family, see _token_hash).
+    in DuckDB — the oracle-checkable family, see functions/text.hash64).
     ``pre_hashed=True`` takes a frame whose ``shingle`` column already holds
-    ``_token_hash(shingle, hash_fn)`` values (the verified-pair path shares
+    ``hash64(shingle, hash_fn)`` values (the verified-pair path shares
     one checkpointed hashed shingle index between banding and verification —
     ``pmod`` of the stored hash is bit-identical to hashing here)."""
     p = MINHASH_P
     params = minhash_params(num_hashes)
     base = shingles.select(
         "doc_id", F.pmod(F.col("shingle") if pre_hashed
-                         else _token_hash(F.col("shingle"), hash_fn),
+                         else hash64("shingle", hash_fn),
                          F.lit(p)).alias("_h"))
     aggs = [
         F.min(F.pmod(F.col("_h") * F.lit(a) + F.lit(b), F.lit(p))).alias(f"_m{i}")
@@ -338,7 +333,7 @@ def minhash_lsh_candidates(
         # shingle, i.e. >= shingle_k tokens (see token_shingles)
         dup = reps.filter(
             (F.col("_n") >= 2)
-            & (F.size(F.split(F.col(text_col), " ")) >= shingle_k)) \
+            & (F.size(tokens(text_col)) >= shingle_k)) \
             .select(F.col(id_col).alias("_rep"))
         return expand_rep_pairs(rep_pairs, mem, dup, "da", "db")
     sh = token_shingles(df, id_col, text_col, k=shingle_k)
@@ -549,19 +544,6 @@ def simhash_neardup_pairs(
     ).select(F.col("a").alias("da"), F.col("b").alias("db"), "hamming")
 
 
-def _token_hash(col, hash_fn: str):
-    """Token-hash families for simhash. "xxhash64" is the production choice
-    (fastest, JVM-native). "md5_60" takes the top 60 bits of standard MD5 —
-    bit-identical between Spark (conv(substr(md5, 1, 15), 16, 10)) and
-    DuckDB (CAST('0x'||substr(md5, 1, 15) AS BIGINT)), which is what lets
-    the contract's simhash entry be value-checked against a SQL oracle."""
-    if hash_fn == "xxhash64":
-        return F.xxhash64(col)
-    if hash_fn == "md5_60":
-        return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    raise ValueError(f"unknown hash_fn {hash_fn!r}")
-
-
 def simhash_signatures(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     bits: int = 63, hash_fn: str = "xxhash64",
@@ -577,8 +559,8 @@ def simhash_signatures(
     row and can't partial-aggregate)."""
     tok = df.select(
         F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.col(text_col), " ")).alias("_t"),
-    ).select("doc_id", _token_hash(F.col("_t"), hash_fn).alias("h"))
+        F.explode(tokens(text_col)).alias("_t"),
+    ).select("doc_id", hash64("_t", hash_fn).alias("h"))
     sums = tok.groupBy("doc_id").agg(
         *[
             F.sum(
@@ -721,20 +703,12 @@ def _bloom_probe_array(content_col: str, m_bits: int, k: int,
     times), so probe cost is one full-text hash + k cheap hashes."""
     if hash_fn == "xxhash64":
         digest = F.xxhash64(F.col(content_col))
-        probes = [F.pmod(F.xxhash64(digest, F.lit(i)), F.lit(m_bits))
-                  for i in range(k)]
-    elif hash_fn == "md5_60":
-        digest = F.md5(F.col(content_col))
-        probes = [
-            F.pmod(
-                F.conv(F.substring(
-                    F.md5(F.concat(digest, F.lit(f"#{i}"))), 1, 15), 16, 10)
-                .cast("long"),
-                F.lit(m_bits))
-            for i in range(k)]
+        probes = [F.xxhash64(digest, F.lit(i)) for i in range(k)]
     else:
-        raise ValueError(f"unknown hash_fn: {hash_fn}")
-    return F.array(*probes)
+        digest = F.md5(F.col(content_col))
+        probes = [hash64(F.concat(digest, F.lit(f"#{i}")), hash_fn)
+                  for i in range(k)]
+    return F.array(*[F.pmod(p, F.lit(m_bits)) for p in probes])
 
 
 def bloom_index_positions(

@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.literals import bounded_collect, literal_df
+from ..functions.text import hash64, token_windows, tokens
 
 # parts-per-million rate resolution: rates are snapped to integers so the
 # gate compares integers (no float threshold can sit on a hash value)
@@ -40,15 +41,10 @@ MIX_DENOM = 1_000_000
 
 
 def _gate_hash(id_col: str, hash_fn: str) -> F.Column:
-    if hash_fn == "xxhash64":
-        return F.pmod(F.xxhash64(F.col(id_col)), F.lit(MIX_DENOM))
-    if hash_fn == "md5_60":
-        return F.pmod(
-            F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15),
-                   16, 10).cast("long"),
-            F.lit(MIX_DENOM),
-        )
-    raise ValueError(f"unknown hash_fn: {hash_fn}")
+    # xxhash64 hashes the raw id; md5_60 hashes its string form
+    key = F.col(id_col) if hash_fn == "xxhash64" \
+        else F.col(id_col).cast("string")
+    return F.pmod(hash64(key, hash_fn), F.lit(MIX_DENOM))
 
 
 def sample_mix(
@@ -81,7 +77,7 @@ def sample_mix(
     )
     with_copies = df.withColumn("_copies", copies).filter(F.col("_copies") > 0)
     # NB: the filter above also guards the Spark descending-sequence trap —
-    # F.sequence(0, -1) yields [0, -1], not [] (see textstats.shingles)
+    # F.sequence(0, -1) yields [0, -1], not [] (see text.token_windows)
     return (
         with_copies
         .withColumn("copy", F.explode(F.sequence(F.lit(0),
@@ -244,27 +240,12 @@ def hashed_ngram_buckets(
     Returns (id, bucket). Pure Column API: split/transform/explode + one
     hash, no Python. ``md5_60`` buckets are bit-identical in DuckDB (the
     driver-contract family); ``xxhash64`` is the production default."""
-    toks = F.split(F.col(text_col), " ")
-    d = df.select(F.col(id_col), toks.alias("_t"))
+    d = df.select(F.col(id_col), tokens(text_col).alias("_t"))
     t = F.col("_t")
-    # sequence(1, 0) is DESCENDING in Spark — short docs must short-circuit
-    bi_idx = F.when(F.size(t) >= 2, F.sequence(F.lit(1), F.size(t) - 1)) \
-              .otherwise(F.array().cast("array<int>"))
-    bigrams = F.transform(
-        bi_idx,
-        lambda i: F.concat_ws(" ", F.element_at(t, i), F.element_at(t, i + 1)))
-    ng = F.explode(F.concat(t, bigrams)).alias("_ng")
-    exploded = d.select(id_col, ng)
-    if hash_fn == "xxhash64":
-        bucket = F.pmod(F.xxhash64(F.col("_ng")), F.lit(n_buckets))
-    elif hash_fn == "md5_60":
-        bucket = F.pmod(
-            F.conv(F.substring(F.md5(F.col("_ng")), 1, 15), 16, 10)
-            .cast("long"),
-            F.lit(n_buckets))
-    else:
-        raise ValueError(f"unknown hash_fn: {hash_fn}")
-    return exploded.select(id_col, bucket.alias("bucket"))
+    bigrams = token_windows(t, 2, lambda w, _: F.concat_ws(" ", w))
+    bucket = F.pmod(hash64("_ng", hash_fn), F.lit(n_buckets))
+    return (d.select(id_col, F.explode(F.concat(t, bigrams)).alias("_ng"))
+            .select(id_col, bucket.alias("bucket")))
 
 
 def fit_dsir(

@@ -17,12 +17,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.literals import literal_array
+from ..functions.text import token_windows, tokens
 
 EN_STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "on", "for", "that"]
-
-
-def _tokens(col: str):
-    return F.split(F.col(col), " ")
 
 
 def lang_id(df: DataFrame, text_col: str = "text",
@@ -30,7 +27,7 @@ def lang_id(df: DataFrame, text_col: str = "text",
     """N-gram-free language-ID heuristic: english stopword ratio (token-exact).
     At web scale this is the cheap first-pass filter before any model-based
     LID; the `lang` column of the pages table is its batch output."""
-    toks = _tokens(text_col)
+    toks = tokens(text_col)
     stop_arr = literal_array(EN_STOPWORDS, "string")
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop_arr, t)))
     return df.select(
@@ -46,7 +43,7 @@ def quality_scores(df: DataFrame, text_col: str = "text",
                    id_cols: tuple[str, ...] = ("doc_id",)) -> DataFrame:
     """Length / punctuation / mean-token-length stats as exact ints — the
     standard pre-training quality gates (length floors, symbol ratios)."""
-    toks = _tokens(text_col)
+    toks = tokens(text_col)
     total_len = F.aggregate(F.transform(toks, F.length),
                             F.lit(0), lambda acc, x: acc + x)
     return df.select(
@@ -85,7 +82,7 @@ def gopher_filter(
     mean_word_len, symbol_ratio, alpha_words, stopwords) so downstream
     curation can report WHY documents fall out. Pure Column API, one
     codegen'd projection — no shuffle, no Python."""
-    toks = _tokens(text_col)
+    toks = tokens(text_col)
     n = F.size(toks)
     total_len = F.aggregate(F.transform(toks, F.length),
                             F.lit(0), lambda acc, x: acc + x)
@@ -152,19 +149,6 @@ GOPHER_REPETITION_THRESHOLDS: dict[str, int] = {
 _REP_NGRAM_NS = tuple(range(2, 11))
 
 
-def _word_ngrams(toks, n: int):
-    """n-token grams joined by ' ' over a MATERIALIZED token-array column
-    (same no-CSE + descending-sequence guards as `shingles`)."""
-    idx = F.when(
-        F.size(toks) >= n, F.sequence(F.lit(1), F.size(toks) - (n - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    return F.transform(
-        idx,
-        lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j)
-                                     for j in range(n)]),
-    )
-
-
 def gopher_repetition(
     df: DataFrame, text_col: str = "text",
     id_cols: tuple[str, ...] = ("doc_id",),
@@ -217,19 +201,13 @@ def gopher_repetition(
     src = df.select(
         *id_cols,
         F.length(text_col).alias("_n_chars"),
-        _tokens(text_col).alias("_toks"),
+        tokens(text_col).alias("_toks"),
         F.split(F.col(text_col), _re.escape(line_sep)).alias("_lines"),
         F.split(F.col(text_col), _re.escape(para_sep)).alias("_paras"),
     )
-    toks = F.col("_toks")
 
-    def _tag(arr, kind: str):
-        # NB: close over `kind` — a two-parameter lambda would make
-        # F.transform pass the ELEMENT INDEX as the second argument
-        return F.transform(
-            arr, lambda x: F.struct(F.lit(kind).alias("kind"),
-                                    x.alias("key")))
-
+    # the item stream is shared; only the key and length of a unit (line,
+    # paragraph) and of an n-gram window depend on ``hash_keys``
     if hash_keys:
         # hash-chain keys (production default): per-token xxhash64 + length
         # are computed ONCE, then each n-gram key folds its window's token
@@ -239,68 +217,54 @@ def gopher_repetition(
         # of gram text. Grouping-equivalent to the raw-text path because
         # tokens are whitespace-free, so string-equal grams <=> token-tuple-
         # equal windows <=> hash-chain-equal keys (collisions aside, same
-        # 64-bit exposure as the previous xxhash64-of-text key; equivalence
+        # 64-bit exposure as an xxhash64-of-text key; equivalence
         # law-tested against hash_keys=False). False groups on the raw
         # text, which is how the DuckDB contract oracle pairs this operator
         # byte-for-byte.
-        tok_h = F.transform(toks, lambda x: F.xxhash64(x))
-        tok_l = F.transform(toks, lambda x: F.length(x))
-        hsrc = src.select(
+        src = src.select(
             *id_cols, "_n_chars", "_lines", "_paras",
-            tok_h.alias("_th"), tok_l.alias("_tl"))
+            F.transform("_toks", lambda x: F.xxhash64(x)).alias("_w"),
+            F.transform("_toks", F.length).alias("_wl"))
 
-        def _tag_text_h(arr, kind: str):
-            return F.transform(
-                arr, lambda x: F.struct(
-                    F.lit(kind).alias("kind"),
-                    F.xxhash64(x).alias("h"),
-                    F.length(x).alias("l")))
+        def unit_key(x):
+            return F.xxhash64(x), F.length(x)
 
-        def _gram_h(n: int):
-            ths, tls = F.col("_th"), F.col("_tl")
-            idx = F.when(
-                F.size(ths) >= n, F.sequence(F.lit(1), F.size(ths) - (n - 1))
-            ).otherwise(F.array().cast("array<int>"))
-            return F.transform(
-                idx,
-                lambda i: F.struct(
-                    F.lit(f"g{n}").alias("kind"),
-                    F.aggregate(
-                        F.sequence(i, i + F.lit(n - 1)),
-                        F.lit(n).cast("long"),
-                        lambda acc, j: F.xxhash64(acc, F.element_at(ths, j)),
-                    ).alias("h"),
-                    F.aggregate(
-                        F.sequence(i, i + F.lit(n - 1)),
-                        F.lit(n - 1),
-                        lambda acc, j: acc + F.element_at(tls, j),
-                    ).alias("l")))
-
-        items_h = F.concat(
-            _tag_text_h(F.col("_lines"), "L"),
-            _tag_text_h(F.col("_paras"), "P"),
-            *[_gram_h(n) for n in _REP_NGRAM_NS],
-        )
-        ex = hsrc.select(
-            *id_cols, "_n_chars", F.explode(items_h).alias("it")
-        ).select(
-            *id_cols, "_n_chars",
-            F.col("it.kind").alias("_kind"), F.col("it.h").alias("_k"),
-            F.col("it.l").alias("_len"),
-        )
+        def gram_key(w, i, n: int):
+            return (
+                F.aggregate(w, F.lit(n).cast("long"),
+                            lambda acc, h: F.xxhash64(acc, h)),
+                F.aggregate(F.slice("_wl", i, n), F.lit(n - 1),
+                            lambda acc, x: acc + x))
     else:
-        items = F.concat(
-            _tag(F.col("_lines"), "L"),
-            _tag(F.col("_paras"), "P"),
-            *[_tag(_word_ngrams(toks, n), f"g{n}") for n in _REP_NGRAM_NS],
-        )
-        ex = src.select(
-            *id_cols, "_n_chars", F.explode(items).alias("it")
-        ).select(
-            *id_cols, "_n_chars",
-            F.col("it.kind").alias("_kind"), F.col("it.key").alias("_k"),
-            F.length("it.key").alias("_len"),
-        )
+        src = src.withColumnRenamed("_toks", "_w")
+
+        def unit_key(x):
+            return x, F.length(x)
+
+        def gram_key(w, i, n: int):
+            gram = F.concat_ws(" ", w)
+            return gram, F.length(gram)
+
+    def _item(kind: str, key, length):
+        return F.struct(F.lit(kind).alias("kind"), key.alias("k"),
+                        length.alias("l"))
+
+    def _units(col: str, kind: str):
+        return F.transform(col, lambda x: _item(kind, *unit_key(x)))
+
+    def _grams(n: int):
+        return token_windows(F.col("_w"), n,
+                             lambda w, i: _item(f"g{n}", *gram_key(w, i, n)))
+
+    items = F.concat(_units("_lines", "L"), _units("_paras", "P"),
+                     *[_grams(n) for n in _REP_NGRAM_NS])
+    ex = src.select(
+        *id_cols, "_n_chars", F.explode(items).alias("it")
+    ).select(
+        *id_cols, "_n_chars",
+        F.col("it.kind").alias("_kind"), F.col("it.k").alias("_k"),
+        F.col("it.l").alias("_len"),
+    )
     c1 = ex.groupBy(*id_cols, "_kind", "_k").agg(
         F.count("*").alias("_cnt"), F.min("_len").alias("_len"),
         F.min("_n_chars").alias("_n_chars"))
@@ -372,7 +336,7 @@ def token_counts(df: DataFrame, text_col: str = "text",
     symbol) — the cost estimator for LLM-bound corpora."""
     return df.select(
         *id_cols,
-        F.size(_tokens(text_col)).alias("ws_tokens"),
+        F.size(tokens(text_col)).alias("ws_tokens"),
         F.regexp_count(text_col, F.lit(r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"))
         .alias("bpe_ish_tokens"),
     )
@@ -384,34 +348,18 @@ def fingerprints(df: DataFrame, text_col: str = "text",
     token bag (a rolling-hash analog that is exactly reproducible in SQL)."""
     return df.select(
         *id_cols,
-        F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(_tokens(text_col)))))
+        F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(tokens(text_col)))))
         .alias("fingerprint"),
     )
 
 
 def shingles(df: DataFrame, k: int = 3, text_col: str = "text",
              id_col: str = "doc_id") -> DataFrame:
-    """Distinct k-token shingles per doc (the n-gram Jaccard / MinHash input).
-    Native sequence+transform — no UDF, no Python.
-
-    The token array is MATERIALIZED as a projected column before the
-    higher-order transform: lambda bodies don't get common-subexpression
-    elimination, so referencing the raw split() expression k times inside
-    the lambda re-splits the text ~k*|tokens| times per row (measured 3-4x
-    of this operator's wall at sf0.1)."""
-    src = df.select(id_col, _tokens(text_col).alias("_toks"))
-    toks = F.col("_toks")
-    # guard: sequence(1, 0) is DESCENDING [1, 0] in Spark, so a doc with
-    # fewer than k tokens must short-circuit to an empty index list (the
-    # old greatest(..., 0) floor produced [1, 0] and an out-of-bounds
-    # element_at under ANSI for every sub-k-token document)
-    idx = F.when(
-        F.size(toks) >= k, F.sequence(F.lit(1), F.size(toks) - (k - 1))
-    ).otherwise(F.array().cast("array<int>"))
-    sh = F.transform(
-        idx,
-        lambda i: F.concat_ws("_", *[F.element_at(toks, i + j) for j in range(k)]),
-    )
+    """Distinct k-token shingles per doc (the n-gram Jaccard / MinHash input):
+    each k-token window joined by "_". Native transform — no UDF, no
+    Python; the token array is a projected column (see token_windows)."""
+    src = df.select(id_col, tokens(text_col).alias("_toks"))
+    sh = token_windows(F.col("_toks"), k, lambda w, _: F.concat_ws("_", w))
     return src.select(id_col, F.explode(F.array_distinct(sh)).alias("shingle"))
 
 
@@ -437,7 +385,7 @@ def fit_lm_unigram(
     # lazy version re-ran the corpus explode+agg when the vocab frame was
     # broadcast by the scorer)
     cnt = df if pre_counted else (
-        df.select(F.explode(_tokens(text_col)).alias("tok"))
+        df.select(F.explode(tokens(text_col)).alias("tok"))
         .groupBy("tok").agg(F.count("*").alias("cnt"))
         .localCheckpoint(eager=False))
     total = cnt.agg(F.sum("cnt")).collect()[0][0]
@@ -496,7 +444,7 @@ def lm_unigram_score(
     LM is trained once on a reference corpus, e.g. Wikipedia, then applied
     to every crawl snapshot), and it turns scoring into a single-pass
     scan -> broadcast-join -> agg with no fit jobs at all."""
-    tok = df.select(F.col(id_col), F.explode(_tokens(text_col)).alias("tok"))
+    tok = df.select(F.col(id_col), F.explode(tokens(text_col)).alias("tok"))
     dcnt = tok.groupBy(id_col, "tok").agg(F.count("*").alias("c"))
     if model is not None:
         vocab, oov_cost = model
@@ -556,6 +504,12 @@ import math as _math
 BACKOFF_X1E6 = -_math.floor(1e6 * _math.log(0.4))
 
 
+def _bigram_pairs(toks):
+    """(w1, w2) structs of every adjacent token pair of ``toks``."""
+    return token_windows(
+        toks, 2, lambda w, _: F.struct(w[0].alias("w1"), w[1].alias("w2")))
+
+
 def fit_lm_bigram(
     df: DataFrame,
     text_col: str = "text",
@@ -572,7 +526,7 @@ def fit_lm_bigram(
     parameter-sized, not corpus-sized), so scoring joins broadcast. The
     corpus-sized work is two map-side-combinable aggregations (unigram and
     bigram counts); everything after the two ``ln`` calls is bigint."""
-    toks = df.select(_tokens(text_col).alias("_t"))
+    toks = df.select(tokens(text_col).alias("_t"))
     t = F.col("_t")
     # the unigram count table feeds BOTH the vocab fit and the bigram
     # denominator join below — checkpoint it (vocabulary-sized, bounded)
@@ -584,13 +538,8 @@ def fit_lm_bigram(
     vocab, oov_cost = fit_lm_unigram(uni, vocab_size=vocab_size,
                                      pre_counted=True)
 
-    bi_idx = F.when(F.size(t) >= 2, F.sequence(F.lit(1), F.size(t) - 1)) \
-              .otherwise(F.array().cast("array<int>"))
-    pairs = toks.select(F.explode(F.transform(
-        bi_idx,
-        lambda i: F.struct(F.element_at(t, i).alias("w1"),
-                           F.element_at(t, i + 1).alias("w2"))))
-        .alias("p")).select("p.w1", "p.w2")
+    pairs = toks.select(F.explode(_bigram_pairs(t)).alias("p")) \
+        .select("p.w1", "p.w2")
     c12 = pairs.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     bigram = (
         c12.orderBy(F.desc("c12"), "w1", "w2").limit(bigram_size)
@@ -622,18 +571,11 @@ def lm_bigram_score(
     one doc-keyed aggregation. Nothing corpus-sized shuffles except
     (doc, partial-sum) pairs."""
     bigram, vocab, oov_cost = model
-    src = df.select(F.col(id_col), _tokens(text_col).alias("_t"))
+    src = df.select(F.col(id_col), tokens(text_col).alias("_t"))
     t = F.col("_t")
 
-    bi_idx = F.when(F.size(t) >= 2, F.sequence(F.lit(1), F.size(t) - 1)) \
-              .otherwise(F.array().cast("array<int>"))
-    pairs = src.select(
-        id_col,
-        F.explode(F.transform(
-            bi_idx,
-            lambda i: F.struct(F.element_at(t, i).alias("w1"),
-                               F.element_at(t, i + 1).alias("w2"))))
-        .alias("p")).select(id_col, "p.w1", "p.w2")
+    pairs = src.select(id_col, F.explode(_bigram_pairs(t)).alias("p")) \
+        .select(id_col, "p.w1", "p.w2")
     pcnt = pairs.groupBy(id_col, "w1", "w2").agg(F.count("*").alias("c"))
     uni2 = vocab.select(F.col("tok").alias("w2"),
                         F.col("tok_cost").alias("w2_cost"))
@@ -782,10 +724,10 @@ def suggest_gopher_thresholds(
     versioned next to the corpus so the curation run is reproducible."""
     m = df.select(
         *id_cols,
-        F.size(_tokens(text_col)).alias("n_words"),
-        (F.aggregate(_tokens(text_col), F.lit(0),
+        F.size(tokens(text_col)).alias("n_words"),
+        (F.aggregate(tokens(text_col), F.lit(0),
                      lambda a, x: a + F.length(x)) * 100
-         / F.greatest(F.size(_tokens(text_col)), F.lit(1)))
+         / F.greatest(F.size(tokens(text_col)), F.lit(1)))
         .cast("long").alias("mean_word_len_x100"),
     )
     q = {(r["metric"], r["q_x100"]): r["value"]

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.text import tokens
+
 # end-of-word sentinel (classic BPE): guarantees merges never cross word
 # boundaries and segmentation is reversible
 EOW = "\x17"  # ETB control char — cannot appear in space-split words
@@ -39,7 +41,7 @@ EOW = "\x17"  # ETB control char — cannot appear in space-split words
 def word_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Distributed whitespace-word frequency table — the only corpus-sized
     job in BPE fitting."""
-    return (df.select(F.explode(F.split(F.col(text_col), " ")).alias("word"))
+    return (df.select(F.explode(tokens(text_col)).alias("word"))
             .filter(F.col("word") != "")
             .groupBy("word").agg(F.count("*").alias("cnt")))
 

@@ -358,6 +358,9 @@ def update_graph_incremental(
         included = set(prev["segments"]) if prev else set()
         new_segs = sorted(extracted - included)
         if not new_segs:
+            # a no-op rerun still serves the latest version: keep its counts
+            last = _committed_versions(manifest)[-1]
+            ready.update(nodes=last["nodes"], edges=last["edges"])
             return prev
 
         delta = spark.read.schema(TRIPLES_SCHEMA).parquet(

@@ -38,7 +38,9 @@ from pyspark.sql import types as T
 
 from ..functions.embedding_core import TRIPLE_DIM, embed_text
 from ..functions.literals import bounded_collect, literal_array, literal_df
+from ..functions.text import token_windows, tokens
 from ..functions.vector import cosine_col
+from ..io.catalog import write_counted
 from ..operators.linking import ROUNDS_PER_SEAL, undirected_edges
 
 
@@ -217,13 +219,23 @@ class EdgeAnnIndex:
     recall vs the exact scan is asserted through query_graph itself in
     tests/test_query_plan.py."""
 
-    def __init__(self, index_df: DataFrame, n_rows: int, n_planes: int,
-                 n_tables: int, seed: int):
+    def __init__(self, index_df: DataFrame, n_rows: int | None,
+                 n_planes: int, n_tables: int, seed: int):
         self.index_df = index_df  # (edge_id, tb_key)
-        self.n_rows = n_rows
+        self._n_rows = n_rows
         self.n_planes = n_planes
         self.n_tables = n_tables
         self.seed = seed
+
+    @property
+    def n_rows(self) -> int:
+        """Indexed edges. ``save`` observes them on the index write and
+        ``load`` reads them back; an index queried unsaved counts them
+        once, on first read (query_graph's exact-vs-index planner check).
+        ``lsh_bucket_keys`` emits exactly ``n_tables`` rows per edge."""
+        if self._n_rows is None:
+            self._n_rows = self.index_df.count() // self.n_tables
+        return self._n_rows
 
     @classmethod
     def build(cls, edges_embedded: DataFrame, n_planes: int = 4,
@@ -237,13 +249,13 @@ class EdgeAnnIndex:
             (F.shiftleft(F.col("table_id").cast("long"), _TB_SHIFT)
              + F.col("bucket")).alias("tb_key"),
         )
-        n_rows = edges_embedded.count()  # one job, amortized over the version
-        return cls(idx, n_rows, n_planes, n_tables, seed)
+        return cls(idx, None, n_planes, n_tables, seed)
 
     def save(self, path: str) -> None:
         """Materialize so queries probe parquet (pushed IN filter) instead of
-        recomputing the bucketer; metadata rides in a sidecar row."""
-        self.index_df.write.mode("overwrite").parquet(path)
+        recomputing the bucketer; metadata rides in a sidecar row, its
+        ``n_rows`` observed on the index write itself."""
+        self._n_rows = write_counted(self.index_df, path) // self.n_tables
         meta = literal_df(
             self.index_df.sparkSession,
             [(self.n_rows, self.n_planes, self.n_tables, self.seed)],
@@ -314,9 +326,8 @@ class EdgeAnnIndex:
         rebuild for those (pipeline.refresh_ann_index(mode="rebuild"))."""
         new = self.build(new_edges_embedded, self.n_planes, self.n_tables,
                          self.seed)
-        return EdgeAnnIndex(self.index_df.unionByName(new.index_df),
-                            self.n_rows + new.n_rows, self.n_planes,
-                            self.n_tables, self.seed)
+        return EdgeAnnIndex(self.index_df.unionByName(new.index_df), None,
+                            self.n_planes, self.n_tables, self.seed)
 
 
 def similarity_search_indexed(
@@ -354,7 +365,7 @@ def relevance_filter(
     q_tokens = literal_array(sorted(set(
         question.lower().replace(",", " ").replace("?", " ").split())),
         "string")
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = tokens(F.lower(F.col(text_col)))
     overlap = F.size(F.array_intersect(F.array_distinct(toks), q_tokens))
     return (
         edges_verbalized.withColumn("relevance", overlap)
@@ -553,15 +564,13 @@ def best_snippet(
         lambda t: F.when(F.array_contains(term_arr, t), F.lit(1))
         .otherwise(F.lit(0)))
     w = F.least(F.lit(window), F.size("_toks"))
-    starts = F.sequence(F.lit(1), F.size("_toks") - w + 1)
     # per-window score, argmax by (hits, -start): array_max on structs is
     # lexicographic, so max hits wins and among ties the SMALLEST start
     # (largest negated start) wins
-    best = F.array_max(F.transform(
-        starts,
-        lambda i: F.struct(
-            F.aggregate(F.slice(F.col("_hits"), i, w), F.lit(0),
-                        lambda acc, x: acc + x).alias("h"),
+    best = F.array_max(token_windows(
+        F.col("_hits"), w,
+        lambda win, i: F.struct(
+            F.aggregate(win, F.lit(0), lambda acc, x: acc + x).alias("h"),
             (-i).alias("negstart"),
         )))
     return (
@@ -640,7 +649,7 @@ def match_candidates(
     containing the term as a whitespace token. One codegen'd OR predicate,
     no join, no shuffle (the distinct is over the small hit set)."""
     lname = F.lower(F.col(name_col))
-    toks = F.split(lname, " ")
+    toks = tokens(lname)
     pred = None
     for t in terms:
         p = ((lname == t)

@@ -288,3 +288,93 @@ def test_rows_leave_plans_only_through_bounded_collect():
     assert unlisted == [], unlisted
     # every allowlisted function still holds a collect
     assert listed == set(COLLECT_ALLOWED), set(COLLECT_ALLOWED) - listed
+
+
+# --------------------------------------------------------------------------- #
+# the token layer: one tokenizer, one window builder, one 64-bit key family,
+# all in functions/text.py
+# --------------------------------------------------------------------------- #
+
+def test_token_windows_guard_short_null_and_empty_docs(spark):
+    from knowledge_graph_studio_spark.functions.text import (
+        token_windows, tokens,
+    )
+
+    k = 3
+    df = spark.createDataFrame(
+        [(0, None), (1, ""), (2, "a b"), (3, "a b c"), (4, "a b c d")],
+        "id int, text string")
+    got = {r["id"]: r["w"] for r in df.select(
+        "id", token_windows(tokens("text"), k,
+                            lambda w, i: F.struct(i.alias("i"),
+                                                  w.alias("w"))).alias("w"))
+        .collect()}
+    assert got[0] == [] and got[1] == [] and got[2] == []
+    assert [tuple(x) for x in got[3]] == [(1, ["a", "b", "c"])]
+    assert [tuple(x) for x in got[4]] == [(1, ["a", "b", "c"]),
+                                          (2, ["b", "c", "d"])]
+
+
+def _is_f_call(node, name):
+    return isinstance(node, ast.Call) and _is_f(node.func, name)
+
+
+def _size_rooted(expr):
+    """``F.size(..)`` possibly followed by arithmetic (``F.size(t) - 1``)."""
+    while isinstance(expr, ast.BinOp):
+        expr = expr.left
+    return _is_f_call(expr, "size")
+
+
+class _TokenScan(_CollectScan):
+    def visit_Call(self, node):
+        f, args = node.func, node.args
+        where = ".".join(self.scope) or "<module>"
+        if (_is_f(f, "sequence") and len(args) == 2
+                and _is_f_call(args[0], "lit") and args[0].args
+                and isinstance(args[0].args[0], ast.Constant)
+                and args[0].args[0].value == 1 and _size_rooted(args[1])):
+            self.hits.append((where, "F.sequence(F.lit(1), F.size("))
+        elif (_is_f(f, "split") and len(args) == 2
+              and isinstance(args[1], ast.Constant) and args[1].value == " "):
+            self.hits.append((where, 'F.split(<col>, " ")'))
+        elif (_is_f(f, "conv") and args and _is_f_call(args[0], "substring")
+              and args[0].args and _is_f_call(args[0].args[0], "md5")):
+            self.hits.append((where, "F.conv(F.substring(F.md5("))
+        self.generic_visit(node)
+
+
+def _token_layer_copies(source):
+    scan = _TokenScan()
+    scan.visit(ast.parse(source))
+    return scan.hits
+
+
+def test_source_scan_detects_each_hand_rolled_token_step():
+    src = '''
+def site(t, k):
+    a = F.when(F.size(t) >= k, F.sequence(F.lit(1), F.size(t) - (k - 1)))
+    b = F.split(F.lower(F.col("text")), " ")
+    c = F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
+    d = F.split(F.col("text"), "\\n")
+    e = F.sequence(F.lit(0), F.size(t))
+'''
+    assert _token_layer_copies(src) == [
+        ("site", "F.sequence(F.lit(1), F.size("),
+        ("site", 'F.split(<col>, " ")'),
+        ("site", "F.conv(F.substring(F.md5("),
+    ]
+
+
+def test_token_layer_lives_in_functions_text_alone():
+    found = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel.startswith(("operators/", "plans/")) or rel == "pipeline.py":
+            found += [(rel, *hit)
+                      for hit in _token_layer_copies(path.read_text())]
+    assert found == [], found
+    kinds = {kind for _, kind in _token_layer_copies(
+        (PKG / "functions" / "text.py").read_text())}
+    assert kinds == {"F.sequence(F.lit(1), F.size(", 'F.split(<col>, " ")',
+                     "F.conv(F.substring(F.md5("}

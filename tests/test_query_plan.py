@@ -265,6 +265,23 @@ def test_query_graph_ann_planner_and_recall(spark, graph):
     emb.unpersist()
 
 
+def test_ann_index_build_runs_no_job_and_save_counts(spark, graph,
+                                                     tmp_path):
+    """build only plans the bucketer; save observes n_rows on the index
+    write, and load reads the same count back."""
+    from knowledge_graph_studio_spark.functions.embeddings import embed_edges
+    from knowledge_graph_studio_spark.plans.query import EdgeAnnIndex
+
+    built = []
+    assert _jobs_of(spark, lambda: built.append(
+        EdgeAnnIndex.build(embed_edges(graph["edges"])))) == 0
+    n_edges = graph["edges"].count()
+    path = str(tmp_path / "idx")
+    built[0].save(path)
+    assert built[0].n_rows == n_edges
+    assert EdgeAnnIndex.load(spark, path).n_rows == n_edges
+
+
 def test_ann_index_save_load_and_pushdown(spark, graph, tmp_path):
     """The persisted index is probed via a pushed-down IN filter on tb_key,
     and indexed search exact-scores ONLY candidate rows: the edges scan

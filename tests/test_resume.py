@@ -152,3 +152,26 @@ def test_incremental_update_without_segments_fails(spark, tmp_path):
     st = GraphStatus(wd).get("default")
     assert st["status"] == "failed"
     assert any(pages_path in e for e in st["errors"])
+
+
+def test_noop_incremental_rerun_keeps_status_counts(spark, tmp_path):
+    """A rerun with no new segment still serves the latest version, so
+    the ready status keeps that version's node and edge counts."""
+    from pyspark.sql import functions as F
+
+    from knowledge_graph_studio_spark.io.catalog import GraphStatus
+    from knowledge_graph_studio_spark.pipeline import update_graph_incremental
+
+    pp = str(tmp_path / "pages")
+    synthetic_pages(spark, 60, seed=3, partitions=2) \
+        .withColumn("segment", F.lit(0)) \
+        .write.partitionBy("segment").parquet(pp)
+    wd = str(tmp_path / "wd")
+    update_graph_incremental(spark, pp, wd)
+    first = GraphStatus(wd).get("default")
+    assert first["nodes"] > 0 and first["edges"] > 0
+    update_graph_incremental(spark, pp, wd)
+    again = GraphStatus(wd).get("default")
+    assert again["status"] == "ready"
+    assert (again["nodes"], again["edges"]) == (first["nodes"],
+                                                first["edges"])
